@@ -162,14 +162,36 @@ object Tables {
     * placed on the RAM root while that filesystem still has this many
     * usable bytes; below the line, new dirs silently land on the
     * disk-backed default tmpdir instead (warned once). Overridable via
-    * SPARK_GRAFT_SCRATCH_MIN_FREE_BYTES. */
+    * SPARK_GRAFT_SCRATCH_MIN_FREE_BYTES; an override that is not a
+    * positive byte count would switch the guard off, so it is refused
+    * with a warning and the default stands. */
+  private[graft] val DefaultMinScratchFreeBytes: Long = 4L << 30
+  private[graft] def minFreeBytesOf(raw: Option[String]): Long =
+    raw.fold(DefaultMinScratchFreeBytes) { s =>
+      scala.util.Try(s.trim.toLong).toOption.filter(_ > 0).getOrElse {
+        System.err.println(s"[graft] SPARK_GRAFT_SCRATCH_MIN_FREE_BYTES=$s " +
+          "is not a positive byte count — using the default " +
+          s"$DefaultMinScratchFreeBytes")
+        DefaultMinScratchFreeBytes
+      }
+    }
   private[graft] val MinScratchFreeBytes: Long =
-    sys.env.get("SPARK_GRAFT_SCRATCH_MIN_FREE_BYTES")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(4L << 30)
+    minFreeBytesOf(sys.env.get("SPARK_GRAFT_SCRATCH_MIN_FREE_BYTES"))
+
+  /** Usable bytes on `p`'s file store. When the store cannot be read
+    * the guard fails OPEN (the root is treated as unbounded) — loudly,
+    * once per JVM, so an erroring tmpfs is never used silently. */
+  private[graft] val usableBytesWarned =
+    new java.util.concurrent.atomic.AtomicBoolean()
   private[graft] def usableBytes(p: java.nio.file.Path): Long =
     try java.nio.file.Files.getFileStore(p).getUsableSpace
-    catch { case _: Throwable => Long.MaxValue }
+    catch {
+      case e: Throwable =>
+        if (usableBytesWarned.compareAndSet(false, true))
+          System.err.println(s"[graft] cannot read the free space of $p " +
+            s"($e) — the scratch free-space guard treats it as unbounded")
+        Long.MaxValue
+    }
   private val budgetWarned = new java.util.concurrent.atomic.AtomicBoolean()
   private[graft] def guardedScratchRoot(
       root: Option[java.nio.file.Path]): Option[java.nio.file.Path] =

@@ -3,6 +3,7 @@ package graft.operators
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.Tables
 
 /** INCREMENTAL deduplication — the ingest-time shape of the dedup
@@ -97,7 +98,7 @@ object IncrementalDedup {
       classify(spark,
         Tables(spark, dir, "documents")
           .select(col("doc_id"), col("text"), col("source")), pin,
-        Some(spark.read.parquet(incIndexPath(spark, dir))))
+        Some(readIndex(spark, incIndexPath(spark, dir))))
     } finally pins.foreach { df =>
       try { df.unpersist(); () } catch { case _: Throwable => () }
     }
@@ -127,33 +128,42 @@ object IncrementalDedup {
   private val fullIndexMemo =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** One corpus pass → the index frame (doc_id, nh, m0..m3, hs).
-    * Signature slices and gram hashes come out of a SINGLE scan +
-    * generate + grouped aggregate (min and collect_set share the
-    * ObjectHashAggregate); docs under 3 tokens have no grams → null
-    * signature columns and null hs, exactly like the inline path where
-    * they simply emit no shingles. */
-  private[graft] def buildIndex(spark: SparkSession, base: DataFrame): DataFrame = {
-    val fanned = Tables.fanOut(spark, base)
-    val perShingle = Similarity.shinglesOf(spark, fanned).select(
-      Seq(col("doc_id")) ++
-        (0 to 3).map(i => substring(md5(col("s")), 1 + 8 * i, 8).as(s"h$i")) ++
-        Seq(xxhash64(col("s")).as("h")): _*)
-    val agg = perShingle.groupBy(col("doc_id")).agg(
-      min(col("h0")).as("m0"), min(col("h1")).as("m1"),
-      min(col("h2")).as("m2"), min(col("h3")).as("m3"),
-      collect_set(col("h")).as("hs"))
-    fanned.select(col("doc_id"),
-        md5(TextOps.normalized(col("text"))).as("nh"))
-      .join(agg, Seq("doc_id"), "left")
+  /** The index row shape (doc_id, nh, m0..m3, hs) that [[buildIndex]]
+    * writes, nullable as parquet reads it back. Every index read goes
+    * through [[readIndex]] with it: a schema-less `read.parquet`
+    * launches a one-task footer-inference job per read. */
+  private[graft] val IndexSchema: StructType = StructType(
+    Seq(StructField("doc_id", LongType), StructField("nh", StringType)) ++
+      graft.plans.DedupSignature.ResultType.fields.map(_.copy(nullable = true)))
+
+  private[graft] def readIndex(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(IndexSchema).parquet(paths: _*)
+
+  /** (doc_id, keep…, m0..m3, hs) per doc of a (doc_id, text) frame: one
+    * row-local [[graft.plans.DedupSignature]] call per document — the
+    * signature is a function of the doc's own text, so nothing is
+    * exploded, shuffled or regrouped. Docs under 3 tokens get null
+    * signature columns and null hs. */
+  private def signaturesOf(spark: SparkSession, docs: DataFrame,
+      keep: Column*): DataFrame = {
+    graft.plans.DedupSignature.register(spark)
+    docs.select(Seq(col("doc_id")) ++ keep ++
+        Seq(expr("dedup_signature(text)").as("sig")): _*)
+      .select("*", "sig.*").drop("sig")
   }
+
+  /** One corpus pass → the index frame (doc_id, nh, m0..m3, hs): a
+    * map-only projection of the fanned scan. */
+  private[graft] def buildIndex(spark: SparkSession, base: DataFrame): DataFrame =
+    signaturesOf(spark, Tables.fanOut(spark, base),
+      md5(TextOps.normalized(col("text"))).as("nh"))
 
   /** ONE signature pass over the whole corpus → the index, written
     * PARTITIONED by the incoming flag (r6 verdict #1: "reuse the
     * index-build's fanned scan"): the base and incoming halves are
     * partition DIRECTORIES of a single build, so the corpus is
-    * scanned, shingled and aggregated exactly once per (JVM, dir) no
-    * matter how many variants consume either half. */
+    * scanned and signed exactly once per (JVM, dir) no matter how many
+    * variants consume either half. */
   private[graft] def fullIndexPath(spark: SparkSession, dir: String): String =
     fullIndexMemo.computeIfAbsent(dir, { _ =>
       val f = Tables.scratchDir("graft_dedup_idx_")
@@ -182,13 +192,14 @@ object IncrementalDedup {
     s"${fullIndexPath(spark, dir)}/is_inc=true"
 
   /** Band rows (id, band, m) off an index frame's signature columns —
-    * docs with no grams (null signature) emit nothing, exactly like
-    * the text path where they produce no shingles. */
+    * docs with no grams (null signature) emit nothing. The guard sits
+    * inside the explode, not in a Filter: over a kernel projection a
+    * Filter on m0 is pushed below it with the kernel inlined, which
+    * would sign every doc twice. */
   private def bandsOf(idx: DataFrame, as: String): DataFrame =
-    idx.filter(col("m0").isNotNull)
-      .select(col("doc_id").as(as),
-        explode(array((0 to 3).map(i =>
-          struct(lit(i).as("band"), col(s"m$i").as("m"))): _*)).as("bm"))
+    idx.select(col("doc_id").as(as),
+        explode(when(col("m0").isNotNull, array((0 to 3).map(i =>
+          struct(lit(i).as("band"), col(s"m$i").as("m"))): _*))).as("bm"))
       .select(col(as), col("bm.band").as("band"), col("bm.m").as("m"))
 
   /** The classifier as PURE INDEX ALGEBRA: both sides' signature work
@@ -274,12 +285,27 @@ object IncrementalDedup {
       classifyIndexed(spark,
         Tables(spark, dir, "documents")
           .select(col("doc_id"), col("text"), col("source")),
-        spark.read.parquet(indexPath(spark, dir)), pin,
-        Some(spark.read.parquet(incIndexPath(spark, dir))))
+        readIndex(spark, indexPath(spark, dir)), pin,
+        Some(readIndex(spark, incIndexPath(spark, dir))))
     } finally pins.foreach { df =>
       try { df.unpersist(); () } catch { case _: Throwable => () }
     }
   }
+
+  /** The inline classifier's base band rows (base_id, band, m),
+    * derived from base TEXT by one kernel projection. */
+  private[graft] def baseBandsOf(spark: SparkSession,
+      fannedBase: DataFrame): DataFrame =
+    bandsOf(signaturesOf(spark, fannedBase), "base_id")
+
+  /** The inline classifier's base gram-hash sets (base_id, bhs) for the
+    * candidate ids only: the semi-join runs BEFORE the kernel, so only
+    * candidate docs are hashed. */
+  private[graft] def baseSetsOf(spark: SparkSession, fannedBase: DataFrame,
+      candIds: DataFrame): DataFrame =
+    signaturesOf(spark,
+        fannedBase.join(broadcast(candIds), Seq("doc_id"), "left_semi"))
+      .select(col("doc_id").as("base_id"), col("hs").as("bhs"))
 
   /** The INLINE classifier over an arbitrary (doc_id, text, source)
     * frame — base side derived from TEXT (bands + candidate gram sets
@@ -307,36 +333,20 @@ object IncrementalDedup {
       val exactIds = incNorm.join(broadcast(hitNh), Seq("nh"))
         .select(col("doc_id")).distinct()
 
-      // ---- near tier: ONE base-corpus signature pass, asymmetric band
-      // join against the broadcast incoming bands. The band frame is
-      // consumed once; `cand` is consumed TWICE (the base-set semi-join
-      // and the probe) so it alone is pinned — the r6-era pin+count of
-      // the set frame itself is gone (it streams past ONE broadcast
-      // now, never re-read, so eager materialization only added a full
-      // generator pass) ----
+      // ---- near tier: ONE base-corpus signature projection, asymmetric
+      // band join against the broadcast incoming bands. The band frame
+      // is consumed once; `cand` is consumed TWICE (the base-set
+      // semi-join and the probe) so it alone is pinned ----
       val fannedBase = Tables.fanOut(spark,
         docs.filter(!isIncoming).select(col("doc_id"), col("text")))
-      val baseBands =
-        Similarity.signaturesFrom(Similarity.shinglesOf(spark, fannedBase))
-          .select(col("doc_id").as("base_id"), explode(array((0 to 3).map(i =>
-            struct(lit(i).as("band"), col(s"m$i").as("m"))): _*)).as("bm"))
-          .select(col("base_id"), col("bm.band").as("band"),
-            col("bm.m").as("m"))
-      val cand = pin(baseBands
+      val cand = pin(baseBandsOf(spark, fannedBase)
         .join(broadcast(bandsOf(incIdx, "inc_id")), Seq("band", "m"))
         .select(col("inc_id"), col("base_id")).distinct())
-      // BASE-side candidate gram-hash sets from text (semi-join before
-      // the generator — same discipline as Similarity.neardupPairs);
-      // the incoming side's sets come off the shared index
-      val baseSets = Similarity.shinglesOf(spark,
-          fannedBase.join(broadcast(cand.select(col("base_id").as("doc_id"))
-            .distinct()), Seq("doc_id")))
-        .select(col("doc_id"), xxhash64(col("s")).as("h"))
-        .groupBy(col("doc_id")).agg(collect_set(col("h")).as("hs"))
+      val baseSets = baseSetsOf(spark, fannedBase,
+        cand.select(col("base_id").as("doc_id")).distinct())
       val probe = cand.join(
         incIdx.select(col("doc_id").as("inc_id"), col("hs")), Seq("inc_id"))
-      val nearIds = baseSets.select(col("doc_id").as("base_id"),
-          col("hs").as("bhs"))
+      val nearIds = baseSets
         .join(broadcast(probe), Seq("base_id"))
         .select(col("inc_id"),
           size(array_intersect(col("hs"), col("bhs")))
@@ -422,7 +432,7 @@ object IncrementalDedup {
       ttlSeconds = 300) {
       val docs = Tables(spark, dir, "documents")
         .select(col("doc_id"), col("source"))
-      val incIdx = spark.read.parquet(incIndexPath(spark, dir))
+      val incIdx = readIndex(spark, incIndexPath(spark, dir))
       // Day 1 vs base is the SAME classification as the single-stage
       // verdicts restricted to day-1 docs (identical corpus side —
       // the maintained spec pins the equivalence on a corpus where
@@ -435,7 +445,7 @@ object IncrementalDedup {
       val delta = grownDeltaPath(spark, dir)
       val v2 = classifyFromIndexes(spark,
         docs.filter(batchPred(Batch2Hex)),
-        b2Idx, spark.read.parquet(indexPath(spark, dir), delta))
+        b2Idx, readIndex(spark, indexPath(spark, dir), delta))
       perSourceStats(v1, 1).unionByName(perSourceStats(v2, 2))
         .orderBy("batch", "source")
     }
@@ -446,7 +456,7 @@ object IncrementalDedup {
   private[graft] def grownDeltaPath(spark: SparkSession, dir: String): String =
     grownDeltaMemo.computeIfAbsent(dir, { _ =>
       val f = Tables.scratchDir("graft_dedup_idx_delta_")
-      val incIdx = spark.read.parquet(incIndexPath(spark, dir))
+      val incIdx = readIndex(spark, incIndexPath(spark, dir))
       val v1 = verdicts(spark, dir).filter(batchPred(Batch1Hex))
       incIdx.filter(batchPred(Batch1Hex))
         .join(v1.filter(col("verdict") === "new").select("doc_id"),
@@ -470,7 +480,7 @@ object IncrementalDedup {
       dir: String): String =
     compactedIdxMemo.computeIfAbsent(dir, { _ =>
       val f = Tables.scratchDir("graft_dedup_idx_compacted_")
-      spark.read.parquet(indexPath(spark, dir), grownDeltaPath(spark, dir))
+      readIndex(spark, indexPath(spark, dir), grownDeltaPath(spark, dir))
         .repartitionByRange(2, col("doc_id"))
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(f.getAbsolutePath)
@@ -488,11 +498,11 @@ object IncrementalDedup {
       ttlSeconds = 300) {
       val docs = Tables(spark, dir, "documents")
         .select(col("doc_id"), col("source"))
-      val incIdx = spark.read.parquet(incIndexPath(spark, dir))
+      val incIdx = readIndex(spark, incIndexPath(spark, dir))
       val v2 = classifyFromIndexes(spark,
         docs.filter(batchPred(Batch2Hex)),
         incIdx.filter(batchPred(Batch2Hex)),
-        spark.read.parquet(compactedIndexPath(spark, dir)))
+        readIndex(spark, compactedIndexPath(spark, dir)))
       perSourceStats(v2, 2).orderBy("source")
     }
 
@@ -550,7 +560,7 @@ object IncrementalDedup {
           .select(col("doc_id"), col("text"), col("source")),
         IndexErasure.erasedView(spark, indexPath(spark, dir),
           IndexErasure.erased(col("doc_id"))), pin,
-        Some(spark.read.parquet(incIndexPath(spark, dir))))
+        Some(readIndex(spark, incIndexPath(spark, dir))))
     } finally pins.foreach { df =>
       try { df.unpersist(); () } catch { case _: Throwable => () }
     }

@@ -48,16 +48,20 @@ object Similarity {
       key: String = "doc_id"): DataFrame =
     Tables.fanOut(spark, docs, key)
 
-  /** 4-band (b=4, r=1) MinHash signatures per doc: the 4 minhashes are
-    * fixed 8-hex-char (32-bit) SLICES of ONE md5 per shingle — not 4
-    * salted digests — computed in a codegen'd PROJECTION (min(string)
-    * aggregates are ObjectHashAggregate: no cross-aggregate CSE, so
-    * digests embedded in the min() updates would re-hash per minhash).
-    * Operates on the RAW shingle stream: min is duplicate-invariant,
-    * so no distinct is needed ahead of it. Slices of one digest are
-    * independent uniform bits and lexicographic min over fixed-width
-    * lowercase hex ≡ numeric min — DuckDB rebuilds identical values
-    * with substr(md5(s)). */
+  /** 4-band (b=4, r=1) MinHash signatures per doc from an already
+    * generated shingle stream — the shape for this file's GramStore
+    * callers, whose grams are a shared materialized table. (A
+    * consumer that starts from TEXT signs each doc row-locally with
+    * [[graft.plans.DedupSignature]] instead: no generate, no regroup.)
+    * The 4 minhashes are fixed 8-hex-char (32-bit) SLICES of ONE md5
+    * per shingle — not 4 salted digests — computed in a codegen'd
+    * PROJECTION (min(string) aggregates are ObjectHashAggregate: no
+    * cross-aggregate CSE, so digests embedded in the min() updates
+    * would re-hash per minhash). Operates on the RAW shingle stream:
+    * min is duplicate-invariant, so no distinct is needed ahead of it.
+    * Slices of one digest are independent uniform bits and
+    * lexicographic min over fixed-width lowercase hex ≡ numeric min —
+    * DuckDB rebuilds identical values with substr(md5(s)). */
   private[graft] def signaturesFrom(sh: DataFrame): DataFrame = {
     val slices = (0 to 3).map(i =>
       substring(md5(col("s")), 1 + 8 * i, 8).as(s"h$i"))

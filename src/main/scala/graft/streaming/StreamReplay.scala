@@ -793,11 +793,11 @@ object StreamReplay {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         val bs = batch.sparkSession
-        val incIdxB = bs.read.parquet(incIdxPath)
+        val incIdxB = graft.operators.IncrementalDedup.readIndex(bs, incIdxPath)
           .join(batch.select("doc_id"), Seq("doc_id"), "left_semi")
         graft.operators.IncrementalDedup.classifyFromIndexes(bs,
             batch.select(col("doc_id"), col("source")), incIdxB,
-            bs.read.parquet(idxPath))
+            graft.operators.IncrementalDedup.readIndex(bs, idxPath))
           .withColumn("_batch_id", lit(batchId))
           .write.mode("append").parquet(out)
         ()

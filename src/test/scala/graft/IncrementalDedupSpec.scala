@@ -137,6 +137,21 @@ class IncrementalDedupSpec extends SparkSpec {
       s"diff: +${(vIdx -- vInline).take(3)} -${(vInline -- vIdx).take(3)}")
   }
 
+  test("buildIndex writes exactly the shape readIndex declares") {
+    // readIndex skips parquet footer inference by trusting IndexSchema;
+    // a drift between the two would mis-read the index silently.
+    // simpleString ignores nullability, which parquet relaxes on read.
+    def shape(st: org.apache.spark.sql.types.StructType) =
+      st.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+    val built = IncrementalDedup.buildIndex(spark,
+      docs.select($"doc_id", $"text")).schema
+    assert(shape(built) == shape(IncrementalDedup.IndexSchema))
+    val read = IncrementalDedup.readIndex(spark,
+      IncrementalDedup.indexPath(spark, sf0001))
+    assert(read.count() ==
+      docs.filter(!IncrementalDedup.isIncoming).count())
+  }
+
   test("index-backed plan reads the maintained index, not base text") {
     val path = IncrementalDedup.indexPath(spark, sf0001)
     // the index row carries everything each tier needs

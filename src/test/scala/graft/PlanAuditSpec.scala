@@ -446,4 +446,47 @@ class PlanAuditSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("LeftSemi"), plan)
   }
+
+  test("dedup signature passes are map-only: no word_grams generate, no " +
+      "doc_id regroup, no shuffle but fanOut's repartition") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import graft.operators.IncrementalDedup
+    import spark.implicits._
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val docs = Tables(spark, sf0001, "documents").select($"doc_id", $"text")
+    val fanned = Tables.fanOut(spark, docs)
+    val passes = Seq(
+      "buildIndex" -> IncrementalDedup.buildIndex(spark, docs),
+      "classify base bands" -> IncrementalDedup.baseBandsOf(spark, fanned),
+      "classify base sets" -> IncrementalDedup.baseSetsOf(spark, fanned,
+        Seq(1L, 2L, 3L).toDF("doc_id")))
+    for ((name, df) <- passes) {
+      val plan = df.queryExecution.executedPlan
+      val ns = nodes(plan)
+      assert(!ns.exists {
+        case g: GenerateExec => g.generator.isInstanceOf[graft.plans.WordGrams]
+        case _ => false
+      }, s"$name generates word_grams:\n$plan")
+      def onDocId(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        keys.exists(_.references.exists(_.name == "doc_id"))
+      assert(!ns.exists {
+        case a: SortAggregateExec => onDocId(a.groupingExpressions)
+        case a: ObjectHashAggregateExec => onDocId(a.groupingExpressions)
+        case _ => false
+      }, s"$name regroups by doc_id:\n$plan")
+      val shuffles = ns.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.forall(_.shuffleOrigin == REPARTITION_BY_NUM),
+        s"$name shuffles beyond fanOut:\n$plan")
+      // one kernel call per row: no optimizer rewrite inlined it twice
+      assert("dedup_signature\\(".r.findAllIn(plan.toString).size == 1,
+        s"$name evaluates the kernel more than once:\n$plan")
+    }
+  }
 }

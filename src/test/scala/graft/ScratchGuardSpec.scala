@@ -28,4 +28,28 @@ class ScratchGuardSpec extends AnyFunSuite {
   test("no configured root stays a no-op") {
     assert(Tables.guardedScratchRoot(None).isEmpty)
   }
+
+  test("a non-positive or garbled budget override is refused for the default") {
+    val default = Tables.DefaultMinScratchFreeBytes
+    for (raw <- Seq("0", "-1", "-4294967296", "lots", ""))
+      assert(Tables.minFreeBytesOf(Some(raw)) == default, raw)
+    assert(Tables.minFreeBytesOf(Some("1048576")) == 1048576L)
+    assert(Tables.minFreeBytesOf(None) == default)
+  }
+
+  test("an unreadable file store fails open, and says so once") {
+    val missing = java.nio.file.Paths.get("/nonexistent/graft_guard_probe")
+    val err = new java.io.ByteArrayOutputStream()
+    val prev = System.err
+    Tables.usableBytesWarned.set(false)
+    System.setErr(new java.io.PrintStream(err, true))
+    val (a, b) =
+      try (Tables.usableBytes(missing), Tables.usableBytes(missing))
+      finally System.setErr(prev)
+    assert(a == Long.MaxValue && b == Long.MaxValue)
+    assert(Tables.guardedScratchRoot(Some(missing)).contains(missing))
+    val warnings = err.toString.linesIterator
+      .count(_.contains("cannot read the free space of"))
+    assert(warnings == 1, err.toString)
+  }
 }
