@@ -38,6 +38,7 @@ object HiveDemo {
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.plans.Extensions.install(spark)
     try {
       val catalogImpl = spark.conf.get("spark.sql.catalogImplementation")
       spark.sql("CREATE DATABASE IF NOT EXISTS graft")

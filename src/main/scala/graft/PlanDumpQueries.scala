@@ -3,18 +3,21 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
-/** Round-13 optimization evidence: dump `.explain("formatted")` for the
-  * queries touched this round to `plans/r13/<query>_<suffix>.txt`
-  * (suffix = args(0), e.g. "before"/"after"; query names = args(1..)
-  * or SPARK_GRAFT_ONLY). Uses the bench's own session shape (local[32],
-  * 32 shuffle partitions) so Exchange counts match what the bench runs.
-  * Run: `sbt "runMain graft.PlanDumpR13 before fuzzy_join_qgram ..."` */
-object PlanDumpR13 {
+/** Optimization evidence: dump `.explain("formatted")` for chosen
+  * queries to `<outDir>/<query>_<suffix>.txt` (outDir = args(0), e.g.
+  * `plans/r13`; suffix = args(1), e.g. "before"/"after"; query names =
+  * args(2..) or SPARK_GRAFT_ONLY). Uses the bench's own session shape
+  * (local[SPARK_GRAFT_CPUS], as many shuffle partitions) so Exchange
+  * counts match what the bench runs.
+  * Run: `sbt "runMain graft.PlanDumpQueries plans/r13 before fuzzy_join_qgram ..."` */
+object PlanDumpQueries {
   def main(args: Array[String]): Unit = {
     ToolLogging.init()
-    val suffix = args.headOption.getOrElse("before")
+    require(args.nonEmpty, "usage: PlanDumpQueries <outDir> [suffix] [query...]")
+    val outDir = args(0)
+    val suffix = args.lift(1).getOrElse("before")
     val names =
-      if (args.length > 1) args.drop(1).toSeq
+      if (args.length > 2) args.drop(2).toSeq
       else sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -24,7 +27,7 @@ object PlanDumpR13 {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Files.createDirectories(Paths.get("plans/r13"))
+    Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       // resolve AQE to the final plan so Exchange/join strategy claims
@@ -34,10 +37,11 @@ object PlanDumpR13 {
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val finalPlan = df.queryExecution.executedPlan.toString
-      Files.writeString(Paths.get(s"plans/r13/${name}_$suffix.txt"),
+      val out = s"$outDir/${name}_$suffix.txt"
+      Files.writeString(Paths.get(out),
         s"== explain(formatted), $dir ==\n" + formatted +
           "\n== AQE-final executed plan ==\n" + finalPlan)
-      println(s"wrote plans/r13/${name}_$suffix.txt")
+      println(s"wrote $out")
     }
     spark.stop()
   }

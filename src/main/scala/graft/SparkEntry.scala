@@ -1,6 +1,14 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.operators._
+import graft.plans.Extensions
+
+/** One module of graded queries: each query and its DuckDB oracle SQL
+  * (a query with no oracle gets the weaker rows-only check). */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracles: Map[String, String]
+}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -13,76 +21,50 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Segment stats for the canonical demo filter (SURVEY.md §7.2) —
     * always returns exactly one row (P8 zero-struct on empty match). */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    Extensions.install(spark)
     Segmentation.statsQuery(spark, "/root/testdata/sf0.001")
+  }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "segment_stats"   -> (Segmentation.statsQuery _),
-    "segment_preview" -> (Segmentation.previewQuery _),
-    "genre_overlap"   -> (Segmentation.genreOverlapQuery _),
-    "segment_active_stats" -> (Segmentation.activeStatsQuery _),
-    "segment_stats_empty"  -> (Segmentation.emptyStatsQuery _),
-    // S6: same stats routed through the TTL result cache — the key
-    // captures session, directory and the full filter descriptor, so a
-    // hit can never serve another scale factor's (or session's) result
-    "segment_stats_cached" -> ((s: SparkSession, dir: String) =>
-      graft.sources.ResultCache.getOrCompute(
-        s"${graft.sources.ResultCache.sessionId(s)}|segment_stats|$dir|${Segmentation.canonical.descriptor}",
-        ttlSeconds = 300)(Segmentation.statsQuery(s, dir))),
-    // observability-as-data: executed-plan numOutputRows per node
-    // graded vs semantic SQL counts (the reference's fan_count logs)
-    "segment_metrics_observed" -> (Segmentation.segmentMetricsObserved _),
-    // S1 partition pruning on the graded path (see Tables.scala)
-    "orders_pruned_priority" -> (Tables.ordersPrunedPriority _),
-    // bucketed co-located join on the graded path (see Tables.scala)
-    "revenue_bucketed" -> (Tables.revenueBucketed _),
-    // bucket pruning: point lookup opening 1 of 8 buckets (plan-asserted)
-    "order_lookup_bucketed" -> (Tables.orderLookupBucketed _),
-    // dynamic partition pruning: dim-filtered star join (plan-asserted)
-    "orders_dpp_join" -> (Tables.ordersDppJoin _),
-  ) ++ Joins.queries ++ Aggregates.queries ++ Windows.queries ++
-    EventOps.queries ++ CampaignOps.queries ++ TextOps.queries ++
-    Similarity.queries ++ SetJoin.queries ++ EditJoin.queries ++ DupSpans.queries ++ Curation.queries ++ TextSignals.queries ++
-    IncrementalDedup.queries ++ RpSketch.queries ++ Scd.queries ++
-    Compaction.queries ++ ZOrder.queries ++ BloomIndex.queries ++ Vacuum.queries ++ Attribution.queries ++ Wap.queries ++ IvfMaintained.queries ++ SemDedupMaintained.queries ++
-    RangeJoin.queries ++ Integrity.queries ++ Formats.queries ++
-    MergeOnRead.queries ++ Ivm.queries ++ JoinIvm.queries ++ MergeInto.queries ++ MvServe.queries ++ Packing.queries ++
-    Pii.queries ++ Baskets.queries ++ GraphOps.queries ++ Cohorts.queries ++
-    Skyline.queries ++ Concentration.queries ++ Erasure.queries ++
-    Stats.queries ++ RankTest.queries ++ Membership.queries ++
-    BitmapOps.queries ++ Sweepline.queries ++ Cep.queries ++
-    Cusum.queries ++ Subqueries.queries ++ TpchShapes.queries ++ Cbo.queries ++ Sq8.queries ++ Governance.queries ++ KmvOps.queries ++ Dsir.queries ++ Chunking.queries ++ Paging.queries ++ Sharding.queries ++ Hybrid.queries ++ MarkovAttribution.queries ++ Coreset.queries ++ LangId.queries ++ ChunkRetrieval.queries ++ CurationPipeline.queries ++
-    Bootstrap.queries ++ Rfm.queries ++
-    graft.functions.TypedAggs.queries ++
-    Multimodal.queries ++ Skew.queries ++ graft.streaming.StreamReplay.queries
+  /** Every graded module, each named once. */
+  val modules: Seq[QueryModule] = Seq(
+    Segmentation, Tables, Joins, Aggregates, Windows, EventOps,
+    CampaignOps, TextOps, Similarity, SetJoin, EditJoin, DupSpans,
+    Curation, TextSignals, IncrementalDedup, RpSketch, Scd, Compaction,
+    ZOrder, BloomIndex, Vacuum, Attribution, Wap, IvfMaintained,
+    SemDedupMaintained, RangeJoin, Integrity, Formats, MergeOnRead, Ivm,
+    JoinIvm, MergeInto, MvServe, Packing, Pii, Baskets, GraphOps, Cohorts,
+    Skyline, Concentration, Erasure, Stats, RankTest, Membership,
+    BitmapOps, Sweepline, Cep, Cusum, Subqueries, TpchShapes, Cbo, Sq8,
+    Governance, KmvOps, Dsir, Chunking, Paging, Sharding, Hybrid,
+    MarkovAttribution, Coreset, LangId, ChunkRetrieval, CurationPipeline,
+    Bootstrap, Rfm, graft.functions.TypedAggs, Multimodal, Skew,
+    graft.streaming.StreamReplay)
+
+  /** The union of `maps`; a name defined twice fails loudly instead of
+    * the last definition silently winning. */
+  private[graft] def unique[V](what: String,
+      maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity)
+      .collect { case (name, n) if n.size > 1 => name }
+    require(dups.isEmpty,
+      s"$what defined by more than one module: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.flatten.toMap
+  }
+
+  /** Each call installs the graft extensions into the caller's session
+    * before building the query, so every query plans under the same
+    * functions and rules whatever ran before it. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    unique("queries", modules.map(_.queries)).map { case (name, q) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        Extensions.install(spark)
+        q(spark, dir)
+      }
+    }
 
   /** `approx_users` intentionally has NO oracle (HLL sketches are not
     * cross-engine comparable) → driver rows-only check. */
-  def oracleSql: Map[String, String] = Map(
-    "segment_stats"   -> Segmentation.statsOracle,
-    "segment_preview" -> Segmentation.previewOracle,
-    "genre_overlap"   -> Segmentation.genreOverlapOracle,
-    "segment_active_stats" -> Segmentation.activeStatsOracle,
-    "segment_stats_empty"  -> Segmentation.emptyStatsOracle,
-    "segment_stats_cached" -> Segmentation.statsOracle,
-    "segment_metrics_observed" -> Segmentation.segmentMetricsOracle,
-    "orders_pruned_priority" -> Tables.ordersPrunedOracle,
-    "revenue_bucketed" -> Tables.revenueBucketedOracle,
-    "order_lookup_bucketed" -> Tables.orderLookupBucketedOracle,
-    "orders_dpp_join" -> Tables.ordersDppOracle,
-  ) ++ Joins.oracles ++ Aggregates.oracles ++ Windows.oracles ++
-    EventOps.oracles ++ CampaignOps.oracles ++ TextOps.oracles ++
-    Similarity.oracles ++ SetJoin.oracles ++ EditJoin.oracles ++ DupSpans.oracles ++ Curation.oracles ++ TextSignals.oracles ++
-    IncrementalDedup.oracles ++ RpSketch.oracles ++ Scd.oracles ++
-    Compaction.oracles ++ ZOrder.oracles ++ BloomIndex.oracles ++ Vacuum.oracles ++ Attribution.oracles ++ Wap.oracles ++ IvfMaintained.oracles ++ SemDedupMaintained.oracles ++
-    RangeJoin.oracles ++ Integrity.oracles ++ Formats.oracles ++
-    MergeOnRead.oracles ++ Ivm.oracles ++ JoinIvm.oracles ++ MergeInto.oracles ++ MvServe.oracles ++ Packing.oracles ++
-    Pii.oracles ++ Baskets.oracles ++ GraphOps.oracles ++ Cohorts.oracles ++
-    Skyline.oracles ++ Concentration.oracles ++ Erasure.oracles ++
-    Stats.oracles ++ RankTest.oracles ++ Membership.oracles ++
-    BitmapOps.oracles ++ Sweepline.oracles ++ Cep.oracles ++
-    Cusum.oracles ++ Subqueries.oracles ++ TpchShapes.oracles ++ Cbo.oracles ++ Sq8.oracles ++ Governance.oracles ++ KmvOps.oracles ++ Dsir.oracles ++ Chunking.oracles ++ Paging.oracles ++ Sharding.oracles ++ Hybrid.oracles ++ MarkovAttribution.oracles ++ Coreset.oracles ++ LangId.oracles ++ ChunkRetrieval.oracles ++ CurationPipeline.oracles ++
-    Bootstrap.oracles ++ Rfm.oracles ++
-    graft.functions.TypedAggs.oracles ++
-    Multimodal.oracles ++ Skew.oracles ++ graft.streaming.StreamReplay.oracles
+  lazy val oracleSql: Map[String, String] =
+    unique("oracles", modules.map(_.oracles))
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.plans.Extensions
 
 /** Loaders for the driver's parquet tables (TESTDATA.md).
   *
@@ -11,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * its own schema; we deliberately do NOT infer or re-declare it here so
   * the vectorized reader + column pruning work unimpeded.
   */
-object Tables {
+object Tables extends QueryModule {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
@@ -96,13 +97,13 @@ object Tables {
       installCleanupHook()
       val f = newTempDir("graft_events_us_")
       tmpDirs.add(f)
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // The schema converter checks `!isAdjustedToUTC && inferTimestampNTZ
       // → TIMESTAMP_NTZ` BEFORE `unit == NANOS && nanosAsLong → LONG`
       // (ParquetToSparkSchemaConverter.convertTimestampType), so the
       // legacy long read only fires with NTZ inference off for this scan.
-      ss.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      val ss = Extensions.newSession(spark,
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+        "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
       // Belt-and-braces scoping: parts of schema inference resolve conf
       // through SQLConf.get — the thread's ACTIVE session, not the
       // session the DataFrameReader came from — so make the clone
@@ -408,10 +409,9 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
   private def bucketPlanClone(spark: SparkSession): SparkSession =
     bucketPlanClones.computeIfAbsent(spark, { s =>
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      ss.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      ss
+      Extensions.newSession(s,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
     })
 
   def revenueBucketed(spark: SparkSession, sfDir: String): DataFrame = {
@@ -466,29 +466,40 @@ object Tables {
     * for concurrent jobs from one application (FIFO back-fill);
     * ResultCache/GramStore builds are per-key-locked, so concurrent
     * distinct-substrate builds are safe and a shared key builds once.
-    * Results return in call order; the first failure rethrows its
-    * cause. */
+    * Results return in call order.
+    *
+    * Failure leaves nothing running: each thunk runs under its own job
+    * group, the first thunk to fail cancels every sibling group (their
+    * running jobs, interrupting the tasks, and any job they submit
+    * later), every runner thread is joined, and only then is that first
+    * failure rethrown as it was thrown. */
   private[graft] def concurrently(spark: SparkSession)(
       thunks: (() => DataFrame)*): Seq[DataFrame] = {
-    val tasks = thunks.map { t =>
-      new java.util.concurrent.FutureTask[DataFrame](() => {
+    val sc = spark.sparkContext
+    val run = java.util.UUID.randomUUID()
+    val groups = thunks.indices.map(i => s"graft-substrate-$run-$i")
+    val results = new Array[DataFrame](thunks.size)
+    val firstFailure =
+      new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val runners = thunks.indices.map { i =>
+      val th = new Thread(() => {
         SparkSession.setActiveSession(spark)
-        t()
-      })
-    }
-    val runners = tasks.zipWithIndex.map { case (ft, i) =>
-      val th = new Thread(ft, s"graft-substrate-$i")
+        sc.setJobGroup(groups(i), "graft substrate build",
+          interruptOnCancel = true)
+        try results(i) = thunks(i)()
+        catch {
+          case e: Throwable =>
+            if (firstFailure.compareAndSet(null, e))
+              groups.patch(i, Nil, 1).foreach(sc.cancelJobGroupAndFutureJobs)
+        }
+      }, s"graft-substrate-$i")
       th.setDaemon(true)
       th
     }
     runners.foreach(_.start())
-    tasks.map { ft =>
-      try ft.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
-      }
-    }
+    runners.foreach(_.join())
+    Option(firstFailure.get).foreach(e => throw e)
+    results.toSeq
   }
 
   /** Fan a scan out to every core iff the source yields fewer splits
@@ -530,4 +541,22 @@ object Tables {
       else df
     }
   }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // S1 partition pruning on the graded path
+    "orders_pruned_priority" -> (ordersPrunedPriority _),
+    // bucketed co-located join on the graded path
+    "revenue_bucketed" -> (revenueBucketed _),
+    // bucket pruning: point lookup opening 1 of 8 buckets (plan-asserted)
+    "order_lookup_bucketed" -> (orderLookupBucketed _),
+    // dynamic partition pruning: dim-filtered star join (plan-asserted)
+    "orders_dpp_join" -> (ordersDppJoin _),
+  )
+
+  val oracles: Map[String, String] = Map(
+    "orders_pruned_priority" -> ordersPrunedOracle,
+    "revenue_bucketed" -> revenueBucketedOracle,
+    "order_lookup_bucketed" -> orderLookupBucketedOracle,
+    "orders_dpp_join" -> ordersDppOracle,
+  )
 }

@@ -17,7 +17,7 @@ import graft.functions.ScalarFns.{roundSql, roundN}
   * `functions.udaf` it is also a SQL-callable function (U2 registry
   * surface).
   */
-object TypedAggs {
+object TypedAggs extends graft.QueryModule {
 
   final case class MoneyBuf(n: Long, sum: BigDecimal)
   final case class MoneyStats(n: Long, avg2dp: Double)

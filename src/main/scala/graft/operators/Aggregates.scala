@@ -18,7 +18,7 @@ import graft.functions.ScalarFns._
   * never a full sort). All money sums go through exact decimal so the
   * result is independent of partition count / merge order.
   */
-object Aggregates {
+object Aggregates extends graft.QueryModule {
 
   /** A4 grouped aggregation, TPC-H Q1-shaped pricing summary over
     * lineitem: multi-metric one-pass (A8) with derived expressions.
@@ -230,7 +230,6 @@ object Aggregates {
     * carries one 112-long array per (segment, partition): quantiles
     * without any sort. */
   def histQuantilesAcctbal(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.HistSketch.register(spark)
     val lo = -1000.0; val hi = 10000.0; val bins = 110
     val w = (hi - lo) / bins // = 100.0 exactly
     val sk = Tables(spark, dir, "customer")
@@ -271,7 +270,6 @@ object Aggregates {
     * window's counts from RAW rows (equal by sum associativity) and
     * must reach identical edges. */
   def rollingPriceQuantilesHist(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.HistSketch.register(spark)
     val lo = 0.0; val hi = 500000.0; val bins = 100
     val bw = (hi - lo) / bins // = 5000.0 exactly
     val daily = Tables(spark, dir, "orders")
@@ -323,7 +321,6 @@ object Aggregates {
     * key ASC), so hash equality proves select-k ≡ rank-k, ties
     * included. */
   def topOrdersPerStatus(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.TopKAgg.register(spark)
     Tables(spark, dir, "orders")
       .groupBy(col("o_orderstatus"))
       .agg(expr("top_k_by(o_totalprice, o_orderkey, 3)").as("tk"))
@@ -345,7 +342,6 @@ object Aggregates {
   def customerDistinctElim(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.DistinctElim.declareUnique(spark,
       s"$dir/customer.parquet", "c_custkey")
-    graft.plans.DistinctElim.install(spark)
     Tables(spark, dir, "customer").distinct()
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_customers"),

@@ -31,7 +31,7 @@ import graft.Tables
   * sides partition by user, the window predicate evaluates inside the
   * joined partition.
   */
-object Attribution {
+object Attribution extends graft.QueryModule {
 
   /** GRADED: per view-hour linear attribution — how much purchase
     * value each hour's touchpoints earned, in exact micro-units. */

@@ -35,7 +35,7 @@ import graft.functions.ScalarFns.{roundN, roundSql}
   * Determinism: counts are exact BIGINTs; support/confidence/lift are
   * single pinned-order double divisions of exact integers, rounded.
   */
-object Baskets {
+object Baskets extends graft.QueryModule {
 
   /** Absolute minimum support (pair AND item occurrence count). */
   private[graft] val MinSup = 3L

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.BitmapFunctions
 
 /** EXACT distinct-count serving from mergeable bitmaps — the
   * ClickHouse `groupBitmap` / Doris `BITMAP` rollup tier next to the
@@ -32,11 +31,10 @@ import graft.plans.BitmapFunctions
   * table build is one shuffle of canonical blobs; week-over-week
   * algebra then reads |weeks| rows — corpus-size-independent serving.
   */
-object BitmapOps {
+object BitmapOps extends graft.QueryModule {
 
   /** Exact per-type distinct users via the bitmap aggregate. */
   def bitmapDistinctUsers(spark: SparkSession, dir: String): DataFrame = {
-    BitmapFunctions.register(spark)
     Tables(spark, dir, "events")
       .groupBy(col("event_type"))
       .agg(expr("bitmap_distinct(user_id)").as("users"),
@@ -49,7 +47,6 @@ object BitmapOps {
     * day absent from the frame must not stretch the window); the
     * window runs over |days| blob rows, corpus-size-independent. */
   def dailyUsersRollingBitmap(spark: SparkSession, dir: String): DataFrame = {
-    BitmapFunctions.register(spark)
     val daily = Tables(spark, dir, "events")
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .groupBy(col("day"))
@@ -69,7 +66,6 @@ object BitmapOps {
     * no self-join of the corpus. First week: prev is NULL, so the
     * three pairwise measures are NULL (pinned in the oracle). */
   def weeklyChurnBitmap(spark: SparkSession, dir: String): DataFrame = {
-    BitmapFunctions.register(spark)
     val weekly = Tables(spark, dir, "events")
       .select(date_trunc("week", col("ts")).cast("date").as("wk"),
         col("user_id"))

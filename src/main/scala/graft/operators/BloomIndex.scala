@@ -38,7 +38,7 @@ import graft.Tables
   * the fragment files and a superset of the files truly containing
   * the key.
   */
-object BloomIndex {
+object BloomIndex extends graft.QueryModule {
   /** The graded probe key — same point lookup as `order_lookup_bucketed`
     * so the two mechanisms (hash layout vs secondary index) are
     * side-by-side on the board. */
@@ -49,7 +49,6 @@ object BloomIndex {
 
   private[graft] def manifestDir(spark: SparkSession, sfDir: String): String =
     manifestDirs.computeIfAbsent(sfDir, { _ =>
-      graft.plans.BloomSketch.register(spark)
       val frag = Compaction.fragmentedOrdersDir(spark, sfDir)
       val out = Tables.scratchDir("graft_bloom_manifest_").getAbsolutePath
       spark.read.parquet(frag)

@@ -37,7 +37,7 @@ import graft.Tables
   * statistics (mean revenue tiles); this adds the uncertainty
   * quantification a decision off those tiles needs.
   */
-object Bootstrap {
+object Bootstrap extends graft.QueryModule {
 
   /** Number of bootstrap replicas. 32 keeps the graded surface small;
     * production uses 100-1000 — the plan shape is identical (the

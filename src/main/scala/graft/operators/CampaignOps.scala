@@ -24,7 +24,7 @@ import graft.functions.ScalarFns._
   * template runs post-aggregation, so at 100 TB this is a no-shuffle tail
   * on an already-reduced result.
   */
-object CampaignOps {
+object CampaignOps extends graft.QueryModule {
 
   /** Deterministic copy template — the reference's fallback copy
     * (`tools.py:147-153`) as columns. */

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
+import graft.plans.Extensions
 
 /** COST-BASED OPTIMIZATION made to DO something (r8 verdict #5):
   * `join_card_estimate` ([[Stats]]) sanity-checks the estimator;
@@ -34,7 +35,7 @@ import graft.Tables
   *    ~4 % that survives the dim — the reorder is worth more than any
   *    physical tuning below it.
   */
-object Cbo {
+object Cbo extends graft.QueryModule {
 
   /** Catalog tables (lineitem/orders/part) + stats, once per
     * (JVM, corpus); returns the table names. */
@@ -72,14 +73,12 @@ object Cbo {
   private val cboClones = new ConcurrentHashMap[SparkSession, SparkSession]()
   private[graft] def cboClone(spark: SparkSession): SparkSession =
     cboClones.computeIfAbsent(spark, { s =>
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.cbo.enabled", "true")
-      ss.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      ss
+      Extensions.newSession(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true")
     })
   private val plainClones = new ConcurrentHashMap[SparkSession, SparkSession]()
   private[graft] def plainClone(spark: SparkSession): SparkSession =
-    plainClones.computeIfAbsent(spark, { s => s.newSession() })
+    plainClones.computeIfAbsent(spark, { s => Extensions.newSession(s) })
 
   /** The deliberately-misordered statement (fact ⋈ fact first). */
   private[graft] def statement(l: String, o: String, p: String): String =
@@ -161,12 +160,11 @@ object Cbo {
       cbo: Boolean): DataFrame = {
     val (lT, _, pT) = analyzedTables(spark, dir)
     val ss = bcClones.computeIfAbsent((spark, dir, cbo), { _ =>
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.cbo.enabled", cbo.toString)
-      s2.conf.set("spark.sql.adaptive.enabled", "false")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold",
-        math.max(1L, dimSizeBytes(spark, pT) / 6).toString)
-      s2
+      Extensions.newSession(spark,
+        "spark.sql.cbo.enabled" -> cbo.toString,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" ->
+          math.max(1L, dimSizeBytes(spark, pT) / 6).toString)
     })
     ss.sql(broadcastStatement(lT, pT))
   }

@@ -33,7 +33,7 @@ import graft.Tables
   * assumption as `session_stats` / `event_funnel`). The pattern scan
   * itself is O(sequence length) per user.
   */
-object Cep {
+object Cep extends graft.QueryModule {
 
   /** The funnel pattern over event initials. */
   val Pattern = "v+c+p"

@@ -57,7 +57,7 @@ import graft.functions.ScalarFns
   * dials a 100 TB deployment turns are measured against the brute
   * recall; nothing in the fusion or grading changes between arms.
   */
-object ChunkRetrieval {
+object ChunkRetrieval extends graft.QueryModule {
 
   /** Query chunks graded. */
   private[graft] val NQ = 16

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Shingles
+import graft.plans.Extensions
 
 /** Document CHUNKING — the RAG / context-window preprocessing step
   * every training-data and retrieval pipeline runs before embedding:
@@ -35,7 +36,7 @@ import graft.functions.Shingles
   * length is platform-bounded, so per-row explode fan-out is bounded
   * by n/STRIDE.
   */
-object Chunking {
+object Chunking extends graft.QueryModule {
 
   /** Chunk size C in tokens. */
   private[graft] val Chunk = 32
@@ -220,8 +221,8 @@ object Chunking {
         .getAbsolutePath
       val ckpt = graft.Tables.scratchDir("graft_chunk_sckpt_")
         .getAbsolutePath
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
+      val ss = Extensions.newSession(spark,
+        "spark.sql.shuffle.partitions" -> "2")
       val docs = Tables(ss, dir, "documents")
       chunkRowsOf(docs.filter(!isNewDoc))
         .write.mode("overwrite").parquet(s"$root/chunks/base")

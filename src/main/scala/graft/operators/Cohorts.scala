@@ -32,7 +32,7 @@ import graft.functions.ScalarFns
   * percentage goes through the [[ScalarFns.roundN]]/`roundSql` pair,
   * so every cell is bit-exact against the DuckDB twin.
   */
-object Cohorts {
+object Cohorts extends graft.QueryModule {
 
   /** GRADED: (cohort_month, month_offset) → active distinct customers,
     * cohort size, retention %. */

@@ -32,7 +32,7 @@ import graft.Tables
   * collapse, per-file disjoint key ranges, in-file sort) are asserted
   * in `CompactionSpec`.
   */
-object Compaction {
+object Compaction extends graft.QueryModule {
   /** Production default target (the common lakehouse OPTIMIZE size).
     * Bench corpora compact to a single file under it — correct; the
     * spec exercises the multi-file path with a small explicit target. */

@@ -37,7 +37,7 @@ import graft.functions.ScalarFns
   * decimal(38,2) while n·max_spend < 10³⁶ — far beyond any real
   * corpus. Deciles are integer arithmetic on (rank−1)·10 div n.
   */
-object Concentration {
+object Concentration extends graft.QueryModule {
 
   /** Spend-range fan-out (16 here; hundreds at 100 TB). */
   private val Buckets = 16

@@ -29,7 +29,7 @@ import graft.Tables
   * SSSP loop regime: localCheckpoint, one materialization per round,
   * no driver-side math). The oracle unrolls the same k−1 steps as
   * chained CTEs. */
-object Coreset {
+object Coreset extends graft.QueryModule {
 
   private[graft] val K = 8
 
@@ -38,7 +38,6 @@ object Coreset {
 
   /** GRADED: the greedy pick sequence (pick, vec_id, radius_ppm). */
   def coresetKcenter(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val seedVec = e.filter(col("vec_id") === 0)

@@ -26,7 +26,7 @@ import graft.functions.{ScalarFns, Shingles}
   *    aggregate (sources ≪ rows), exactly mirrorable in the oracle —
   *    Spark `div` ≡ DuckDB `//`.
   */
-object Curation {
+object Curation extends graft.QueryModule {
 
   /** Sampling threshold: keep a doc when the first 8 hex chars of
     * md5(doc_id) sort below this — 0x33333333/2^32 ≈ 20 %. Fixed-width
@@ -101,7 +101,6 @@ object Curation {
     // streaming word_grams generator (r5; value-parity with the HOF
     // form property-tested in WordGramSpec) — the generator emits zero
     // rows under 8 tokens, exactly the HOF form's size(t) >= 8 guard.
-    graft.plans.WordGrams.register(spark)
     val grams = graft.Tables.fanOut(spark, Tables(spark, dir, "documents"))
       .select(col("doc_id"), expr("word_grams(text, 8)").as("g"))
     val benchGrams = grams.filter(col("doc_id") % BenchMod === 0)
@@ -564,7 +563,6 @@ object Curation {
     * select-k ≡ rank-k; PlanAuditSpec pins that this plan contains NO
     * Window node. */
   def sourceCapTopk(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.TopKAgg.register(spark)
     val d = Tables(spark, dir, "documents")
       .select(col("source"), col("doc_id"), col("n_chars"))
     val admits = d

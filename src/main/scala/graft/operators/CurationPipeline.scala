@@ -64,7 +64,7 @@ import graft.Tables
   * every substrate-cache interaction the per-operator grades can't
   * see.
   */
-object CurationPipeline {
+object CurationPipeline extends graft.QueryModule {
 
   /** The funnel over pluggable substrates — the base row and the
     * erased row differ ONLY in which docs/gate/cluster/diversity

@@ -26,7 +26,7 @@ import graft.Tables
   * folds inside `flatMapGroups` over the |hours|-row per-type cell
   * frame — calendar-bounded (a decade ≈ 90k cells/type), partitioned
   * BY TYPE across executors, never a corpus-sized group. */
-object Cusum {
+object Cusum extends graft.QueryModule {
 
   /** The CUSUM recursion as a pure fold: S_t = max(0, S_{t−1}+x_t−k),
     * alarm iff S_t ≥ 8k. Factored out so the spec can drive it with

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.WordGrams
+import graft.plans.Extensions
 
 /** DSIR-style DATA SELECTION via hashed n-gram importance (Xie et al.,
   * NeurIPS 2023 "Data Selection for Language Models via Importance
@@ -34,7 +34,7 @@ import graft.plans.WordGrams
   * [[Curation.prioritySample]] shape). No all-pairs, no driver loop;
   * doc length is platform-bounded so Σratio stays far under BIGINT.
   */
-object Dsir {
+object Dsir extends graft.QueryModule {
 
   /** Hash buckets B (the published method's hashed feature space; 64
     * keeps the model human-auditable while leaving ~360 occurrences
@@ -47,11 +47,8 @@ object Dsir {
     * u32(md5(gram)) % B. The repo-wide md5-nibble uniform, so the
     * oracle rebuilds b with the nibble polynomial. Over an ARBITRARY
     * docs frame: the streamed variant scores micro-batches through
-    * this same code path, and `word_grams` registers on the FRAME's
-    * session (foreachBatch hands frames bound to an isolated session
-    * clone — the [[LangId.featuresOf]] lesson). */
+    * this same code path. */
   private def featuresOf(docs: DataFrame): DataFrame = {
-    WordGrams.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("source"), col("lang"),
         expr("word_grams(text, 2)").as("g"))
@@ -158,8 +155,8 @@ object Dsir {
         .getAbsolutePath
       val ckpt = graft.Tables.scratchDir("graft_dsir_sckpt_")
         .getAbsolutePath
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
+      val ss = Extensions.newSession(spark,
+        "spark.sql.shuffle.partitions" -> "2")
       dsirBucketModel(ss, dir).write.mode("overwrite")
         .parquet(s"$root/model")
       val docs = Tables(ss, dir, "documents")

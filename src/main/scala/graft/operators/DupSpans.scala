@@ -52,7 +52,7 @@ import graft.Tables
   * shared tokenizer CTE — positions, islands and span lengths must
   * agree bit-for-bit.
   */
-object DupSpans {
+object DupSpans extends graft.QueryModule {
 
   /** Detection floor: report every shared run of ≥ 8 tokens. */
   private val W = 8
@@ -74,7 +74,6 @@ object DupSpans {
     * boilerplate set (broadcast anti join — the hot set is the
     * boilerplate vocabulary, small by construction). */
   private[graft] def cappedWindows(docs: DataFrame): DataFrame = {
-    graft.plans.WordGrams.register(docs.sparkSession)
     val g = docs.select(col("doc_id"),
       expr(s"word_grams_pos(text, $W)").as(Seq("pos", "s")))
     val hot = g.groupBy(col("s"))

@@ -59,7 +59,7 @@ import graft.Tables
   * the per-name windows are name-partitioned. Raise k/q and the
   * prefix just widens to k·q + 1.
   */
-object EditJoin {
+object EditJoin extends graft.QueryModule {
 
   private val K = 1
   private val Q = 3

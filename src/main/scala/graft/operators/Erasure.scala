@@ -36,7 +36,7 @@ import graft.Tables
   * physical erasure is the compaction pass's job, same as tombstone
   * retirement.)
   */
-object Erasure {
+object Erasure extends graft.QueryModule {
 
   /** Erased class: users whose md5 first nibble is 'a' (~1/16). */
   private val EraseHex = "a"

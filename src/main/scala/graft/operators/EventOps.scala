@@ -17,7 +17,7 @@ import graft.Tables
   * partition) — at 100 TB swap for approx_count_distinct (HLL) when ±2%
   * is acceptable.
   */
-object EventOps {
+object EventOps extends graft.QueryModule {
 
   /** ST7 batch form: tumbling 1-hour event-time windows per type. */
   def hourlyEventStats(spark: SparkSession, dir: String): DataFrame =
@@ -82,7 +82,6 @@ object EventOps {
     * `approx_count_distinct` — the ESTIMATE itself hash-matches a
     * DuckDB reimplementation of the same spec. */
   def hllUsers(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.SketchFunctions.register(spark)
     Tables(spark, dir, "events")
       .groupBy(col("event_type"))
       .agg(expr("hll_sketch(CAST(user_id AS STRING))").as("h"))
@@ -109,7 +108,6 @@ object EventOps {
     * estimate column is pinned by the spec-exact chain (same discipline
     * as `hll_users`/`orders_ndv_approx`). */
   def dailyUsersRollingHll(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.SketchFunctions.register(spark)
     val e = Tables(spark, dir, "events")
       .select(to_date(col("ts")).as("day"), col("user_id"))
     val daily = e.groupBy(col("day"))

@@ -24,7 +24,7 @@ import graft.Tables
   *    ColumnarToRow shape) and keep predicate pushdown, so switching
   *    warehouse formats does not change the plan discipline.
   */
-object Formats {
+object Formats extends graft.QueryModule {
   private val csvDirs = new ConcurrentHashMap[String, String]()
   private val orcDirs = new ConcurrentHashMap[String, String]()
   private val jsonDirs = new ConcurrentHashMap[String, String]()

@@ -29,7 +29,7 @@ import graft.Tables
   * (`backend/tools.py:58-78`) — the same trust split these views make
   * explicit.
   */
-object Governance {
+object Governance extends graft.QueryModule {
 
   /** The tenant fence: customers of ONE nation (tenant key = nation),
     * as a named view. */

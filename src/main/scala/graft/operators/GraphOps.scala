@@ -64,7 +64,7 @@ import graft.Tables
   * Spark loop against a recursive-CTE fixpoint pins the iterative
   * DataFrame program to declarative graph semantics.
   */
-object GraphOps {
+object GraphOps extends graft.QueryModule {
 
   /** Seed rule: graph vertices with vec_id ≡ 0 (mod SeedMod) — ~1% of
     * nodes, deterministic, engine-neutral integer arithmetic. */
@@ -90,7 +90,6 @@ object GraphOps {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def scoredCandDir(spark: SparkSession, dir: String): String =
     scoredCandDirs.computeIfAbsent(dir, { _ =>
-      graft.plans.VectorExpressions.register(spark)
       val out = Tables.scratchDir("graft_knn_cand_").getAbsolutePath
       // top-2 coarse buckets per vector: the multi-probe assignment
       val wa = Window.partitionBy("vec_id")
@@ -232,7 +231,6 @@ object GraphOps {
   private[graft] def maintainedEdges(spark: SparkSession,
       dir: String): GraphState =
     maintainedStates.computeIfAbsent(dir, { _ =>
-      graft.plans.VectorExpressions.register(spark)
       val root = Tables.scratchDir("graft_knn_maint_").getAbsolutePath
       val e = Tables(spark, dir, "embeddings")
       val base = e.filter(!isNewVec)
@@ -628,7 +626,6 @@ object GraphOps {
       // per-round frames are 16 rows; AQE only adds per-exchange jobs
       val edgesPath = knnEdgesDir(spark, dir, deg) // substrate: parent session
       val ls = Similarity.loopSession(spark)
-      graft.plans.VectorExpressions.register(ls)
       val out = Tables.scratchDir("graft_beam_").getAbsolutePath
       val e = Tables(ls, dir, "embeddings")
       val edges = ls.read.parquet(edgesPath)
@@ -692,7 +689,6 @@ object GraphOps {
     beamErasedDirs.computeIfAbsent(dir, { _ =>
       val edgesPath = knnEdgesDir(spark, dir) // substrate: parent session
       val ls = Similarity.loopSession(spark)
-      graft.plans.VectorExpressions.register(ls)
       val out = Tables.scratchDir("graft_beam_erased_").getAbsolutePath
       val e = Tables(ls, dir, "embeddings")
       val edges = IndexErasure.erasedView(ls, edgesPath,
@@ -746,7 +742,6 @@ object GraphOps {
     * changes the ground truth too: an erased vector is not a valid
     * answer). Shows the walk still converges after edge retirement. */
   def graphAnnRecallErased(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val res = spark.read.parquet(beamErasedDir(spark, dir))
@@ -838,7 +833,6 @@ object GraphOps {
     hnswDirs.computeIfAbsent(dir, { _ =>
       val basePath = knnEdgesDir(spark, dir, 2) // substrate: parent session
       val ls = Similarity.loopSession(spark)
-      graft.plans.VectorExpressions.register(ls)
       val out = Tables.scratchDir("graft_hnsw_").getAbsolutePath
       val e = Tables(ls, dir, "embeddings")
       val baseEdges = ls.read.parquet(basePath)
@@ -936,7 +930,6 @@ object GraphOps {
   private[graft] def hnswMaintainedDir(spark: SparkSession,
       dir: String): String =
     hnswMaintDirs.computeIfAbsent(dir, { _ =>
-      graft.plans.VectorExpressions.register(spark)
       val st = maintainedEdges(spark, dir)
       val out = Tables.scratchDir("graft_hnsw_maint_").getAbsolutePath
       val e = Tables(spark, dir, "embeddings")
@@ -973,7 +966,6 @@ object GraphOps {
         .write.mode("overwrite").partitionBy("lvl", "part")
         .parquet(s"$out/layers")
       val ls = Similarity.loopSession(spark)
-      graft.plans.VectorExpressions.register(ls)
       val le = Tables(ls, dir, "embeddings")
       val baseEdges = ls.read.parquet(st.root) // base + delta files
       val q = le.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -1065,7 +1057,6 @@ object GraphOps {
     beamBatchDirs.computeIfAbsent(dir, { _ =>
       val edgesPath = knnEdgesDir(spark, dir) // substrate: parent session
       val ls = Similarity.loopSession(spark)
-      graft.plans.VectorExpressions.register(ls)
       val out = Tables.scratchDir("graft_beam_batch_").getAbsolutePath
       val e = Tables(ls, dir, "embeddings")
       val edges = ls.read.parquet(edgesPath)

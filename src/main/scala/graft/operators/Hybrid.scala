@@ -39,7 +39,7 @@ import graft.functions.ScalarFns
   * MMR pass never leaves per-query candidate pools (k=20), so its
   * pairwise term is O(Q·k²) spread across queries — never corpus².
   */
-object Hybrid {
+object Hybrid extends graft.QueryModule {
 
   /** Tier depth fed into fusion. */
   private val TierN = 50
@@ -60,7 +60,6 @@ object Hybrid {
   /** Dense tier: cosine-to-anchor top-[[TierN]] with ranks. The anchor
     * doc itself (vec_id 0) legitimately ranks #1 (cosine 1.0). */
   private def denseTier(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     e.crossJoin(broadcast(q))
@@ -140,7 +139,6 @@ object Hybrid {
     * driver). The oracle unrolls the same greedy as [[Picks]] chained
     * CTE steps. */
   def mmrRerankBatch(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     import spark.implicits._
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") < NQ)

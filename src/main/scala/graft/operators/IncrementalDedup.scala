@@ -52,7 +52,7 @@ import graft.Tables
   * (collision odds ≈ 5e-8; TextSimilaritySpec's collision guard + the
   * cross-SF selfcheck cover the shipped corpora).
   */
-object IncrementalDedup {
+object IncrementalDedup extends graft.QueryModule {
 
   /** First md5 hex chars of doc_id selecting the incoming batch (2 of
     * 16 ⇒ ~1/8 of the corpus — small enough that "batch ≪ corpus"
@@ -144,9 +144,8 @@ object IncrementalDedup {
     * signature is a function of the doc's own text, so nothing is
     * exploded, shuffled or regrouped. Docs under 3 tokens get null
     * signature columns and null hs. */
-  private def signaturesOf(spark: SparkSession, docs: DataFrame,
+  private def signaturesOf(docs: DataFrame,
       keep: Column*): DataFrame = {
-    graft.plans.DedupSignature.register(spark)
     docs.select(Seq(col("doc_id")) ++ keep ++
         Seq(expr("dedup_signature(text)").as("sig")): _*)
       .select("*", "sig.*").drop("sig")
@@ -155,7 +154,7 @@ object IncrementalDedup {
   /** One corpus pass → the index frame (doc_id, nh, m0..m3, hs): a
     * map-only projection of the fanned scan. */
   private[graft] def buildIndex(spark: SparkSession, base: DataFrame): DataFrame =
-    signaturesOf(spark, Tables.fanOut(spark, base),
+    signaturesOf(Tables.fanOut(spark, base),
       md5(TextOps.normalized(col("text"))).as("nh"))
 
   /** ONE signature pass over the whole corpus → the index, written
@@ -296,14 +295,14 @@ object IncrementalDedup {
     * derived from base TEXT by one kernel projection. */
   private[graft] def baseBandsOf(spark: SparkSession,
       fannedBase: DataFrame): DataFrame =
-    bandsOf(signaturesOf(spark, fannedBase), "base_id")
+    bandsOf(signaturesOf(fannedBase), "base_id")
 
   /** The inline classifier's base gram-hash sets (base_id, bhs) for the
     * candidate ids only: the semi-join runs BEFORE the kernel, so only
     * candidate docs are hashed. */
   private[graft] def baseSetsOf(spark: SparkSession, fannedBase: DataFrame,
       candIds: DataFrame): DataFrame =
-    signaturesOf(spark,
+    signaturesOf(
         fannedBase.join(broadcast(candIds), Seq("doc_id"), "left_semi"))
       .select(col("doc_id").as("base_id"), col("hs").as("bhs"))
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.Extensions
 
 /** Cross-copy INTEGRITY diff — the reconciliation audit every layout
   * rewrite needs: after compaction / z-ordering / replication, prove
@@ -33,7 +34,7 @@ import graft.Tables
   * hash-match if compaction preserved the exact row multiset — the
   * audit and the rewrite are graded in one query.
   */
-object Integrity {
+object Integrity extends graft.QueryModule {
   private[graft] val Buckets = 16
 
   /** Checksum modulus: 2⁶¹−1 (Mersenne prime, < 2⁶³). Both engines sum
@@ -117,10 +118,13 @@ object Integrity {
         .getAbsolutePath
       val src = withBucket(Tables(spark, sfDir, "orders"))
       // the replica ships damaged: one bucket's quarter never arrives.
-      // ONE task per bucket partition (r13, guide §6 output sizing):
-      // unrepartitioned, every scan task fans its rows across all 16
-      // bucket dirs (tasks × buckets files), and each of the three
-      // later replica scans pays the per-file open cost.
+      // Hash-partitioned on the bucket (r13, guide §6 output sizing):
+      // all rows of a bucket land in ONE task, so each bucket dir gets
+      // exactly one file. Hash collisions may put two buckets in one
+      // task and leave another task empty. Unrepartitioned, every scan
+      // task fans its rows across all 16 bucket dirs (tasks × buckets
+      // files), and each of the three later replica scans pays the
+      // per-file open cost.
       src.filter(!damaged)
         .repartition(Buckets, col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(replica)
@@ -139,8 +143,8 @@ object Integrity {
       // REPAIR: rewrite ONLY the damaged partitions from source —
       // dynamic overwrite touches just the partitions present in the
       // written data (session clone keeps the conf out of the caller)
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      val ss = Extensions.newSession(spark,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
       withBucket(Tables(ss, sfDir, "orders"))
         .filter(col("bucket").isin(damagedBuckets.toIndexedSeq: _*))
         .write.mode("overwrite").partitionBy("bucket").parquet(replica)

@@ -30,7 +30,7 @@ import graft.Tables
   * and tie-breaks. At 100 TB the append is a map-only pass over the
   * new vectors (√N kernel calls each) — the reason IVF ingest is
   * cheap enough to run per batch. */
-object IvfMaintained {
+object IvfMaintained extends graft.QueryModule {
 
   private[graft] final case class IvfState(root: String, nlist: Int,
       baseFiles: Map[String, Long], deltaFiles: Map[String, Long])
@@ -51,7 +51,6 @@ object IvfMaintained {
 
   private[graft] def state(spark: SparkSession, dir: String): IvfState =
     states.computeIfAbsent(dir, { _ =>
-      graft.plans.VectorExpressions.register(spark)
       val root = Tables.scratchDir("graft_ivf_maint_").getAbsolutePath
       val e = Tables(spark, dir, "embeddings")
       val base = e.filter(!GraphOps.isNewVec)
@@ -110,7 +109,6 @@ object IvfMaintained {
     * maintained and erased read paths. */
   private def topkFromLists(spark: SparkSession, dir: String,
       st: IvfState, lists: DataFrame, k: Int): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val qprobe = centsOf(spark, dir, st.nlist)

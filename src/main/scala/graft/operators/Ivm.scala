@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.Extensions
 
 /** INCREMENTAL VIEW MAINTENANCE — keep a materialized aggregate in
   * sync with a CDC delta log by applying O(changes) delta arithmetic,
@@ -45,7 +46,7 @@ import graft.Tables
   * resolved table ([[graft.MergeOnReadSpec]] asserts this row-for-row; the GRADE
   * pins it against the DuckDB restatement of the final table).
   */
-object Ivm {
+object Ivm extends graft.QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
 
@@ -161,12 +162,12 @@ object Ivm {
       val root = graft.Tables.scratchDir("graft_ivm_stream_").getAbsolutePath
       val ckpt = graft.Tables.scratchDir("graft_ivm_ckpt_").getAbsolutePath
       val feed = MergeOnRead.feedDir(spark, dir)
-      val ss = spark.newSession()
       // 2, not the replay family's 8: every per-batch frame here is
       // group-/changes-granularity (≤ a few hundred rows), and each
       // extra partition is a real task × (2 checkpoints + 2 writes +
       // 3 joins) × 3 batches of pure scheduling overhead
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
+      val ss = Extensions.newSession(spark,
+        "spark.sql.shuffle.partitions" -> "2")
       // base is consulted once per batch (first-touch retraction
       // lookups) plus the init aggregate — persist it across the loop
       val base = Tables(ss, dir, "orders")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.Extensions
 
 /** JOIN-VIEW incremental maintenance (r8 verdict #2) — the OTHER half
   * of classical IVM next to [[Ivm]]'s aggregate view: a stored
@@ -48,7 +49,7 @@ import graft.Tables
   * that derives the final joined state from scratch (MOR final table
   * ⋈ patched dim) with no knowledge of the delta machinery.
   */
-object JoinIvm {
+object JoinIvm extends graft.QueryModule {
 
   /** Dim-delta class: customers with md5 first nibble 'b' (~1/16). */
   private[graft] val DimHex = "b"
@@ -174,9 +175,9 @@ object JoinIvm {
       val root = Tables.scratchDir("graft_joinivm_stream_").getAbsolutePath
       val ckpt = Tables.scratchDir("graft_joinivm_sckpt_").getAbsolutePath
       val feed = MergeOnRead.feedDir(spark, dir)
-      val ss = spark.newSession()
       // view-granularity frames; 2 partitions like the MV stream
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
+      val ss = Extensions.newSession(spark,
+        "spark.sql.shuffle.partitions" -> "2")
       ss.read.parquet(storedViewDir(ss, dir))
         .write.mode("overwrite").parquet(s"$root/view/v0_init")
       val stream = ss.readStream.schema(ss.read.parquet(feed).schema)

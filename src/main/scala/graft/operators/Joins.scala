@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.ScalarFns._
+import graft.plans.Extensions
 
 /** Join operators (SURVEY.md §2.3) over the normalized schema the
   * reference's production design specifies (`SCALING.md:24-34`): the
@@ -19,7 +20,7 @@ import graft.functions.ScalarFns._
   * the physical plan is BroadcastNestedLoopJoin over a 4-row build side,
   * not a cartesian shuffle.
   */
-object Joins {
+object Joins extends graft.QueryModule {
 
   /** J1 + J2: fact⋈fact equi join then broadcast dim join, grouped
     * revenue per nation (`SCALING.md:27-29` revenue attribution). */
@@ -335,7 +336,6 @@ object Joins {
     // length-blocking of the DP happens at PLAN level: the rule
     // conjoins abs(length diff) <= maxDist ahead of the edit distance
     // (plan-asserted in FuseRuleSpec)
-    graft.plans.GuardLevenshtein.register(spark)
     val probes = FuzzyProbes.toDF("probe")
     Tables(spark, dir, "customer")
       .join(broadcast(probes),
@@ -433,11 +433,11 @@ object Joins {
     rfClones.synchronized {
       var ss = rfClones.get(spark)
       if (ss == null) {
-        ss = spark.newSession()
-        ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        ss.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        ss.conf.set("spark.sql.optimizer.runtime.bloomFilter." +
-          "applicationSideScanSizeThreshold", "0")
+        ss = Extensions.newSession(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter." +
+            "applicationSideScanSizeThreshold" -> "0")
         rfClones.put(spark, ss)
       }
       ss
@@ -455,7 +455,6 @@ object Joins {
   def revenueByPriorityJoinElim(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.JoinElim.declareFk(spark, s"$dir/orders.parquet",
       s"$dir/customer.parquet", "o_custkey", "c_custkey")
-    graft.plans.JoinElim.install(spark)
     val o = Tables(spark, dir, "orders")
     val c = Tables(spark, dir, "customer")
     o.join(c, o("o_custkey") === c("c_custkey"))

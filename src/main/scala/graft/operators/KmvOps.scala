@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.KmvFunctions
 
 /** KMV (k-minimum-values) distinct sketches with SET OPERATIONS — the
   * approximate tier between the exact bitmaps (2 B/user) and HLL
@@ -26,14 +25,13 @@ import graft.plans.KmvFunctions
   * carries ≤2 KiB blobs; the stored weekly rollup then answers any
   * regrouped range/overlap question at |weeks|-row cost.
   */
-object KmvOps {
+object KmvOps extends graft.QueryModule {
 
   /** Per-type distinct-user estimates from the direct aggregate; a
     * type below k=256 distinct users answers EXACTLY (n_kept < k ⇒
     * the sketch is the whole distinct hash set — pinned at sf0.001
     * in KmvSketchSpec). */
   def kmvUsersByType(spark: SparkSession, dir: String): DataFrame = {
-    KmvFunctions.register(spark)
     Tables(spark, dir, "events")
       .filter(col("user_id").isNotNull)
       .groupBy(col("event_type"))
@@ -51,7 +49,6 @@ object KmvOps {
     * always inside the union of their k-smallest), so the oracle
     * recomputes each month straight from raw rows. */
   def kmvMonthlyFromWeekly(spark: SparkSession, dir: String): DataFrame = {
-    KmvFunctions.register(spark)
     val weekly = Tables(spark, dir, "events")
       .filter(col("user_id").isNotNull)
       .select(date_trunc("week", col("ts")).cast("date").as("wk"),
@@ -72,7 +69,6 @@ object KmvOps {
     * Beyer et al. ratio estimator — set algebra HLL registers cannot
     * express. The pair join runs over |types| catalog rows. */
   def kmvTypeOverlap(spark: SparkSession, dir: String): DataFrame = {
-    KmvFunctions.register(spark)
     val sk = Tables(spark, dir, "events")
       .filter(col("user_id").isNotNull)
       .groupBy(col("event_type"))
@@ -99,7 +95,6 @@ object KmvOps {
     * KmvSketchSpec), and the oracle rebuilds each window from raw rows
     * to prove precisely that. */
   def dailyUsersRollingKmv(spark: SparkSession, dir: String): DataFrame = {
-    KmvFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val daily = Tables(spark, dir, "events")
       .filter(col("user_id").isNotNull)
@@ -128,7 +123,6 @@ object KmvOps {
     * at least one stored sketch, so the rebuilt blob differs — not
     * just its estimate. */
   def kmvUsersErasedRebuild(spark: SparkSession, dir: String): DataFrame = {
-    KmvFunctions.register(spark)
     Tables(spark, dir, "events")
       .filter(col("user_id").isNotNull &&
         substring(md5(col("user_id").cast("string")), 1, 1) =!= "a")

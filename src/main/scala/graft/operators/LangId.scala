@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.Extensions
 
 /** LANGUAGE IDENTIFICATION — the one standard LLM-corpus stage the
   * curation tier had not yet graded (CCNet/RefinedWeb/FineWeb all gate
@@ -52,7 +53,7 @@ import graft.Tables
   * widened DECIMAL(38,0)/HUGEINT before its ×10⁶ (the share-ppm
   * overflow lesson). No all-pairs, no driver-side math.
   */
-object LangId {
+object LangId extends graft.QueryModule {
 
   /** Hashed feature buckets (the [[Dsir.Buckets]] discipline). */
   private[graft] val Buckets = 64
@@ -87,11 +88,7 @@ object LangId {
   /** (doc_id, lang, b) — one row per char-3-gram OCCURRENCE, plus the
     * split flag; over an arbitrary docs frame (the streamed variant
     * scores micro-batches through this same code path). */
-  private def featuresOf(spark: SparkSession, docs: DataFrame): DataFrame = {
-    // register on the FRAME's session, not the caller's: foreachBatch
-    // hands micro-batch frames bound to an isolated session clone, and
-    // `char_grams` must resolve there (LangIdSpec's streamed arm)
-    graft.plans.CharGrams.register(docs.sparkSession)
+  private def featuresOf(docs: DataFrame): DataFrame = {
     planted(docs)
       .filter(length(col("text")) >= N)
       .select(col("doc_id"), col("lang"), isTrain.as("train"),
@@ -118,7 +115,7 @@ object LangId {
     * group). */
   private def tfStore(spark: SparkSession, dir: String): DataFrame =
     graft.sources.GramStore.serve(spark, "lid3tf", dir) {
-      featuresOf(spark, Tables(spark, dir, "documents"))
+      featuresOf(Tables(spark, dir, "documents"))
         .groupBy(col("doc_id"), col("lang"), col("train"), col("b"))
         .agg(count(lit(1)).as("tf"))
     }
@@ -281,7 +278,7 @@ object LangId {
     * eval set cannot change any prediction). */
   private[graft] def predictionsOf(spark: SparkSession, docs: DataFrame,
       m: DataFrame): DataFrame =
-    predictionsFrom(featuresOf(spark, docs).filter(!col("train")), m)
+    predictionsFrom(featuresOf(docs).filter(!col("train")), m)
 
   /** WHOLE-CORPUS predictions against the train-split model — the
     * [[CurationPipeline]] GATE consumption: a production langid gate
@@ -373,8 +370,8 @@ object LangId {
         .getAbsolutePath
       val ckpt = graft.Tables.scratchDir("graft_langid_sckpt_")
         .getAbsolutePath
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
+      val ss = Extensions.newSession(spark,
+        "spark.sql.shuffle.partitions" -> "2")
       model(ss, dir).write.mode("overwrite").parquet(s"$root/model")
       val evalDocs = Tables(ss, dir, "documents").filter(!isTrain)
       val feed = graft.Tables.scratchDir("graft_langid_feed_")

@@ -41,7 +41,7 @@ import graft.Tables
   * trailing touches with no later purchase end in NULL. Channels =
   * the four non-purchase event types.
   */
-object MarkovAttribution {
+object MarkovAttribution extends graft.QueryModule {
 
   /** Channel order is the output order and the matrix index order. */
   private[graft] val Channels = Seq("click", "error", "signup", "view")

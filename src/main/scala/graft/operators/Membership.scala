@@ -24,7 +24,7 @@ import graft.Tables
   * broadcast the bits and let ~96 % of probe rows skip the join
   * entirely — the exact-join then runs only on claimed rows.
   */
-object Membership {
+object Membership extends graft.QueryModule {
 
   /** Build-side predicate (shared with the oracle via [[thresholdSql]]). */
   private val BigSpenderMin = 450000.0
@@ -40,7 +40,6 @@ object Membership {
       s"shiftleft(CAST(1 AS BIGINT), p$i % 64)) <> 0"
 
   def bloomPrefilter(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.BloomSketch.register(spark)
     val orders = Tables(spark, dir, "orders")
     val big = orders.filter(col("o_totalprice") > BigSpenderMin)
     val bits = big.agg(

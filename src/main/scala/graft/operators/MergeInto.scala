@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.Extensions
 
 /** MERGE INTO semantics pinned as data (r8 verdict #3) — the
   * multi-arm writer contract every lakehouse ships (Delta/Iceberg
@@ -42,7 +43,7 @@ import graft.Tables
   * set-theoretically (the CTE algebra of the spec text), so the grade
   * pins that the operator IS that algebra.
   */
-object MergeInto {
+object MergeInto extends graft.QueryModule {
 
   private[graft] val UpdHex = Seq("2", "3")
   private[graft] val DelHex = Seq("c")
@@ -216,8 +217,8 @@ object MergeInto {
       val root = Tables.scratchDir("graft_merge_stream_").getAbsolutePath
       val ckpt = Tables.scratchDir("graft_merge_sckpt_").getAbsolutePath
       val feed = mergeFeedDir(spark, dir)
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
+      val ss = Extensions.newSession(spark,
+        "spark.sql.shuffle.partitions" -> "2")
       Tables(ss, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_orderstatus"), col("o_totalprice"))

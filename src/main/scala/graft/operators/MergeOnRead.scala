@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
+import graft.plans.Extensions
 
 /** MERGE-ON-READ — the lakehouse read path that resolves a base table
   * ∪ a CDC delta log AT READ TIME, without ever rewriting base (the
@@ -48,7 +49,7 @@ import graft.Tables
   * latest-version-wins is EXERCISED, not vacuous: keys in hex 0-1
   * carry three log versions; hex e-f keys are tombstoned.
   */
-object MergeOnRead {
+object MergeOnRead extends graft.QueryModule {
 
   /** (seq, slice hex chars, status label, price bump) — upsert feeds. */
   private[graft] val UpdSlices = Seq(
@@ -107,8 +108,8 @@ object MergeOnRead {
       val feed = feedDir(spark, dir)
       // cloned session: streaming conf hygiene (8 shuffle partitions
       // for the bounded replay), caller's session untouched
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = Extensions.newSession(spark,
+        "spark.sql.shuffle.partitions" -> "8")
       val out = Tables.scratchDir("graft_mor_log_").getAbsolutePath
       val ckpt = Tables.scratchDir("graft_mor_ckpt_").getAbsolutePath
       val stream = ss.readStream.schema(ss.read.parquet(feed).schema)

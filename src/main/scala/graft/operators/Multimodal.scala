@@ -24,7 +24,7 @@ import graft.Tables
   * see only small typed columns. At 100 TB the media bytes live in
   * parquet binary columns or object-store pointers — same plan shape.
   */
-object Multimodal {
+object Multimodal extends graft.QueryModule {
 
   final case class MediaRow(doc_id: Long, kind: String, payload: Array[Byte],
       width: Int, height: Int)

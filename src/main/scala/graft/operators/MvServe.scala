@@ -27,7 +27,7 @@ import graft.plans.MvRewrite
   * query is a catalog-sized read no matter how large the fact table
   * grows; freshness is [[Ivm]]'s delta-merge, not a re-aggregation.
   */
-object MvServe {
+object MvServe extends graft.QueryModule {
 
   /** Once-per-(JVM, corpus) stored MV:
     * status → (n = count(1), s = sum(cast(price as dec(18,2)))). */
@@ -45,12 +45,11 @@ object MvServe {
       d
     })
 
-  /** Build + register the MV and install the rule (idempotent). */
+  /** Build + register the MV (idempotent). */
   private[graft] def ready(spark: SparkSession, dir: String): Unit = {
     val d = mvDir(spark, dir)
     MvRewrite.register(spark, s"$dir/orders.parquet",
       MvRewrite.Entry("o_orderstatus", "o_totalprice", 18, 2, d))
-    MvRewrite.install(spark)
   }
 
   /** The user-shaped query — written against BASE orders; the rule

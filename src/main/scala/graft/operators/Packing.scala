@@ -42,7 +42,7 @@ import graft.Tables
   * is the fixed 2048-token request cap in `agent.py:44` — the same
   * fixed-window accounting, applied here to the training corpus.
   */
-object Packing {
+object Packing extends graft.QueryModule {
 
   /** Tokens per training sequence (a 2k context window). */
   private[graft] val PackTokens = 2048L

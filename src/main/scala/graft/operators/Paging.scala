@@ -24,7 +24,7 @@ import graft.Tables
   * point: the corpus has duplicate dates, so date-only pages would be
   * ambiguous — PagingSpec pins both facts).
   */
-object Paging {
+object Paging extends graft.QueryModule {
 
   private val PageSize = 20
   private val Skip = 40 // two pages — the graded page is page 3

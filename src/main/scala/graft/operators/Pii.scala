@@ -36,7 +36,7 @@ import graft.Tables
   * and classes (RE2-safe ⇒ linear-time, no catastrophic backtracking
   * even on Java's engine — no nested unbounded quantifiers).
   */
-object Pii {
+object Pii extends graft.QueryModule {
 
   /** RE2 ∩ Java regex common subset — no backslashes (survive SQL
     * string interpolation verbatim), no look-around, linear-time. */

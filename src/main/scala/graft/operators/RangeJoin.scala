@@ -32,7 +32,7 @@ import graft.Tables
   * the binned form contains no BroadcastNestedLoopJoin / CartesianProduct
   * node, while the naive form of the same query does.
   */
-object RangeJoin {
+object RangeJoin extends graft.QueryModule {
   /** Tolerance AND bin width, µs (they must be equal for the 3-probe
     * pigeonhole to cover the ball). */
   private[graft] val TolUs = 60L * 1000 * 1000

@@ -39,7 +39,7 @@ import graft.Tables
   * sum, so hash equality proves the decomposition exact, ties
   * included.
   */
-object RankTest {
+object RankTest extends graft.QueryModule {
 
   private val SegA = "BUILDING"
   private val SegB = "MACHINERY"

@@ -34,7 +34,7 @@ import graft.Tables
   * Recency ranks ascending on the NEGATED day count (≡ days DESC,
   * custkey ASC) so q5 = most recent on every axis.
   */
-object Rfm {
+object Rfm extends graft.QueryModule {
 
   private val Buckets = 16
 

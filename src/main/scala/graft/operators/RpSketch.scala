@@ -29,7 +29,7 @@ import graft.functions.ScalarFns
   * projections fold dimensions in fixed order (the [[Similarity]]
   * dot-product discipline), so every code is bit-identical cross-engine.
   */
-object RpSketch {
+object RpSketch extends graft.QueryModule {
   private[graft] val Bits = 16
   /** Embedding dimensionality of the driver corpus (TESTDATA.md). */
   private[graft] val Dim = 64
@@ -82,7 +82,6 @@ object RpSketch {
     * radius [[Radius]] over the int codes (no float math), exact
     * cosine re-rank of the survivors, top-10. */
   def rpTopk(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val codes = codesFrame(spark, dir)
     val qc = codes.filter(col("vec_id") === 0).select(col("code").as("qcode"))
     val e = Tables(spark, dir, "embeddings")
@@ -143,7 +142,6 @@ object RpSketch {
     * (band, value) — the cosineTopkBatch shape. Survivors re-rank by
     * exact cosine; n_bands (matching-band count) is the diagnostic. */
   def rpTopkBanded(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val codes = wideCodesFrame(spark, dir)
     val qb = codes.filter(col("vec_id") === 0)
       .select((0 until WideBands).map(i => col(s"b$i").as(s"q$i")): _*)
@@ -175,7 +173,6 @@ object RpSketch {
     * are PROVABLY a subset of the 8×8 gate's (spec-asserted). */
   private[graft] def rpTopkBanded16(spark: SparkSession, dir: String,
       k: Int = 10): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val codes = wideCodesFrame(spark, dir)
     val qb = codes.filter(col("vec_id") === 0)
       .select((0 until WideBands).map(i => col(s"b$i").as(s"q$i")): _*)

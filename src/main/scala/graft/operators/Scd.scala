@@ -33,7 +33,7 @@ import graft.functions.ScalarFns
   * only `closed ∪ newv` as a delta file and resolve on scan, which is
   * the [[graft.streaming.StreamReplay]] upsert-log idiom.
   */
-object Scd {
+object Scd extends graft.QueryModule {
   /** Merge effective date — every closed version ends here and every
     * new version starts here. */
   private val EffDate = "1998-06-01"

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.ScalarFns._
+import graft.plans.Extensions
 
 /** The reference's relational core — `query_crm` (`backend/tools.py:38-81`)
   * — generalized to the driver's star schema (FIXTURES.md §3 transposition:
@@ -27,7 +28,7 @@ import graft.functions.ScalarFns._
   * same key so AQE can plan a single exchange; `nation` is broadcast. No
   * driver-side collection anywhere.
   */
-object Segmentation {
+object Segmentation extends graft.QueryModule {
 
   /** Fixed as-of date: the day after the max o_orderdate in the testdata,
     * so "months since last order" is always non-negative. */
@@ -269,8 +270,8 @@ object Segmentation {
   // ----------------------------------------------------------------
 
   def segmentMetricsObserved(spark: SparkSession, sfDir: String): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.parquet.filterPushdown", "false")
+    val ss = Extensions.newSession(spark,
+      "spark.sql.parquet.filterPushdown" -> "false")
     val df = Tables(ss, sfDir, "customer")
       .filter(col("c_mktsegment") === "BUILDING" &&
         col("c_acctbal") >= 1000.0)
@@ -297,4 +298,32 @@ object Segmentation {
       |UNION ALL
       |SELECT 'scan', (SELECT count(*) FROM customer)
       |ORDER BY node""".stripMargin
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "segment_stats"   -> (statsQuery _),
+    "segment_preview" -> (previewQuery _),
+    "genre_overlap"   -> (genreOverlapQuery _),
+    "segment_active_stats" -> (activeStatsQuery _),
+    "segment_stats_empty"  -> (emptyStatsQuery _),
+    // S6: same stats routed through the TTL result cache — the key
+    // captures session, directory and the full filter descriptor, so a
+    // hit can never serve another scale factor's (or session's) result
+    "segment_stats_cached" -> ((s: SparkSession, dir: String) =>
+      graft.sources.ResultCache.getOrCompute(
+        s"${graft.sources.ResultCache.sessionId(s)}|segment_stats|$dir|${canonical.descriptor}",
+        ttlSeconds = 300)(statsQuery(s, dir))),
+    // observability-as-data: executed-plan numOutputRows per node
+    // graded vs semantic SQL counts (the reference's fan_count logs)
+    "segment_metrics_observed" -> (segmentMetricsObserved _),
+  )
+
+  val oracles: Map[String, String] = Map(
+    "segment_stats"   -> statsOracle,
+    "segment_preview" -> previewOracle,
+    "genre_overlap"   -> genreOverlapOracle,
+    "segment_active_stats" -> activeStatsOracle,
+    "segment_stats_empty"  -> emptyStatsOracle,
+    "segment_stats_cached" -> statsOracle,
+    "segment_metrics_observed" -> segmentMetricsOracle,
+  )
 }

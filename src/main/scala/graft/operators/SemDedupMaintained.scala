@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.Extensions
 
 /** SemDeDup LIFECYCLE (r10) — the semantic tier joins the maintenance
   * matrix. The lexical dedup index already grows, streams, compacts
@@ -40,7 +41,7 @@ import graft.Tables
   * election) with no knowledge of file sets or delete deltas; the
   * lifecycle oracle additionally drops every pair touching an erased
   * vector before the closure. */
-object SemDedupMaintained {
+object SemDedupMaintained extends graft.QueryModule {
 
   /** Same emit threshold as the one-shot tier. */
   private val Threshold = 0.3
@@ -51,7 +52,6 @@ object SemDedupMaintained {
     * fail the chop-invariance spec the hard way). */
   private def scoredPairs(s: SparkSession, dir: String,
       cand: DataFrame): DataFrame = {
-    graft.plans.VectorExpressions.register(s)
     val e = Tables(s, dir, "embeddings")
     cand
       .join(e.select(col("vec_id").as("vec_a"),
@@ -80,7 +80,6 @@ object SemDedupMaintained {
     * within-cell pair set by construction (spec-asserted). */
   private[graft] def pairState(spark: SparkSession, dir: String): PairState =
     states.computeIfAbsent(dir, { _ =>
-      graft.plans.VectorExpressions.register(spark)
       val root = Tables.scratchDir("graft_semdedup_maint_").getAbsolutePath
       val st = IvfMaintained.state(spark, dir)
       val assign = spark.read.parquet(st.root)
@@ -119,7 +118,6 @@ object SemDedupMaintained {
     * assigned FROZEN base centroid (one kernel per vector off the
     * stored lists). */
   private def centSims(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val st = IvfMaintained.state(spark, dir)
     val e = Tables(spark, dir, "embeddings")
     val cents = e.filter(!GraphOps.isNewVec)
@@ -203,13 +201,11 @@ object SemDedupMaintained {
   private[graft] def streamedPairsDir(spark: SparkSession,
       dir: String): String =
     streamedDirs.computeIfAbsent(dir, { _ =>
-      graft.plans.VectorExpressions.register(spark)
       val root = Tables.scratchDir("graft_semdedup_stream_").getAbsolutePath
       val ckpt = Tables.scratchDir("graft_semdedup_sckpt_").getAbsolutePath
       val st = IvfMaintained.state(spark, dir)
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
-      graft.plans.VectorExpressions.register(ss)
+      val ss = Extensions.newSession(spark,
+        "spark.sql.shuffle.partitions" -> "2")
       val e = Tables(ss, dir, "embeddings")
       val cents = e.filter(!GraphOps.isNewVec)
         .orderBy(col("vec_id")).limit(st.nlist)
@@ -245,7 +241,6 @@ object SemDedupMaintained {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
               batchId: Long) =>
             val s = batch.sparkSession
-            graft.plans.VectorExpressions.register(s)
             val prev =
               if (batchId == 0) s.read.parquet(s"$root/assign/v0_init")
               else s.read.parquet(s"$root/assign/v${batchId - 1}")

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * pairs. Candidate verification joins pair ids against per-doc
   * shingle arrays — cost ∝ verified candidates, not n².
   */
-object SetJoin {
+object SetJoin extends graft.QueryModule {
 
   /** Jaccard threshold τ = 6/10, carried as integers end to end. */
   private val TauNum = 6
@@ -208,7 +208,6 @@ object SetJoin {
   private def containmentGrams(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.sources.GramStore.wordGrams3(spark, dir)
     graft.sources.GramStore.serve(spark, "wg3cont", dir) {
-      graft.plans.WordGrams.register(spark)
       val excerpts = graft.Tables(spark, dir, "documents")
         .select(col("doc_id"), col("text"))
         .withColumn("t", graft.functions.Shingles.sparkToks)

@@ -24,7 +24,7 @@ import graft.Tables
   * finish. 100 TB: routing is embarrassingly parallel and the 8-row
   * fan-out is a constant, not a join.
   */
-object Sharding {
+object Sharding extends graft.QueryModule {
 
   private[graft] val NumShards = 8
 

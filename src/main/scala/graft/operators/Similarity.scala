@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.Extensions
 
 /** Near-duplicate detection + similarity search (north-star [N] rows,
   * SURVEY.md §2.11 N2/N3/N5).
@@ -25,7 +26,7 @@ import graft.Tables
   * the exploded shingle table — cost ∝ candidates × shingles/doc, not
   * docs².
   */
-object Similarity {
+object Similarity extends graft.QueryModule {
 
   /** Word-3-gram emission over an arbitrary (doc_id, text) frame — so
     * callers can restrict the DOCUMENT set (e.g. to LSH candidates)
@@ -37,7 +38,6 @@ object Similarity {
     * property-asserted in WordGramSpec, and the generator subsumes the
     * `size(t) >= 3` guard (fewer than 3 tokens ⇒ zero rows). */
   private[graft] def shinglesOf(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.plans.WordGrams.register(spark)
     docs.select(col("doc_id"), expr("word_grams(text, 3)").as("s"))
   }
 
@@ -221,65 +221,6 @@ object Similarity {
         graft.functions.ScalarFns.roundN(col("n_inter").cast("double")
           / (col("na") + col("nb") - col("n_inter")), 4).as("jaccard"))
       .orderBy("doc_a", "doc_b")
-  }
-
-  /** Stage-timing diagnostic for the word pair build (ProfPairs main):
-    * runs the same stages as [[neardupPairsUncached]], forcing each in
-    * order and printing elapsed wall-clock. NOT a graded path. */
-  private[graft] def profilePairStages(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[prof] $label%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-    val raw = shinglesOf(spark, fanOut(spark, Tables(spark, dir, "documents")))
-    timed("gram scan only")(raw.count())
-    val slices = (0 to 3).map(i =>
-      substring(md5(col("s")), 1 + 8 * i, 8).as(s"h$i"))
-    val sigCols = (0 to 3).map(i => min(col(s"h$i")).as(s"m$i"))
-    val sigs = raw.select(Seq(col("doc_id")) ++ slices: _*)
-      .groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
-    val bands = sigs
-      .select(col("doc_id"), explode(array((0 to 3).map(i =>
-        struct(lit(i).as("band"), col(s"m$i").as("m"))): _*)).as("bm"))
-      .select(col("doc_id"), col("bm.band").as("band"), col("bm.m").as("m"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    timed("signatures+bands")(bands.count())
-    val cand = bands.select(col("doc_id").as("doc_a"), col("band"), col("m"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("m")),
-        Seq("band", "m"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    timed("band self-join → cand")(cand.count())
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id")))
-      .distinct()
-    val docGrams = shinglesOf(spark, fanOut(spark,
-        Tables(spark, dir, "documents").join(broadcast(candDocs), Seq("doc_id"))))
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
-      .groupBy(col("doc_id"))
-      .agg(collect_set(col("h")).as("hs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    timed("cand gram-hash sets")(docGrams.count())
-    val result = cand
-      .join(broadcast(docGrams.select(col("doc_id").as("doc_a"),
-        col("hs").as("ha"), size(col("hs")).as("na"))), Seq("doc_a"))
-      .join(broadcast(docGrams.select(col("doc_id").as("doc_b"),
-        col("hs").as("hb"), size(col("hs")).as("nb"))), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("ha"), col("hb"))).cast("bigint").as("n_inter"),
-        col("na"), col("nb"))
-      .filter(col("n_inter") > 0)
-      .select(col("doc_a"), col("doc_b"), col("n_inter"),
-        graft.functions.ScalarFns.roundN(col("n_inter").cast("double")
-          / (col("na") + col("nb") - col("n_inter")), 4).as("jaccard"))
-    timed("set-intersect verify")(result.count())
-    Seq(bands, cand, docGrams).foreach(df =>
-      try { df.unpersist(); () } catch { case _: Throwable => () })
   }
 
   // CHARACTER 9-gram shingles of the lowercased text — the robustness
@@ -512,14 +453,14 @@ object Similarity {
   // entries are collectable once the parent session is dropped.
   private val loopSessions =
     new java.util.WeakHashMap[SparkSession, SparkSession]()
-  private[operators] def loopSession(spark: SparkSession): SparkSession =
+  private[graft] def loopSession(spark: SparkSession): SparkSession =
     loopSessions.synchronized {
       val cur = loopSessions.get(spark)
       if (cur != null) cur
       else {
-        val ss = spark.newSession()
-        ss.conf.set("spark.sql.adaptive.enabled", "false")
-        ss.conf.set("spark.sql.shuffle.partitions", LoopParts.toString)
+        val ss = Extensions.newSession(spark,
+          "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> LoopParts.toString)
         loopSessions.put(spark, ss)
         ss
       }
@@ -1153,7 +1094,6 @@ object Similarity {
     * pre-buckets by LSH band and prunes candidates before the pairwise
     * math (see neardupPairs). */
   def cosineTopk(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     e.filter(col("vec_id") =!= 0)
@@ -1186,7 +1126,6 @@ object Similarity {
   /** vec × centroid cosine scores — shared by assignment (argmax) and
     * multi-probe query routing (top-nprobe). */
   private[graft] def ivfSims(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val nlist = e.agg(ceil(sqrt(count(lit(1)))).as("nlist"))
     val cent = e.crossJoin(broadcast(nlist))
@@ -1222,7 +1161,6 @@ object Similarity {
     * bounded by bucket quality (nprobe=1 here); raise nprobe by
     * unioning neighbor buckets. */
   def cosineTopkIvf(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val assign = ivfAssign(spark, dir)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -1286,7 +1224,6 @@ object Similarity {
 
   private def embeddingNeardupUncached(spark: SparkSession, dir: String,
       threshold: Double): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val assign = ivfAssign(spark, dir)
     val withVec = e.join(assign, Seq("vec_id"))
@@ -1345,7 +1282,6 @@ object Similarity {
     * back through [[ivfSims]] would re-run the N×√N sweep). */
   private[graft] def assignCentroidSim(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val nlist = e.agg(ceil(sqrt(count(lit(1)))).as("nlist"))
     val cent = e.crossJoin(broadcast(nlist))
@@ -1499,7 +1435,6 @@ object Similarity {
     * a broadcast join (|labels| centroid rows) + per-label windows
     * over label-bounded groups. */
   def labelPrototypes(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val e = Tables(spark, dir, "embeddings")
     val flat = e
@@ -1561,7 +1496,6 @@ object Similarity {
     * O(Q·√N) instead of Q separate jobs. */
   def cosineTopkBatch(spark: SparkSession, dir: String,
       nQueries: Int = 8, k: Int = 3): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val assign = ivfAssign(spark, dir)
     // query set = the first nQueries vectors, each tagged with its own
@@ -1674,7 +1608,6 @@ object Similarity {
 
   private def kmeansAssignRUncached(spark: SparkSession, dir: String,
       r: Int): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id").orderBy(col("s").desc, col("cid"))
@@ -1691,7 +1624,6 @@ object Similarity {
     * [[cosineTopkIvf]], but the bucket boundary is the refined one —
     * the learned-centroid recall/speed point of the IVF family. */
   def cosineTopkKmeans(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val assign = kmeansAssign(spark, dir)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -1756,7 +1688,6 @@ object Similarity {
   /** (vec_id, m, code, d): every vector × codebook entry × subspace
     * squared distance, unpivoted — the encode search space. */
   private def pqPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val dists = (0 until PqM).map { m =>
       expr(sqDistExpr("embedding", "cv",
         m * PqSub + 1, (m + 1) * PqSub)).as(s"d$m")
@@ -1827,7 +1758,6 @@ object Similarity {
 
   private def ivfPqTopkUncached(spark: SparkSession, dir: String, k: Int,
       nprobe: Int): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val assign = ivfAssign(spark, dir)
@@ -1966,7 +1896,6 @@ object Similarity {
     graft.sources.ResultCache.getOrCompute(
       s"${graft.sources.ResultCache.sessionId(spark)}|pq_codes_learned|$dir|$r",
       ttlSeconds = 300) {
-      graft.plans.VectorExpressions.register(spark)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("vec_id", "m").orderBy(col("d"), col("code"))
       val enc = fanOut(spark, Tables(spark, dir, "embeddings"), key = "vec_id")
@@ -2035,7 +1964,6 @@ object Similarity {
     graft.sources.ResultCache.getOrCompute(
       s"${graft.sources.ResultCache.sessionId(spark)}|pq_methods_topk|$dir|$k",
       ttlSeconds = 300) {
-      graft.plans.VectorExpressions.register(spark)
       val e = Tables(spark, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
       val sumCols = graft.functions.ScalarFns.roundN(
@@ -2141,7 +2069,6 @@ object Similarity {
     * — shared by the confusion matrix and the per-class F1 board. */
   private[graft] def knnPredictions(spark: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = fanOut(spark,
       e.select(col("vec_id").as("qid"), col("embedding").as("qv"),
@@ -2300,7 +2227,6 @@ object Similarity {
 
   private[graft] def exactL2TopkIds(spark: SparkSession, dir: String,
       k: Int): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     graft.sources.ResultCache.getOrCompute(
@@ -2318,7 +2244,6 @@ object Similarity {
   }
 
   def pqRecall(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     // the exact-L2 baseline is referenced by all SEVEN method branches
@@ -2356,7 +2281,6 @@ object Similarity {
     * of this column is the convergence diagnostic a production loop
     * would threshold on. */
   def kmeansShift(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     kmeansCentroids(spark, dir)
       .join(e.select(col("vec_id").as("cid"), col("embedding").as("cv0")),
@@ -2378,7 +2302,6 @@ object Similarity {
     * vectors needs no normalization. */
   def kmeansRoundDrift(spark: SparkSession, dir: String,
       rounds: Int = KmeansRounds): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val frames = (1 to rounds).map { r =>
       val prev =
@@ -2417,7 +2340,6 @@ object Similarity {
     * computed on the Spark side (the oracle, being one SQL statement,
     * evaluates its full chain — only the picked row is compared). */
   def kmeansConvergedRounds(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     var r = 1
     var minDrift = 0.0
@@ -2447,7 +2369,6 @@ object Similarity {
     * data. Returns (frozen centroids, rounds run). */
   def kmeansConverge(spark: SparkSession, dir: String,
       eps: Double = KmeansEps, maxRounds: Int = KmeansMaxRounds): (DataFrame, Int) = {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     var r = 1
     var done = false

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Extensions
 
 /** Skew mitigation (SURVEY.md §4.2 "salting for skew"). AQE's runtime
   * skew-join split covers most cases; explicit salting is for the
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   * multiplies the build side by n — choose n ≈ hot-key-rows /
   * target-partition-rows, and keep the build side the smaller input.
   */
-object Skew {
+object Skew extends graft.QueryModule {
 
   /** Graded form: nation-level revenue through an 8-way SALTED
     * orders⋈customer join — result must equal the unsalted join
@@ -49,15 +50,14 @@ object Skew {
     * decided by the ENGINE at runtime instead of by the author. */
   def aqeSkewRevenue(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    ss.conf.set("spark.sql.adaptive.enabled", "true")
-    ss.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    ss.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    ss.conf.set(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "2k")
-    ss.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
+    val ss = Extensions.newSession(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
+      "spark.sql.shuffle.partitions" -> "8")
     skewedJoinFrame(ss, dir)
   }
 

@@ -47,7 +47,7 @@ import graft.Tables
   * bucket granularity, not row granularity. At 100 TB raise B — the
   * cross-bucket frame stays catalog-sized.
   */
-object Skyline {
+object Skyline extends graft.QueryModule {
 
   /** Price-range fan-out (16 here; hundreds at 100 TB). */
   private[graft] val Buckets = 16

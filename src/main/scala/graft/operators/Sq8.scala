@@ -40,7 +40,7 @@ import graft.functions.ScalarFns.roundN
   * segments in Python floats); this tier is the storage-efficiency
   * path such a service grows into.
   */
-object Sq8 {
+object Sq8 extends graft.QueryModule {
 
   private[graft] val Dims = 64
 

@@ -34,7 +34,7 @@ import graft.functions.ScalarFns
   * cost O(groups). Never a second pass over the data — this is the
   * textbook one-pass sufficient-statistics layout.
   */
-object Stats {
+object Stats extends graft.QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
 
@@ -510,7 +510,6 @@ object Stats {
     * a one-row LocalRelation, spec-asserted). The oracle RUNS the
     * count — metadata service must be invisible. */
   def ordersCountMetadata(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.MetadataCount.install(spark)
     Tables(spark, dir, "orders")
       .groupBy().agg(count(lit(1)).as("n_orders"))
   }
@@ -679,7 +678,6 @@ object Stats {
     * a high-cardinality key and a low-cardinality enum (the two
     * regimes: raw vs linear-counting branch). */
   def ordersNdvApprox(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.SketchFunctions.register(spark)
     val o = Tables(spark, dir, "orders")
     def row(c: String): DataFrame =
       o.agg(countDistinct(col(c)).as("n_distinct_exact"),
@@ -702,7 +700,6 @@ object Stats {
     * hash-matches the DuckDB nibble-chain rebuild per column, so the
     * swap's accuracy is regression-guarded across all 6 columns. */
   def ordersColumnStatsSketched(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.SketchFunctions.register(spark)
     val o = Tables(spark, dir, "orders")
     // the sketch hashes the CANONICAL TEXT of each value (the
     // Integrity rendering discipline): bigints/strings cast directly,

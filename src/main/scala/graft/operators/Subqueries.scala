@@ -28,7 +28,7 @@ import graft.Tables
   * screens against it) — the same intent a SQL user states in one
   * statement as a correlated subquery against the group's aggregate.
   */
-object Subqueries {
+object Subqueries extends graft.QueryModule {
 
   private val LateMicros = 5184000000000L // 60 days, exact µs
 

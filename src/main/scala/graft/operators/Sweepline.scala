@@ -30,7 +30,7 @@ import graft.Tables
   * against the level carried INTO the month (its L_prev), so a month
   * whose events only close orders still reports the inherited plateau.
   */
-object Sweepline {
+object Sweepline extends graft.QueryModule {
 
   /** (date, starts, ends, lvl) — the per-date sweep frame. */
   private def sweepFrame(spark: SparkSession, dir: String): DataFrame = {

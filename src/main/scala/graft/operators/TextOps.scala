@@ -19,7 +19,7 @@ import graft.functions.ScalarFns.{roundN, roundSql}
   * multiplies rows by tokens/doc, but partial aggregation collapses them
   * back before the exchange.
   */
-object TextOps {
+object TextOps extends graft.QueryModule {
 
   /** Shared stopword list (quality scoring + language ID). */
   val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
@@ -121,7 +121,6 @@ object TextOps {
     * error is acceptable — constant memory instead of a shuffle keyed
     * by every distinct term. */
   def cmsTermCounts(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.CmsSketch.register(spark)
     val terms = Tables(spark, dir, "documents").select(explode(toks).as("term"))
     val sketch = terms.agg(expr("cms_sketch(term)").as("cms"))
     val ests = (0 until graft.plans.CmsSketch.D).map { i =>
@@ -262,7 +261,6 @@ object TextOps {
     // Emission is the POSITIONED streaming generator (r5): same
     // 0-based ordinal as the posexplode-of-HOF form it replaced
     // (parity in WordGramSpec), no per-row token/gram arrays.
-    graft.plans.WordGrams.register(spark)
     Tables.fanOut(spark, Tables(spark, dir, "documents"))
       .select(col("doc_id"),
         expr("word_grams_pos(text, 3)").as(Seq("pos", "s")))

@@ -32,7 +32,7 @@ import graft.functions.{ScalarFns, Shingles}
   *    than classic BM25 — documented, deliberate, and the per-term
   *    machinery (df, tf, length normalization) is exactly BM25's.
   */
-object TextSignals {
+object TextSignals extends graft.QueryModule {
 
   private def toks: Column = Shingles.sparkToks
 

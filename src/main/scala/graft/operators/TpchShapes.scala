@@ -38,7 +38,7 @@ import graft.Tables
   * the same statements modulo engine spellings (`epoch_us`, `//`),
   * so hash equality pins the semantics, not a reimplementation.
   */
-object TpchShapes {
+object TpchShapes extends graft.QueryModule {
 
   private def cents(colSql: String): String =
     s"CAST(CAST($colSql AS DECIMAL(18,2)) * 100 AS BIGINT)"

@@ -40,7 +40,7 @@ import graft.Tables
   * keep set prevents, and why vacuum pairs with snapshot retention
   * (here: v1 explicitly expired) rather than mtime heuristics alone.
   */
-object Vacuum {
+object Vacuum extends graft.QueryModule {
 
   /** Post-vacuum state: (data dir, v2 manifest names, deleted names). */
   private[graft] final case class VacState(dataDir: String,

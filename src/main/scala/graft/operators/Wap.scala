@@ -37,7 +37,7 @@ import graft.Tables
   * publish is a metadata swap — the pattern's whole point is that the
   * expensive part (the audit) runs BEFORE visibility, not after an
   * incident. */
-object Wap {
+object Wap extends graft.QueryModule {
 
   private def dateCol: Column = to_date(col("o_orderdate"))
 

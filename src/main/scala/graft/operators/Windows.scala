@@ -15,7 +15,7 @@ import graft.Tables
   * frame is a RANGE frame over epoch-millis, which Spark evaluates with
   * a sliding two-pointer over the sorted partition (O(n) per key).
   */
-object Windows {
+object Windows extends graft.QueryModule {
 
   /** W3: rank by spend and lag/lead over time per customer. All window
     * orderings carry a unique tiebreaker (o_orderkey) — deterministic

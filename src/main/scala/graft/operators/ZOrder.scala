@@ -37,7 +37,7 @@ import graft.Tables
   * disjointness on the curve, fewer candidate files than a single-key
   * sort for a date predicate) is asserted in `ZOrderSpec`.
   */
-object ZOrder {
+object ZOrder extends graft.QueryModule {
   /** Output files for the z-layout copy — 4 Morton bits ≈ a 4×4 grid
     * over the two dimensions, enough for skipping to be observable at
     * every shipped SF. */
@@ -356,7 +356,6 @@ object ZOrder {
   private[graft] def zBloomManifestDir(spark: SparkSession,
       sfDir: String): String =
     zBloomDirs.computeIfAbsent(sfDir, { _ =>
-      graft.plans.BloomSketch.register(spark)
       val (data, _) = zorderedOrders(spark, sfDir)
       val out = Tables.scratchDir("graft_zbloom_manifest_").getAbsolutePath
       spark.read.parquet(data)

@@ -185,7 +185,9 @@ object AsOf {
     * rightTime <= leftTime` (latest match wins). With
     * `forward = true`: `rightTime >= leftTime`, earliest match wins.
     * `tolerance` (if set) bounds the match's time distance — the
-    * pandas `merge_asof(direction=…, tolerance=…)` surface. */
+    * pandas `merge_asof(direction=…, tolerance=…)` surface. Plans in
+    * sessions [[Extensions.install]] has reached (it adds
+    * [[AsOfJoinStrategy]]). */
   def join(leftDf: DataFrame, rightDf: DataFrame,
       leftKey: Column, rightKey: Column,
       leftTime: Column, rightTime: Column,
@@ -219,9 +221,6 @@ object AsOf {
       }
       tsType(leftTime, "left"); tsType(rightTime, "right")
     }
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     GraftSqlBridge.ofRows(spark, AsOfJoinPlan(
       leftDf.queryExecution.analyzed, rightDf.queryExecution.analyzed,
       GraftSqlBridge.expr(leftKey), GraftSqlBridge.expr(rightKey),

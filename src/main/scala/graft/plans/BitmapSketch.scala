@@ -352,7 +352,7 @@ case class BitmapMergeCount(
 /** `bitmap_card(blob)` → cardinality of ONE stored bitmap (scalar) —
   * reading a rollup row without re-aggregation. NOT named
   * `bitmap_count`: Spark 4 ships a BUILT-IN of that name (raw popcount
-  * over the bytes), and [[Registry.registerOnce]] defers to existing
+  * over the bytes), and [[Extensions.install]] defers to existing
   * functions — a same-name registration would silently resolve to the
   * built-in and count container METADATA bits as members. */
 case class BitmapCount(child: Expression)
@@ -408,28 +408,4 @@ case class BitmapAndNotCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BitmapAndNotCount =
     copy(left = newLeft, right = newRight)
-}
-
-object BitmapFunctions {
-  /** Register the bitmap family (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    def one(name: String, f: Expression => Expression): Unit =
-      Registry.registerOnce(spark, name, { exprs =>
-        require(exprs.length == 1,
-          s"$name takes exactly 1 argument, got ${exprs.length}")
-        f(exprs.head)
-      })
-    one("bitmap_distinct", BitmapDistinct(_))
-    one("bitmap_state", BitmapState(_))
-    one("bitmap_merge_count", BitmapMergeCount(_))
-    one("bitmap_card", BitmapCount(_))
-    def two(name: String, f: (Expression, Expression) => Expression): Unit =
-      Registry.registerOnce(spark, name, { exprs =>
-        require(exprs.length == 2,
-          s"$name takes exactly 2 arguments, got ${exprs.length}")
-        f(exprs(0), exprs(1))
-      })
-    two("bitmap_and_count", BitmapAndCount(_, _))
-    two("bitmap_andnot_count", BitmapAndNotCount(_, _))
-  }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -125,12 +124,4 @@ object BloomSketch {
     val kb = key.getBytes("UTF-8")
     (0 until K).map(i => position(md, s"$i:".getBytes("UTF-8"), kb))
   }
-
-  /** Register `bloom_sketch` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "bloom_sketch", { exprs =>
-      require(exprs.length == 1,
-        s"bloom_sketch takes exactly 1 argument, got ${exprs.length}")
-      BloomSketch(exprs.head)
-    })
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
@@ -125,17 +124,4 @@ case class CharGrams(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression): CharGrams =
     copy(child = newChild)
-}
-
-object CharGrams {
-  /** Register `char_grams(str, n)` (n: foldable int literal) into the
-    * session registry — the same idempotent path as the sketch
-    * aggregates (U2). */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "char_grams", { exprs =>
-      require(exprs.length == 2 && exprs(1).foldable,
-        "char_grams(str, n): n must be a literal")
-      CharGrams(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue())
-    })
 }

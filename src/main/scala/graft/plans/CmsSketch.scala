@@ -1,7 +1,6 @@
 package graft.plans
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -103,12 +102,4 @@ case class CmsSketch(
 object CmsSketch {
   val D = 4   // hash rows
   val W = 256 // counters per row (one md5 byte)
-
-  /** Register `cms_sketch` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "cms_sketch", { exprs =>
-      require(exprs.length == 1,
-        s"cms_sketch takes exactly 1 argument, got ${exprs.length}")
-      CmsSketch(exprs.head)
-    })
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
@@ -108,12 +107,4 @@ object DedupSignature {
     InternalRow(hex8(mins(0)), hex8(mins(1)), hex8(mins(2)), hex8(mins(3)),
       UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hashes, d)))
   }
-
-  /** Register `dedup_signature(str)` — the idempotent registry path of
-    * [[WordGrams]]. */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "dedup_signature", { exprs =>
-      require(exprs.length == 1, "dedup_signature(str) takes one argument")
-      DedupSignature(exprs.head)
-    })
 }

@@ -80,11 +80,4 @@ object GuardLevenshtein extends Rule[LogicalPlan] with PredicateHelper {
       val g = withGuards(cond)
       if (g.fastEquals(cond)) j else j.copy(condition = Some(g))
   }
-
-  /** Inject into a session's optimizer (idempotent) — the same
-    * per-query defensive registration the as-of strategy uses. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(GuardLevenshtein))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GuardLevenshtein
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -101,22 +100,4 @@ case class HistSketch(
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildInternal(newChild: Expression): HistSketch =
     copy(child = newChild)
-}
-
-object HistSketch {
-  /** Register `hist_sketch(value, lo, hi, bins)` (lo/hi/bins must be
-    * foldable literals — the sketch shape is a plan-time constant). */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "hist_sketch", { exprs =>
-      require(exprs.length == 4,
-        s"hist_sketch takes (value, lo, hi, bins), got ${exprs.length} args")
-      def lit(e: Expression, what: String): Any = {
-        require(e.foldable, s"hist_sketch: $what must be a literal")
-        e.eval(InternalRow.empty)
-      }
-      HistSketch(exprs.head,
-        lit(exprs(1), "lo").asInstanceOf[Double],
-        lit(exprs(2), "hi").asInstanceOf[Double],
-        lit(exprs(3), "bins").asInstanceOf[Int])
-    })
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -260,25 +259,4 @@ case class HllMerge(
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildInternal(newChild: Expression): HllMerge =
     copy(child = newChild)
-}
-
-object SketchFunctions {
-  /** Register `hll_sketch` + the stored-sketch pair (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "hll_sketch", { exprs =>
-      require(exprs.length == 1,
-        s"hll_sketch takes exactly 1 argument, got ${exprs.length}")
-      HllSketch(exprs.head)
-    })
-    Registry.registerOnce(spark, "hll_state", { exprs =>
-      require(exprs.length == 1,
-        s"hll_state takes exactly 1 argument, got ${exprs.length}")
-      HllState(exprs.head)
-    })
-    Registry.registerOnce(spark, "hll_merge", { exprs =>
-      require(exprs.length == 1,
-        s"hll_merge takes exactly 1 argument, got ${exprs.length}")
-      HllMerge(exprs.head)
-    })
-  }
 }

@@ -68,12 +68,6 @@ object JoinElim extends Rule[LogicalPlan] {
     registry.put(memoKey, Fk(memoKey._1, memoKey._2, fkCol, pkCol)); ()
   }
 
-  /** Idempotent per-session install (the GuardLevenshtein idiom). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(JoinElim))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ JoinElim
-
   private def rootPaths(spark: SparkSession, path: String): Set[String] =
     scanned(spark.read.parquet(path).queryExecution.analyzed)
       .getOrElse(Set(path))
@@ -177,11 +171,6 @@ object DistinctElim extends Rule[LogicalPlan] {
     require(dups == 0, s"$col0 has $dups duplicated values — not unique")
     registry.put(key, col0); ()
   }
-
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(DistinctElim))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ DistinctElim
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (registry.isEmpty) return plan

@@ -2,7 +2,6 @@ package graft.plans
 
 import java.security.MessageDigest
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
@@ -304,30 +303,4 @@ case class KmvSetOps(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): KmvSetOps =
     copy(left = newLeft, right = newRight)
-}
-
-object KmvFunctions {
-  /** Register the KMV family (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "kmv_sketch", { exprs =>
-      require(exprs.length == 1,
-        s"kmv_sketch takes exactly 1 argument, got ${exprs.length}")
-      KmvSketch(exprs.head)
-    })
-    Registry.registerOnce(spark, "kmv_state", { exprs =>
-      require(exprs.length == 1,
-        s"kmv_state takes exactly 1 argument, got ${exprs.length}")
-      KmvState(exprs.head)
-    })
-    Registry.registerOnce(spark, "kmv_merge", { exprs =>
-      require(exprs.length == 1,
-        s"kmv_merge takes exactly 1 argument, got ${exprs.length}")
-      KmvMerge(exprs.head)
-    })
-    Registry.registerOnce(spark, "kmv_ops", { exprs =>
-      require(exprs.length == 2,
-        s"kmv_ops takes exactly 2 arguments, got ${exprs.length}")
-      KmvSetOps(exprs(0), exprs(1))
-    })
-  }
 }

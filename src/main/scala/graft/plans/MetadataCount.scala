@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
@@ -27,20 +26,17 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   *  - the relation must be a parquet [[HadoopFsRelation]], and EVERY
   *    listed input file must be a parquet file — anything else bails
   *    to the scan;
+  *  - the relation must not be streaming: a streaming global count
+  *    is a running total kept in state, which one micro-batch's
+  *    footers cannot stand in for;
   *  - any footer-read failure bails to the scan (the rule is an
   *    optimization, never a correctness dependency).
   *
-  * Installed per session via `experimental.extraOptimizations` (the
-  * [[GuardLevenshtein]]/[[MvRewrite]] idiom); runs in the user batch
+  * Installed by [[Extensions.install]] into
+  * `experimental.extraOptimizations`; runs in the user batch
   * after column pruning, so the replaced subtree is exactly what the
   * scan would have been. */
 object MetadataCount extends Rule[LogicalPlan] {
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(MetadataCount))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MetadataCount
-  }
 
   private def isCountStar(e: NamedExpression): Boolean = e match {
     case Alias(ae: AggregateExpression, _)
@@ -76,7 +72,7 @@ object MetadataCount extends Rule[LogicalPlan] {
     case agg @ Aggregate(Seq(), aggExprs, child, _)
         if aggExprs.nonEmpty && aggExprs.forall(isCountStar) =>
       bareRelation(child) match {
-        case Some(lr) => lr.relation match {
+        case Some(lr) if !lr.isStreaming => lr.relation match {
           case fs: HadoopFsRelation
               if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
             footerCount(fs) match {
@@ -87,7 +83,7 @@ object MetadataCount extends Rule[LogicalPlan] {
             }
           case _ => agg
         }
-        case None => agg
+        case _ => agg
       }
   }
 }

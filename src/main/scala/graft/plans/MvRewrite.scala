@@ -47,8 +47,8 @@ import org.apache.spark.sql.types.DecimalType
   * reference resolves unchanged — the standard exprId-grafting move
   * for optimizer-time plan substitution.
   *
-  * Installed per session via `experimental.extraOptimizations` (the
-  * [[GuardLevenshtein]] idiom); the rewritten plan contains no
+  * Installed by [[Extensions.install]] into
+  * `experimental.extraOptimizations`; the rewritten plan contains no
   * Aggregate, so re-application is a no-op.
   */
 object MvRewrite extends Rule[LogicalPlan] {
@@ -67,12 +67,6 @@ object MvRewrite extends Rule[LogicalPlan] {
       .getOrElse(Set(basePath))
     registry.put(key, e); ()
   }
-
-  /** Idempotent per-session install (GuardLevenshtein idiom). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(MvRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite
 
   /** The qualified root paths of a bare (or pure-Project-wrapped)
     * file-source relation; None for any other child shape — which is

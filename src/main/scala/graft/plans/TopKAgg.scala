@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -112,21 +111,4 @@ case class TopKAgg(
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TopKAgg =
     copy(left = newLeft, right = newRight)
-}
-
-object TopKAgg {
-  /** Register `top_k_by(value, key, k)` (k a literal int; idempotent). */
-  def register(spark: SparkSession): Unit =
-    Registry.registerOnce(spark, "top_k_by", { exprs =>
-      require(exprs.length == 3,
-        s"top_k_by takes (value, key, k), got ${exprs.length} args")
-      val k = exprs(2) match {
-        case Literal(v: Int, IntegerType) => v
-        case other =>
-          throw new IllegalArgumentException(
-            s"top_k_by k must be a literal INT, got $other")
-      }
-      require(k > 0, "top_k_by k must be positive")
-      TopKAgg(exprs(0), exprs(1), k)
-    })
 }

@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Custom Catalyst expression tier (SURVEY.md §4.2 / §7.3): a fused
   * cosine-similarity kernel over two `array<float>` columns.
@@ -188,46 +186,4 @@ case class SqDistSlice(x: Expression, xoff: Expression, c: Expression,
       newChildren: IndexedSeq[Expression]): Expression =
     copy(x = newChildren(0), xoff = newChildren(1), c = newChildren(2),
       coff = newChildren(3), len = newChildren(4))
-}
-
-/** Idempotent session-registry registration, shared by every custom
-  * function: query builders call register defensively, so a 50-query
-  * session would otherwise re-register (and WARN) once per query. */
-object Registry {
-  def registerOnce(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-  }
-}
-
-object VectorExpressions {
-  /** Register the vector kernels into a session's function registry (U2). */
-  def register(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "cosine_sim",
-      exprs => CosineSim(exprs(0), exprs(1)))
-    Registry.registerOnce(spark, "sq_dist_slice",
-      exprs => SqDistSlice(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)))
-  }
-}
-
-/** SparkSessionExtensions entry point — the (c)-tier registration path:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions` wires the custom
-  * function into every session without touching user code. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("sq_dist_slice"),
-      new ExpressionInfo(classOf[SqDistSlice].getName, "sq_dist_slice"),
-      (exprs: Seq[Expression]) =>
-        SqDistSlice(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))))
-    e.injectOptimizerRule(_ => FuseCosineHof)
-    e.injectOptimizerRule(_ => GuardLevenshtein)
-  }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, UnaryExpression}
@@ -150,25 +149,4 @@ case class WordGrams(child: Expression, n: Int,
 
   override protected def withNewChildInternal(newChild: Expression): WordGrams =
     copy(child = newChild)
-}
-
-object WordGrams {
-  /** Register `word_grams(str, n)` and its positioned twin
-    * `word_grams_pos(str, n)` (n: foldable int literal) — same
-    * idempotent registry path as [[CharGrams]]. */
-  def register(spark: SparkSession): Unit = {
-    Registry.registerOnce(spark, "word_grams", { exprs =>
-      require(exprs.length == 2 && exprs(1).foldable,
-        "word_grams(str, n): n must be a literal")
-      WordGrams(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue())
-    })
-    Registry.registerOnce(spark, "word_grams_pos", { exprs =>
-      require(exprs.length == 2 && exprs(1).foldable,
-        "word_grams_pos(str, n): n must be a literal")
-      WordGrams(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        withPosition = true)
-    })
-  }
 }

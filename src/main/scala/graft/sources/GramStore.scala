@@ -65,7 +65,6 @@ object GramStore {
     * audit that joins the two. */
   def wordGrams3(spark: SparkSession, dir: String): DataFrame =
     serve(spark, "wg3", dir) {
-      graft.plans.WordGrams.register(spark)
       graft.Tables(spark, dir, "documents")
         .select(col("doc_id"), expr("word_grams(text, 3)").as("tok"))
         .distinct()
@@ -86,7 +85,6 @@ object GramStore {
     * instead of re-decoding + re-tokenizing the text. */
   def charGrams9(spark: SparkSession, dir: String): DataFrame =
     serve(spark, "cg9", dir) {
-      graft.plans.CharGrams.register(spark)
       graft.Tables.fanOut(spark, graft.Tables(spark, dir, "documents"))
         .withColumn("lt", lower(col("text")))
         .filter(length(col("lt")) >= 9)

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.plans.Extensions
 
 /** ST7 as a DRIVER-VISIBLE graded query: the events table replayed
   * through a REAL Structured Streaming execution (file streaming source
@@ -42,7 +43,7 @@ import org.apache.spark.sql.streaming.Trigger
   * Like the LSH pair build, CONSTRUCTING this frame executes work (the
   * streaming query must finish before the sink table exists) — the
   * documented eager-build exception to the otherwise-lazy contract. */
-object StreamReplay {
+object StreamReplay extends graft.QueryModule {
   private val replaySeq = new AtomicLong()
 
   /** Session the replay PLANS under: a `newSession()` clone sharing
@@ -71,13 +72,17 @@ object StreamReplay {
     * defaultParallelism), so the driver's lower-core scaling runs get
     * proportionally fewer stores; a production deployment sizes this
     * to its actual key cardinality / state rows — override with
-    * SPARK_GRAFT_STREAM_STATE_PARTS. */
+    * SPARK_GRAFT_STREAM_STATE_PARTS, which replaces the knee and is
+    * capped the same way. */
   private[graft] val LightReplayParts: Int = 8
   private[graft] val IntervalJoinParts: Int = 4
-  private def kneeParts(spark: SparkSession, knee: Int): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
-      .getOrElse(math.min(knee, spark.sparkContext.defaultParallelism))
+  private[graft] def kneeParts(spark: SparkSession, knee: Int,
+      overrideParts: Option[String] =
+        sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS")): Int =
+    math.min(
+      overrideParts.flatMap(s => scala.util.Try(s.toInt).toOption)
+        .filter(_ > 0).getOrElse(knee),
+      spark.sparkContext.defaultParallelism)
 
   /** Replay clone with an explicit state-partition knee (see
     * [[LightReplayParts]]). Adaptive execution stays ON here — the r12
@@ -89,12 +94,10 @@ object StreamReplay {
     * foreachBatch folds have skewed tiny stages where AQE's
     * partition coalescing saves more task overhead than its per-stage
     * re-planning costs. Honest negative result, per guide §1.1. */
-  private def replaySessionP(spark: SparkSession, knee: Int): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      kneeParts(spark, knee).toString)
-    ss
-  }
+  private[graft] def replaySessionP(spark: SparkSession,
+      knee: Int): SparkSession =
+    Extensions.newSession(spark,
+      "spark.sql.shuffle.partitions" -> kneeParts(spark, knee).toString)
 
   /** File streaming source over the driver's events table — streamed
     * from the µs-CONVERTED once-per-(JVM, corpus) copy Tables

@@ -80,7 +80,6 @@ class BitmapSpec extends SparkSpec {
   }
 
   test("bitmap_distinct ≡ countDistinct at any parallelism; blobs partition-invariant") {
-    graft.plans.BitmapFunctions.register(spark)
     import spark.implicits._
     val df = (0 until 5000).map(i => (i % 3, (i * 37 % 1100).toLong))
       .toDF("g", "u")

@@ -17,7 +17,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("bloom_sketch: merge across partitions equals single-partition build") {
-    graft.plans.BloomSketch.register(spark)
     import spark.implicits._
     val keys = (1 to 500).map(_.toString).toDF("k")
     val many = keys.repartition(8)
@@ -29,7 +28,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("bloom_sketch: membership claims match a scala reference bloom") {
-    graft.plans.BloomSketch.register(spark)
     import spark.implicits._
     val inserted = (1 to 200).map(i => s"key$i")
     val bits = inserted.toDF("k").agg(expr("bloom_sketch(k)"))

@@ -11,13 +11,11 @@ class CharGramSpec extends SparkSpec {
   import spark.implicits._
 
   private def grams(df: org.apache.spark.sql.DataFrame, n: Int) = {
-    graft.plans.CharGrams.register(spark)
     df.select($"id", expr(s"char_grams(s, $n)").as("g"))
   }
 
   test("generator equals the HOF substring form on the real corpus (multiset)") {
     val gen = operators.Similarity.charShinglesHof(spark, sf0001)
-    graft.plans.CharGrams.register(spark)
     val viaGenerator = spark.read.parquet(s"$sf0001/documents.parquet")
       .withColumn("lt", lower($"text"))
       .filter(length($"lt") >= 9)
@@ -71,7 +69,6 @@ class CharGramSpec extends SparkSpec {
       genStr.apply(params, Seed(i.toLong))).distinct
     val df = strings.zipWithIndex
       .map { case (s, i) => (i.toLong, s) }.toDF("id", "s")
-    graft.plans.CharGrams.register(spark)
     val n = 5
     val viaGen = df.select($"id", expr(s"char_grams(s, $n)").as("g"))
       .groupBy("id").agg(collect_list($"g").as("gen_grams"))
@@ -96,7 +93,6 @@ class CharGramSpec extends SparkSpec {
   }
 
   test("the generator stage whole-stage-codegens (no CodegenFallback)") {
-    graft.plans.CharGrams.register(spark)
     val df = Seq((1L, "abcdefghijklmnop")).toDF("id", "s")
       .select($"id", expr("char_grams(s, 9)").as("g"))
     // the `*(N)` prefix on the Generate node is the whole-stage-codegen

@@ -61,4 +61,33 @@ class ConcurrencySpec extends SparkSpec {
       assert(SparkEntry.queries(n)(spark, sf0001).count() == counts(n))
     }
   }
+
+  test("a failing concurrently build cancels and joins its siblings, then rethrows") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val boom = new IllegalStateException("substrate build failed")
+    val t0 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      Tables.concurrently(spark)(
+        () => {
+          // long enough that only a cancel ends it inside the bound below
+          spark.range(0, 4, 1, 4).map { x => Thread.sleep(120000L); x.longValue }
+            .count()
+          spark.emptyDataFrame
+        },
+        () => {
+          val deadline = System.nanoTime() + 60L * 1000000000L
+          while (sc.statusTracker.getActiveJobIds.isEmpty &&
+              System.nanoTime() < deadline) Thread.sleep(50)
+          throw boom
+        })
+    }
+    assert(thrown eq boom, "the first failure must be rethrown as thrown")
+    assert((System.nanoTime() - t0) / 1e9 < 100, "the sibling ran to its end")
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    import scala.jdk.CollectionConverters._
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-substrate-"))
+    assert(alive.isEmpty, s"runner threads still alive: $alive")
+  }
 }

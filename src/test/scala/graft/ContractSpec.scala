@@ -15,6 +15,23 @@ class ContractSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"queries without oracle: $missing")
   }
 
+  test("a query name defined by two modules fails loudly") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    def module(name: String): QueryModule = new QueryModule {
+      val queries: Map[String, (SparkSession, String) => DataFrame] =
+        Map(name -> ((s: SparkSession, _: String) => s.emptyDataFrame))
+      val oracles: Map[String, String] = Map(name -> "SELECT 1")
+    }
+    val mods = Seq(module("q_a"), module("q_b"), module("q_a"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.unique("queries", mods.map(_.queries))
+    }
+    assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"))
+    assert(SparkEntry.unique("queries", mods.take(2).map(_.queries)).size == 2)
+    assert(SparkEntry.modules.distinct.size == SparkEntry.modules.size,
+      "a module is listed twice")
+  }
+
   test("no orphan oracles (oracle for a query that does not exist)") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"orphan oracles: $orphans")

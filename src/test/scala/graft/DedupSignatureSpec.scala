@@ -30,7 +30,6 @@ class DedupSignatureSpec extends SparkSpec {
   }
 
   private def kernel(docs: DataFrame): Map[Long, Sig] = {
-    graft.plans.DedupSignature.register(spark)
     collect(docs.select(col("doc_id"), expr("dedup_signature(text)").as("sig"))
       .select("doc_id", "sig.*"))
   }
@@ -102,7 +101,6 @@ class DedupSignatureSpec extends SparkSpec {
   }
 
   test("the kernel projection whole-stage-codegens (no CodegenFallback)") {
-    graft.plans.DedupSignature.register(spark)
     val df = Tables(spark, sf0001, "documents")
       .select($"doc_id", expr("dedup_signature(text)").as("sig"))
     val plan = df.queryExecution.executedPlan.toString

@@ -21,7 +21,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("sketch merge is partition-invariant (same estimate at any parallelism)") {
-    graft.plans.SketchFunctions.register(spark)
     def run(parts: Int) =
       Tables(spark, sf0001, "events").repartition(parts)
         .groupBy(col("event_type"))
@@ -32,7 +31,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("CMS never underestimates and is exact without collisions") {
-    graft.plans.CmsSketch.register(spark)
     val r = graft.operators.TextOps.cmsTermCounts(spark, sf0001).collect()
     assert(r.nonEmpty)
     r.foreach { row =>
@@ -44,7 +42,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("CMS merge is partition-invariant") {
-    graft.plans.CmsSketch.register(spark)
     def run(parts: Int) =
       Tables(spark, sf0001, "documents").repartition(parts)
         .select(explode(split(col("text"), " ")).as("t"))
@@ -74,7 +71,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("histogram sketch merge is partition-invariant") {
-    graft.plans.HistSketch.register(spark)
     def run(parts: Int): Seq[Long] =
       Tables(spark, sf0001, "customer").repartition(parts)
         .agg(expr("hist_sketch(CAST(c_acctbal AS DOUBLE), -1000.0D, 10000.0D, 110)")
@@ -85,7 +81,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("histogram sketch routes under/overflow to the edge buckets") {
-    graft.plans.HistSketch.register(spark)
     import spark.implicits._
     val h = Seq(-5000.0, -1000.0, 0.0, 9999.99, 10000.0, 20000.0).toDF("x")
       .agg(expr("hist_sketch(x, -1000.0D, 10000.0D, 110)").as("h"))
@@ -99,7 +94,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("null keys are ignored, empty groups estimate 0") {
-    graft.plans.SketchFunctions.register(spark)
     val df = Seq(("a", Some("x")), ("a", Some("y")), ("a", None), ("b", None))
       .toDF("g", "k")
       .groupBy("g").agg(expr("hll_sketch(k)").as("h"))
@@ -111,7 +105,6 @@ class HllSketchSpec extends SparkSpec {
 
   test("sketch re-aggregation: hll_merge(hll_state(x)) ≡ hll_sketch(x) " +
     "under ANY regrouping") {
-    graft.plans.SketchFunctions.register(spark)
     val e = Tables(spark, sf0001, "events")
       .select(col("event_type"), to_date(col("ts")).as("day"),
         col("user_id").cast("string").as("k"))

@@ -41,7 +41,6 @@ class JoinElimSpec extends SparkSpec {
   }
 
   test("a query READING a dim column keeps its join") {
-    JoinElim.install(spark)
     val o = spark.read.parquet(s"$sf0001/orders.parquet")
     val c = spark.read.parquet(s"$sf0001/customer.parquet")
     val df = o.join(c, o("o_custkey") === c("c_custkey"))
@@ -51,7 +50,6 @@ class JoinElimSpec extends SparkSpec {
   }
 
   test("an unregistered dim keeps its join (supplier has no FK)") {
-    JoinElim.install(spark)
     val l = spark.read.parquet(s"$sf0001/lineitem.parquet")
     val s = spark.read.parquet(s"$sf0001/supplier.parquet")
     val df = l.join(s, l("l_suppkey") === s("s_suppkey"))
@@ -77,7 +75,6 @@ class JoinElimSpec extends SparkSpec {
       .orderBy("c_mktsegment").collect().toSeq
     assert(got == twin && got.nonEmpty)
     // negative: a NON-unique projection keeps its distinct aggregate
-    graft.plans.DistinctElim.install(spark)
     val neg = spark.read.parquet(s"$sf0001/customer.parquet")
       .select("c_mktsegment").distinct()
     val negAggs = neg.queryExecution.optimizedPlan.collect {

@@ -3,7 +3,7 @@ package graft
 import java.security.MessageDigest
 import org.apache.spark.sql.functions._
 import graft.operators.KmvOps
-import graft.plans.{Kmv, KmvFunctions}
+import graft.plans.Kmv
 
 /** KMV sketch (A6 set-operation tier): estimator identities, the
   * merge/rollup contract, partition invariance, and the pairwise set
@@ -53,7 +53,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("kmv_merge(kmv_state(x)) == kmv_sketch(x), and the merge is partition-invariant") {
-    KmvFunctions.register(spark)
     def direct(parts: Int) =
       Tables(spark, sf0001, "events").filter(col("user_id").isNotNull)
         .repartition(parts)
@@ -75,7 +74,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("kmv_ops self-overlap: jaccard = 1e6, intersection estimate = union estimate") {
-    KmvFunctions.register(spark)
     val r = Tables(spark, sf0001, "events").filter(col("user_id").isNotNull)
       .groupBy(col("event_type"))
       .agg(expr("kmv_state(CAST(user_id AS STRING))").as("sk"))

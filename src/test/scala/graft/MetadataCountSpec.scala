@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Stats
 
 /** Metadata-only count(*) rule (plans/MetadataCount): the positive arm
@@ -23,7 +24,6 @@ class MetadataCountSpec extends SparkSpec {
   }
 
   test("a Filter disqualifies the plan: the scan must run") {
-    graft.plans.MetadataCount.install(spark)
     val df = spark.read.parquet(s"$sf0001/orders.parquet")
       .filter(col("o_orderpriority") === "1-URGENT")
       .groupBy().agg(count(lit(1)).as("n"))
@@ -31,26 +31,42 @@ class MetadataCountSpec extends SparkSpec {
   }
 
   test("count(col) (null-skipping) disqualifies the plan") {
-    graft.plans.MetadataCount.install(spark)
     val df = spark.read.parquet(s"$sf0001/orders.parquet")
       .groupBy().agg(count(col("o_orderpriority")).as("n"))
     assert(hasFileScan(df), "count(col) must not be footer-served")
   }
 
   test("grouped counts disqualify the plan") {
-    graft.plans.MetadataCount.install(spark)
     val df = spark.read.parquet(s"$sf0001/orders.parquet")
       .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
     assert(hasFileScan(df))
   }
 
   test("non-parquet relations keep their scan") {
-    graft.plans.MetadataCount.install(spark)
     val tmp = java.nio.file.Files.createTempDirectory("mdc_csv_").toString
     spark.range(10).toDF("x").write.mode("overwrite").csv(tmp)
     val df = spark.read.schema("x LONG").csv(tmp)
       .groupBy().agg(count(lit(1)).as("n"))
     assert(hasFileScan(df))
     assert(df.head().getLong(0) == 10L)
+  }
+
+  test("a streaming global count keeps its running total (no footer serving)") {
+    val in = java.nio.file.Files.createTempDirectory("graft_mdc_stream_").toFile
+    Seq((0, 7), (1, 5)).foreach { case (seq, n) =>
+      Tables.writeFeedFile(spark.range(n).toDF("x"), in, f"f$seq%03d.parquet", seq)
+    }
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_mdc_ckpt_").toString
+    val q = spark.readStream.schema("x LONG")
+      .option("maxFilesPerTrigger", "1").parquet(in.getAbsolutePath)
+      .groupBy().count()
+      .writeStream.format("memory").queryName("mdc_running_count")
+      .outputMode("complete")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    assert(spark.table("mdc_running_count").head().getLong(0) == 12L)
   }
 }

@@ -11,7 +11,6 @@ class SetJoinSpec extends SparkSpec {
 
   /** Per-doc sorted distinct shingle sets (the operator's universe). */
   private lazy val docs = {
-    graft.plans.WordGrams.register(spark)
     spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), expr("word_grams(text, 3)").as("tok"))
       .groupBy(col("doc_id"))

@@ -228,7 +228,6 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getAs[String]("event_type")
         -> r.getAs[Double]("hll_estimate")).toMap
     // batch twin over ALL the same rows, through the registered aggregate
-    graft.plans.SketchFunctions.register(spark)
     val batch = (batch1 ++ batch2).toDF()
       .groupBy($"event_type")
       .agg(expr("hll_sketch(CAST(user_id AS STRING))").as("h"))
@@ -623,5 +622,15 @@ class StreamingSpec extends SparkSpec {
       graft.operators.Formats.PoisonLines.toSet)
     assert(dlq.map(_.getLong(1)).distinct.length == 1,
       "all poison lines live in one feed file -> one batch id")
+  }
+
+  test("the state-partition override replaces the knee and stays capped") {
+    import graft.streaming.StreamReplay.kneeParts
+    val p = spark.sparkContext.defaultParallelism
+    assert(kneeParts(spark, 8, Some((p * 4).toString)) == p)
+    assert(kneeParts(spark, 8, Some("1")) == 1)
+    assert(kneeParts(spark, 8, None) == math.min(8, p))
+    assert(kneeParts(spark, 8, Some("0")) == math.min(8, p))
+    assert(kneeParts(spark, 8, Some("many")) == math.min(8, p))
   }
 }

@@ -27,7 +27,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("exact under ANY partitioning (merge correctness)") {
-    graft.plans.TopKAgg.register(spark)
     val expected = windowForm.map(r => (r.getString(0), r.getLong(2)))
     Seq(1, 2, 7, 32).foreach { p =>
       val got = spark.read.parquet(s"$sf0001/orders.parquet")

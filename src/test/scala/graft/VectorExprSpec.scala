@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
-import graft.plans.VectorExpressions
 
 class VectorExprSpec extends SparkSpec {
   import spark.implicits._
@@ -16,7 +15,6 @@ class VectorExprSpec extends SparkSpec {
       "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)))"
 
   test("native cosine_sim is BIT-identical to the HOF formulation") {
-    VectorExpressions.register(spark)
     val e = Tables(spark, sf0001, "embeddings")
     val pairs = e.select($"vec_id".as("ida"), $"embedding".as("a"))
       .crossJoin(e.select($"vec_id".as("idb"), $"embedding".as("b")))
@@ -30,7 +28,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("cosine_sim self-similarity is exactly 1.0 (unit property)") {
-    VectorExpressions.register(spark)
     val e = Tables(spark, sf0001, "embeddings")
     val bad = e.select(expr("cosine_sim(embedding, embedding)").as("s"))
       .filter(abs($"s" - 1.0) > 1e-12).count()
@@ -38,7 +35,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("cosine_sim NULL semantics equal the HOF (mismatch/null element)") {
-    VectorExpressions.register(spark)
     val df = Seq(
       ("mismatch", Array(1.0f, 2.0f), Array(3.0f)),
       ("equal", Array(1.0f, 2.0f), Array(3.0f, 4.0f)))
@@ -50,7 +46,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("sq_dist_slice is BIT-identical to the HOF aggregate it replaced") {
-    VectorExpressions.register(spark)
     val e = Tables(spark, sf0001, "embeddings")
     // same-offset slices (the seed-PQ shape): every (vector, codebook
     // entry, subspace) — the exact expression pqPairs used pre-kernel
@@ -84,7 +79,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("sq_dist_slice NULL semantics match element_at past-the-end") {
-    VectorExpressions.register(spark)
     val df = Seq(
       ("in_range", Array(1.0f, 2.0f, 3.0f), 0, 3),
       ("overflow", Array(1.0f, 2.0f, 3.0f), 2, 3),
@@ -97,7 +91,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("cosine_sim rejects wrong input types at analysis") {
-    VectorExpressions.register(spark)
     intercept[Exception] {
       Tables(spark, sf0001, "documents")
         .select(expr("cosine_sim(text, text)")).collect()
@@ -105,7 +98,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the function via session extensions") {
-    // active session already has it via register(); verify the
+    // active session already has it via Extensions.install; verify the
     // extensions builder path wires the same expression class
     val ext = new graft.plans.GraftExtensions
     assert(ext.isInstanceOf[org.apache.spark.sql.SparkSessionExtensions => Unit])

@@ -20,7 +20,6 @@ class WordGramSpec extends SparkSpec {
         explode(expr(graft.functions.Shingles.sparkExprN(n))).as("s"))
 
   private def genShingles(df: org.apache.spark.sql.DataFrame, n: Int) = {
-    graft.plans.WordGrams.register(spark)
     df.select($"doc_id", expr(s"word_grams(text, $n)").as("s"))
   }
 
@@ -111,7 +110,6 @@ class WordGramSpec extends SparkSpec {
   }
 
   test("positioned form ≡ posexplode of the HOF form (ordinal included)") {
-    graft.plans.WordGrams.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select($"doc_id", $"text").limit(100)
     val gen = docs.select($"doc_id",
@@ -127,7 +125,6 @@ class WordGramSpec extends SparkSpec {
   }
 
   test("the generator stage whole-stage-codegens (no CodegenFallback)") {
-    graft.plans.WordGrams.register(spark)
     val df = Seq((1L, "one two three four five")).toDF("doc_id", "text")
       .select($"doc_id", expr("word_grams(text, 3)").as("s"))
     val plan = df.queryExecution.executedPlan.toString
