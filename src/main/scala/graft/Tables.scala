@@ -35,11 +35,11 @@ object Tables extends QueryModule {
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.apache.spark.sql.types.StructType]()
-  private def readMemoized(spark: SparkSession, path: String): DataFrame = {
-    val s = schemaMemo.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(s).parquet(path)
-  }
+  private[graft] def schemaOf(spark: SparkSession,
+      path: String): org.apache.spark.sql.types.StructType =
+    schemaMemo.computeIfAbsent(path, _ => spark.read.parquet(path).schema)
+  private def readMemoized(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
@@ -138,12 +138,13 @@ object Tables extends QueryModule {
 
   // Scratch root: RAM-backed when the host offers it (r12, guide §6).
   // Everything under scratchDir is bounded (MB-scale derived tables,
-  // stream checkpoints, loop checkpoints), JVM-lifetime, and deleted at
-  // exit — durability is meaningless for it, and the synchronous
-  // writes/fsyncs of streaming WALs and commit protocols are measurably
-  // slower on a disk-backed /tmp. Production puts real tables and
-  // checkpoints on durable shared storage; this only moves the bench
-  // harness's scratch. Overridable via SPARK_GRAFT_SCRATCH.
+  // replay feeds, stream checkpoints and sinks, loop checkpoints),
+  // JVM-lifetime, and deleted at exit — durability is meaningless for
+  // it, and the synchronous writes/fsyncs of streaming WALs, state-store
+  // deltas and commit protocols are measurably slower on a disk-backed
+  // /tmp. Production puts real tables and checkpoints on durable shared
+  // storage; this only moves the bench harness's scratch. Overridable
+  // via SPARK_GRAFT_SCRATCH.
   private lazy val scratchRoot: Option[java.nio.file.Path] = {
     val env = sys.env.get("SPARK_GRAFT_SCRATCH")
     val cand = env
@@ -212,8 +213,9 @@ object Tables extends QueryModule {
     }).toFile
 
   /** A JVM-lifetime scratch directory (deleted by the shutdown hook) —
-    * shared by the once-per-JVM materializations here and by operators
-    * that checkpoint an iterative result to reliable storage. */
+    * shared by the once-per-JVM materializations here, by operators
+    * that checkpoint an iterative result to reliable storage and by
+    * every streaming replay's feed, checkpoint and sink. */
   private[graft] def scratchDir(prefix: String): java.io.File = {
     installCleanupHook()
     val f = newTempDir(prefix)
@@ -225,10 +227,10 @@ object Tables extends QueryModule {
     * modification time (r10 review finding: streaming file sources
     * order by mtime, and Files.move keeps the write-time mtime — on a
     * coarse-granularity or very fast filesystem consecutive feed
-    * files can land in the same tick and replay out of order; the
-    * late-data replay already stamped its generations, every feed
-    * builder now goes through this one helper). `seq` spaces stamps a
-    * minute apart from a fixed epoch — deterministic and strictly
+    * files can land in the same tick and replay out of order). Every
+    * replay feed is written through this one helper, by
+    * [[graft.streaming.Replay.feed]]. `seq` spaces stamps a minute
+    * apart from a fixed epoch — deterministic and strictly
     * increasing. */
   private[graft] def writeFeedFile(df: org.apache.spark.sql.DataFrame,
       destDir: java.io.File, name: String, seq: Int): Unit = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Shingles
 import graft.plans.Extensions
+import graft.streaming.Replay
 
 /** Document CHUNKING — the RAG / context-window preprocessing step
   * every training-data and retrieval pipeline runs before embedding:
@@ -219,35 +220,21 @@ object Chunking extends graft.QueryModule {
     streamedDirs.computeIfAbsent(dir, { _ =>
       val root = graft.Tables.scratchDir("graft_chunk_stream_")
         .getAbsolutePath
-      val ckpt = graft.Tables.scratchDir("graft_chunk_sckpt_")
-        .getAbsolutePath
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
       val docs = Tables(ss, dir, "documents")
       chunkRowsOf(docs.filter(!isNewDoc))
         .write.mode("overwrite").parquet(s"$root/chunks/base")
-      val feed = graft.Tables.scratchDir("graft_chunk_feed_")
-      Seq(0, 1).foreach { par =>
-        graft.Tables.writeFeedFile(
-          docs.filter(isNewDoc && pmod(col("doc_id"), lit(2)) === par),
-          feed, f"ingest$par%03d.parquet", par)
+      val feed = Replay.feed("graft_chunk_feed_", dir) {
+        Seq(0, 1).map(par =>
+          docs.filter(isNewDoc && pmod(col("doc_id"), lit(2)) === par))
       }
-      val stream = ss.readStream
-        .schema(ss.read.parquet(feed.getAbsolutePath).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.getAbsolutePath)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              batchId: Long) =>
-            chunkRowsOf(batch.toDF())
-              .write.mode("overwrite").parquet(s"$root/chunks/b$batchId")
-        }
-        .start()
-      query.awaitTermination()
+      Replay.run(Replay.read(ss, feed, 1).writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            batchId: Long) =>
+          chunkRowsOf(batch.toDF())
+            .write.mode("overwrite").parquet(s"$root/chunks/b$batchId")
+      }, "graft_chunk_sckpt_")
       root
     })
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Extensions
+import graft.streaming.Replay
 
 /** DSIR-style DATA SELECTION via hashed n-gram importance (Xie et al.,
   * NeurIPS 2023 "Data Selection for Language Models via Importance
@@ -153,35 +154,20 @@ object Dsir extends graft.QueryModule {
     streamedDirs.computeIfAbsent(dir, { _ =>
       val root = graft.Tables.scratchDir("graft_dsir_stream_")
         .getAbsolutePath
-      val ckpt = graft.Tables.scratchDir("graft_dsir_sckpt_")
-        .getAbsolutePath
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
       dsirBucketModel(ss, dir).write.mode("overwrite")
         .parquet(s"$root/model")
       val docs = Tables(ss, dir, "documents")
-      val feed = graft.Tables.scratchDir("graft_dsir_feed_")
-      Seq(0, 1).foreach { par =>
-        graft.Tables.writeFeedFile(
-          docs.filter(pmod(col("doc_id"), lit(2)) === par),
-          feed, f"docs$par%03d.parquet", par)
+      val feed = Replay.feed("graft_dsir_feed_", dir) {
+        Seq(0, 1).map(par => docs.filter(pmod(col("doc_id"), lit(2)) === par))
       }
-      val stream = ss.readStream
-        .schema(ss.read.parquet(feed.getAbsolutePath).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.getAbsolutePath)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              batchId: Long) =>
-            scoredOf(batch.toDF(), ss.read.parquet(s"$root/model"))
-              .write.mode("overwrite").parquet(s"$root/scores/b$batchId")
-        }
-        .start()
-      query.awaitTermination()
+      Replay.run(Replay.read(ss, feed, 1).writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            batchId: Long) =>
+          scoredOf(batch.toDF(), ss.read.parquet(s"$root/model"))
+            .write.mode("overwrite").parquet(s"$root/scores/b$batchId")
+      }, "graft_dsir_sckpt_")
       root
     })
 

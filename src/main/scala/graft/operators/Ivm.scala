@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Extensions
+import graft.streaming.Replay
 
 /** INCREMENTAL VIEW MAINTENANCE — keep a materialized aggregate in
   * sync with a CDC delta log by applying O(changes) delta arithmetic,
@@ -160,7 +161,6 @@ object Ivm extends graft.QueryModule {
   private[graft] def streamedMvRoot(spark: SparkSession, dir: String): String =
     streamedMvDirs.computeIfAbsent(dir, { _ =>
       val root = graft.Tables.scratchDir("graft_ivm_stream_").getAbsolutePath
-      val ckpt = graft.Tables.scratchDir("graft_ivm_ckpt_").getAbsolutePath
       val feed = MergeOnRead.feedDir(spark, dir)
       // 2, not the replay family's 8: every per-batch frame here is
       // group-/changes-granularity (≤ a few hundred rows), and each
@@ -188,14 +188,8 @@ object Ivm extends graft.QueryModule {
       base.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), sum(dec(col("o_totalprice"))).as("s"))
         .write.mode("overwrite").parquet(s"$root/mv/v0_init")
-      val stream = ss.readStream.schema(ss.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", StreamMvFilesPerTrigger.toString)
-        .parquet(feed)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
+      Replay.run(Replay.read(ss, feed, StreamMvFilesPerTrigger)
+        .writeStream.foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
               batchId: Long) =>
             val s = batch.sparkSession
@@ -265,9 +259,7 @@ object Ivm extends graft.QueryModule {
             curNext.coalesce(1).write.mode("overwrite")
               .parquet(s"$root/current/v$batchId")
             ()
-        }
-        .start()
-      try query.awaitTermination() finally query.stop()
+        }, "graft_ivm_ckpt_")
       } finally { base.unpersist(); () }
       root
     })
@@ -275,16 +267,11 @@ object Ivm extends graft.QueryModule {
   /** GRADED: the streamed maintained view after the last batch — same
     * oracle as the batch [[ordersAggIvm]]: three rounds of per-batch
     * delta maintenance must land on exactly the from-scratch answer. */
-  def ordersAggIvmStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val root = streamedMvRoot(spark, dir)
-    val last = new java.io.File(s"$root/mv").listFiles
-      .map(_.getName).filter(_.matches("v\\d+"))
-      .map(_.drop(1).toInt).max
-    spark.read.parquet(s"$root/mv/v$last")
+  def ordersAggIvmStreamed(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Replay.latest(s"${streamedMvRoot(spark, dir)}/mv"))
       .select(col("o_orderstatus"), col("n").as("n_orders"),
         col("s").cast("double").as("total_price"))
       .orderBy("o_orderstatus")
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "orders_agg_ivm" -> (ordersAggIvm(_, _)),

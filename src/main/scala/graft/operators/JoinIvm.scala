@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.Extensions
+import graft.streaming.Replay
 
 /** JOIN-VIEW incremental maintenance (r8 verdict #2) — the OTHER half
   * of classical IVM next to [[Ivm]]'s aggregate view: a stored
@@ -173,21 +174,14 @@ object JoinIvm extends graft.QueryModule {
       dir: String): String =
     streamedDirs.computeIfAbsent(dir, { _ =>
       val root = Tables.scratchDir("graft_joinivm_stream_").getAbsolutePath
-      val ckpt = Tables.scratchDir("graft_joinivm_sckpt_").getAbsolutePath
       val feed = MergeOnRead.feedDir(spark, dir)
       // view-granularity frames; 2 partitions like the MV stream
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
       ss.read.parquet(storedViewDir(ss, dir))
         .write.mode("overwrite").parquet(s"$root/view/v0_init")
-      val stream = ss.readStream.schema(ss.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", StreamFilesPerTrigger.toString)
-        .parquet(feed)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
+      Replay.run(Replay.read(ss, feed, StreamFilesPerTrigger)
+        .writeStream.foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
               batchId: Long) =>
             val s = batch.sparkSession
@@ -214,15 +208,11 @@ object JoinIvm extends graft.QueryModule {
             kept.unionByName(added).coalesce(1)
               .write.mode("overwrite").parquet(s"$root/view/v$batchId")
             ()
-        }
-        .start()
-      query.awaitTermination()
-      val lastV = new java.io.File(s"$root/view").listFiles
-        .map(_.getName).filter(_.matches("v\\d+")).map(_.drop(1).toInt).max
+        }, "graft_joinivm_sckpt_")
       // the dim patch, once, after the fact stream drains
       val dimDelta = dimProj(ss, dir).filter(dimHit)
         .select(col("c_custkey").as("dk"), lit(NewSegment).as("new_seg"))
-      ss.read.parquet(s"$root/view/v$lastV")
+      ss.read.parquet(Replay.latest(s"$root/view"))
         .join(broadcast(dimDelta), col("o_custkey") === col("dk"), "left")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"),

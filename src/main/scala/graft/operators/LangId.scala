@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Extensions
+import graft.streaming.Replay
 
 /** LANGUAGE IDENTIFICATION — the one standard LLM-corpus stage the
   * curation tier had not yet graded (CCNet/RefinedWeb/FineWeb all gate
@@ -368,35 +369,20 @@ object LangId extends graft.QueryModule {
     streamedDirs.computeIfAbsent(dir, { _ =>
       val root = graft.Tables.scratchDir("graft_langid_stream_")
         .getAbsolutePath
-      val ckpt = graft.Tables.scratchDir("graft_langid_sckpt_")
-        .getAbsolutePath
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
       model(ss, dir).write.mode("overwrite").parquet(s"$root/model")
       val evalDocs = Tables(ss, dir, "documents").filter(!isTrain)
-      val feed = graft.Tables.scratchDir("graft_langid_feed_")
-      Seq(0, 1).foreach { par =>
-        graft.Tables.writeFeedFile(
-          evalDocs.filter(pmod(col("doc_id"), lit(2)) === par),
-          feed, f"eval$par%03d.parquet", par)
+      val feed = Replay.feed("graft_langid_feed_", dir) {
+        Seq(0, 1).map(par =>
+          evalDocs.filter(pmod(col("doc_id"), lit(2)) === par))
       }
-      val stream = ss.readStream
-        .schema(ss.read.parquet(feed.getAbsolutePath).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.getAbsolutePath)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              batchId: Long) =>
-            predictionsOf(ss, batch.toDF(),
-              ss.read.parquet(s"$root/model"))
-              .write.mode("overwrite").parquet(s"$root/preds/b$batchId")
-        }
-        .start()
-      query.awaitTermination()
+      Replay.run(Replay.read(ss, feed, 1).writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            batchId: Long) =>
+          predictionsOf(ss, batch.toDF(), ss.read.parquet(s"$root/model"))
+            .write.mode("overwrite").parquet(s"$root/preds/b$batchId")
+      }, "graft_langid_sckpt_")
       root
     })
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.Extensions
+import graft.streaming.Replay
 
 /** MERGE INTO semantics pinned as data (r8 verdict #3) — the
   * multi-arm writer contract every lakehouse ships (Delta/Iceberg
@@ -189,18 +190,11 @@ object MergeInto extends graft.QueryModule {
 
   /** The source batch as a 3-file feed (one file per arm class — a
     * key-disjoint chop by construction), one micro-batch per file. */
-  private val mergeFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def mergeFeedDir(spark: SparkSession, dir: String): String =
-    mergeFeedDirs.computeIfAbsent(dir, { _ =>
-      val out = Tables.scratchDir("graft_merge_feed_")
+    Replay.feed("graft_merge_feed_", dir) {
       val src = sourceBatch(spark, dir)
-      Seq("U", "D", "I").zipWithIndex.foreach { case (op, i) =>
-        Tables.writeFeedFile(src.filter(col("_op") === op), out,
-          f"chunk$i%03d.parquet", i)
-      }
-      out.getAbsolutePath
-    })
+      Seq("U", "D", "I").map(op => src.filter(col("_op") === op))
+    }
 
   /** The statement replayed through a real streaming execution; the
     * rolling target versioned per micro-batch, the statement's key
@@ -215,7 +209,6 @@ object MergeInto extends graft.QueryModule {
       dir: String): String =
     streamedMergeDirs.computeIfAbsent(dir, { _ =>
       val root = Tables.scratchDir("graft_merge_stream_").getAbsolutePath
-      val ckpt = Tables.scratchDir("graft_merge_sckpt_").getAbsolutePath
       val feed = mergeFeedDir(spark, dir)
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
@@ -223,43 +216,32 @@ object MergeInto extends graft.QueryModule {
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_orderstatus"), col("o_totalprice"))
         .write.mode("overwrite").parquet(s"$root/t/v0_init")
-      val stream = ss.readStream.schema(ss.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              batchId: Long) =>
-            val s = batch.sparkSession
-            val prev =
-              if (batchId == 0) s.read.parquet(s"$root/t/v0_init")
-              else s.read.parquet(s"$root/t/v${batchId - 1}")
-            // the statement's key log is VERSIONED (one overwrite dir
-            // per batch, like the target versions) so a replayed
-            // micro-batch is idempotent — an append log would
-            // duplicate keys on replay and falsely trip the gate
-            val priorKeyDirs = Option(new java.io.File(s"$root/keys")
-              .listFiles).getOrElse(Array.empty)
-              .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-                f.getName.drop(1).toLong < batchId)
-              .map(_.getAbsolutePath)
-            val mk =
-              if (priorKeyDirs.isEmpty) None
-              else Some(s.read.parquet(priorKeyDirs.toIndexedSeq: _*))
-            mergeStep(prev, batch.toDF(), mk).coalesce(1)
-              .write.mode("overwrite").parquet(s"$root/t/v$batchId")
-            batch.toDF().select(col("k")).coalesce(1)
-              .write.mode("overwrite").parquet(s"$root/keys/v$batchId")
-            ()
-        }
-        .start()
-      query.awaitTermination()
-      val lastV = new java.io.File(s"$root/t").listFiles
-        .map(_.getName).filter(_.matches("v\\d+")).map(_.drop(1).toInt).max
-      s"$root/t/v$lastV"
+      Replay.run(Replay.read(ss, feed, 1).writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            batchId: Long) =>
+          val s = batch.sparkSession
+          val prev =
+            if (batchId == 0) s.read.parquet(s"$root/t/v0_init")
+            else s.read.parquet(s"$root/t/v${batchId - 1}")
+          // the statement's key log is VERSIONED (one overwrite dir
+          // per batch, like the target versions) so a replayed
+          // micro-batch is idempotent — an append log would
+          // duplicate keys on replay and falsely trip the gate
+          val priorKeyDirs = Option(new java.io.File(s"$root/keys")
+            .listFiles).getOrElse(Array.empty)
+            .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
+              f.getName.drop(1).toLong < batchId)
+            .map(_.getAbsolutePath)
+          val mk =
+            if (priorKeyDirs.isEmpty) None
+            else Some(s.read.parquet(priorKeyDirs.toIndexedSeq: _*))
+          mergeStep(prev, batch.toDF(), mk).coalesce(1)
+            .write.mode("overwrite").parquet(s"$root/t/v$batchId")
+          batch.toDF().select(col("k")).coalesce(1)
+            .write.mode("overwrite").parquet(s"$root/keys/v$batchId")
+          ()
+      }, "graft_merge_sckpt_")
+      Replay.latest(s"$root/t")
     })
 
   /** GRADED: the same census over the STREAM-applied statement — the

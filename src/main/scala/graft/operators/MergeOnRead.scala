@@ -3,9 +3,9 @@ package graft.operators
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
 import graft.plans.Extensions
+import graft.streaming.Replay
 
 /** MERGE-ON-READ — the lakehouse read path that resolves a base table
   * ∪ a CDC delta log AT READ TIME, without ever rewriting base (the
@@ -81,22 +81,15 @@ object MergeOnRead extends graft.QueryModule {
       .withColumn("_deleted", lit(true)))
   }
 
-  // update-feed dir (one file per batch) and the streamed delta log,
-  // once per (JVM, corpus)
-  private val feedDirs = new ConcurrentHashMap[String, String]()
+  // the streamed delta log, once per (JVM, corpus)
   private val logDirs = new ConcurrentHashMap[String, String]()
 
   /** The 3-file update feed: each batch written as ONE parquet file so
     * `maxFilesPerTrigger=1` replays it as one micro-batch. */
   private[graft] def feedDir(spark: SparkSession, dir: String): String =
-    feedDirs.computeIfAbsent(dir, { _ =>
-      val in = Tables.scratchDir("graft_mor_feed_")
-      UpdSlices.foreach { case (s, _, _, _) =>
-        Tables.writeFeedFile(updBatch(spark, dir, s), in,
-          f"upd$s%03d.parquet", s)
-      }
-      in.getAbsolutePath
-    })
+    Replay.feed("graft_mor_feed_", dir) {
+      UpdSlices.map { case (s, _, _, _) => updBatch(spark, dir, s) }
+    }
 
   /** The delta LOG: the feed replayed through a real streaming
     * execution, one atomic parquet append per micro-batch stamped with
@@ -111,21 +104,14 @@ object MergeOnRead extends graft.QueryModule {
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "8")
       val out = Tables.scratchDir("graft_mor_log_").getAbsolutePath
-      val ckpt = Tables.scratchDir("graft_mor_ckpt_").getAbsolutePath
-      val stream = ss.readStream.schema(ss.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          batch.withColumn("_batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-          ()
-        }
-        .start()
-      try query.awaitTermination() finally query.stop()
+      Replay.run(Replay.read(ss, feed, 1)
+        .writeStream.foreachBatch {
+          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+              batchId: Long) =>
+            batch.withColumn("_batch_id", lit(batchId))
+              .write.mode("append").parquet(out)
+            ()
+        }, "graft_mor_ckpt_")
       out
     })
 

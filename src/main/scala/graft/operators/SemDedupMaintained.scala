@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.Extensions
+import graft.streaming.Replay
 
 /** SemDeDup LIFECYCLE (r10) — the semantic tier joins the maintenance
   * matrix. The lexical dedup index already grows, streams, compacts
@@ -202,7 +203,6 @@ object SemDedupMaintained extends graft.QueryModule {
       dir: String): String =
     streamedDirs.computeIfAbsent(dir, { _ =>
       val root = Tables.scratchDir("graft_semdedup_stream_").getAbsolutePath
-      val ckpt = Tables.scratchDir("graft_semdedup_sckpt_").getAbsolutePath
       val st = IvfMaintained.state(spark, dir)
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
@@ -211,11 +211,9 @@ object SemDedupMaintained extends graft.QueryModule {
         .orderBy(col("vec_id")).limit(st.nlist)
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
       // the 2-file ingest feed: day-2 vectors split by id parity
-      val feed = Tables.scratchDir("graft_semdedup_feed_")
-      Seq(0, 1).foreach { par =>
-        Tables.writeFeedFile(
-          e.filter(GraphOps.isNewVec && pmod(col("vec_id"), lit(2)) === par),
-          feed, f"ingest$par%03d.parquet", par)
+      val feed = Replay.feed("graft_semdedup_feed_", dir) {
+        Seq(0, 1).map(par =>
+          e.filter(GraphOps.isNewVec && pmod(col("vec_id"), lit(2)) === par))
       }
       // v0 visible assignment = the stored BASE lists; v0 pairs = the
       // maintained store's base generation (same build, same values)
@@ -229,50 +227,40 @@ object SemDedupMaintained extends graft.QueryModule {
             col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b")))
         .write.mode("overwrite").parquet(s"$root/pairs/base")
-      val stream = ss.readStream
-        .schema(ss.read.parquet(feed.getAbsolutePath).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.getAbsolutePath)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              batchId: Long) =>
-            val s = batch.sparkSession
-            val prev =
-              if (batchId == 0) s.read.parquet(s"$root/assign/v0_init")
-              else s.read.parquet(s"$root/assign/v${batchId - 1}")
-            val w = Window.partitionBy("vec_id")
-              .orderBy(col("s").desc, col("cid"))
-            val batchA = batch.toDF()
-              .crossJoin(broadcast(cents))
-              .select(col("vec_id"), col("cid"),
-                expr("cosine_sim(embedding, cv)").as("s"))
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") === 1)
-              .select(col("vec_id"), col("cid"))
-            val visible = prev.unionByName(batchA)
-            // the LATER-endpoint rule falls out structurally: the
-            // left side is THIS batch only, so a prev×prev pair can
-            // never form; batch×batch pairs normalize+dedup in-batch;
-            // batch×prev pairs appear exactly once — every pair is
-            // emitted in its later endpoint's batch, exactly once
-            val cand = batchA.as("n").join(visible.as("x"),
-                col("n.cid") === col("x.cid") &&
-                  col("n.vec_id") =!= col("x.vec_id"))
-              .select(least(col("n.vec_id"), col("x.vec_id")).as("vec_a"),
-                greatest(col("n.vec_id"), col("x.vec_id")).as("vec_b"))
-              .distinct()
-            scoredPairs(s, dir, cand).coalesce(1)
-              .write.mode("overwrite").parquet(s"$root/pairs/b$batchId")
-            visible.coalesce(1)
-              .write.mode("overwrite").parquet(s"$root/assign/v$batchId")
-            ()
-        }
-        .start()
-      query.awaitTermination()
+      Replay.run(Replay.read(ss, feed, 1).writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            batchId: Long) =>
+          val s = batch.sparkSession
+          val prev =
+            if (batchId == 0) s.read.parquet(s"$root/assign/v0_init")
+            else s.read.parquet(s"$root/assign/v${batchId - 1}")
+          val w = Window.partitionBy("vec_id")
+            .orderBy(col("s").desc, col("cid"))
+          val batchA = batch.toDF()
+            .crossJoin(broadcast(cents))
+            .select(col("vec_id"), col("cid"),
+              expr("cosine_sim(embedding, cv)").as("s"))
+            .withColumn("rn", row_number().over(w))
+            .filter(col("rn") === 1)
+            .select(col("vec_id"), col("cid"))
+          val visible = prev.unionByName(batchA)
+          // the LATER-endpoint rule falls out structurally: the
+          // left side is THIS batch only, so a prev×prev pair can
+          // never form; batch×batch pairs normalize+dedup in-batch;
+          // batch×prev pairs appear exactly once — every pair is
+          // emitted in its later endpoint's batch, exactly once
+          val cand = batchA.as("n").join(visible.as("x"),
+              col("n.cid") === col("x.cid") &&
+                col("n.vec_id") =!= col("x.vec_id"))
+            .select(least(col("n.vec_id"), col("x.vec_id")).as("vec_a"),
+              greatest(col("n.vec_id"), col("x.vec_id")).as("vec_b"))
+            .distinct()
+          scoredPairs(s, dir, cand).coalesce(1)
+            .write.mode("overwrite").parquet(s"$root/pairs/b$batchId")
+          visible.coalesce(1)
+            .write.mode("overwrite").parquet(s"$root/assign/v$batchId")
+          ()
+      }, "graft_semdedup_sckpt_")
       root
     })
 

@@ -171,14 +171,14 @@ class IncrementalDedupSpec extends SparkSpec {
     // the replay input is written as 3 files and streamed with
     // maxFilesPerTrigger=1, so the classifier must survive the
     // incoming batch arriving in several independent micro-batches
-    val input = graft.streaming.StreamReplay
-      .incomingReplayInput(spark, sf0001)
-    val nFiles = new java.io.File(input).listFiles
-      .count(_.getName.endsWith(".parquet"))
-    assert(nFiles >= 2, s"replay input has $nFiles files — single-batch")
     val streamed = graft.streaming.StreamReplay
       .incrementalDedupStreamed(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(2))).toSet
+    val input = graft.streaming.Replay.feeds
+      .get(("graft_incdedup_in_", sf0001))
+    val nFiles = new java.io.File(input).listFiles
+      .count(_.getName.endsWith(".parquet"))
+    assert(nFiles >= 2, s"replay input has $nFiles files — single-batch")
     val batch = IncrementalDedup.verdicts(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(2))).toSet
     assert(streamed == batch,
