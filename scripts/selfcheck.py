@@ -1,16 +1,25 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's t2 correctness gate (NOT library code).
 
-Usage: python3 scripts/selfcheck.py [sfDir] [outDir]
+Usage: python3 scripts/selfcheck.py [--only a,b,...] [sfDir] [outDir]
 
 Reads outDir/<name>/ parquet dumps written by graft.Verify plus
 outDir/oracle_sql.json, runs each oracle SQL in DuckDB over the same
 testdata parquet, and compares: columns sorted by name, rows sorted,
 values compared exactly (mirrors the driver's hash-match).
+--only checks just the named queries (for a subset dump, e.g. one
+written with SPARK_GRAFT_ONLY); a name with no oracle is a FAIL.
 """
 import sys, json, glob
 import duckdb
 
+only = None
+if "--only" in sys.argv:
+    i = sys.argv.index("--only")
+    if i + 1 >= len(sys.argv):
+        sys.exit("--only needs a comma-separated list of query names")
+    only = [n.strip() for n in sys.argv[i + 1].split(",") if n.strip()]
+    del sys.argv[i:i + 2]
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
@@ -23,6 +32,12 @@ for t in TABLES:
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 fails = 0
+if only is not None:
+    for name in sorted(set(only) - set(oracle)):
+        print(f"FAIL {name}: no oracle")
+        fails += 1
+    oracle = {n: q for n, q in oracle.items() if n in only}
+total = len(oracle) + fails
 for name, sql in sorted(oracle.items()):
     files = glob.glob(f"{out}/{name}/*.parquet")
     if not files:
@@ -66,5 +81,5 @@ for name, sql in sorted(oracle.items()):
               for c in gs.columns if str(gs[c].dtype) != str(es[c].dtype)]
         note = f" (dtype drift: {dt})" if dt else ""
         print(f"OK   {name}: {len(gs)} rows{note}")
-print(f"{len(oracle)-fails}/{len(oracle)} queries match")
+print(f"{total-fails}/{total} queries match")
 sys.exit(1 if fails else 0)

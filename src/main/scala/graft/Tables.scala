@@ -235,13 +235,17 @@ object Tables extends QueryModule {
   private[graft] def writeFeedFile(df: org.apache.spark.sql.DataFrame,
       destDir: java.io.File, name: String, seq: Int): Unit = {
     val tmp = scratchDir("graft_feed_tmp_")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
-    val part = tmp.listFiles.find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(
-        s"empty feed slice for $name — the feed builder must never " +
-          "produce a fileless generation"))
     val dst = new java.io.File(destDir, name).toPath
-    java.nio.file.Files.move(part.toPath, dst)
+    // the write dir is dropped as soon as its one part file has moved
+    // out (or the write failed), not left to the shutdown hook
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+      val part = tmp.listFiles.find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(
+          s"empty feed slice for $name — a replay feed must never " +
+            "produce a fileless generation"))
+      java.nio.file.Files.move(part.toPath, dst)
+    } finally { rmTree(tmp); tmpDirs.remove(tmp) }
     java.nio.file.Files.setLastModifiedTime(dst,
       java.nio.file.attribute.FileTime.fromMillis(
         1700000000000L + seq.toLong * 60000L))

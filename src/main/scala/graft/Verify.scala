@@ -6,10 +6,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     ToolLogging.init()
-    // args: sfDir outDir [queryName...] — trailing names restrict the
-    // dump (local spot-checks); the driver's 2-arg form dumps all.
+    // args: sfDir outDir [queryName...] — trailing names, or else
+    // SPARK_GRAFT_ONLY=q1,q2 (as Bench reads it), restrict the dump
+    // (local spot-checks); the 2-arg form dumps all.
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2).toSet
+    val only =
+      if (args.length > 2) args.drop(2).toSet
+      else sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
+        .split(",").map(_.trim).filter(_.nonEmpty).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

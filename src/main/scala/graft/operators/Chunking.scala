@@ -240,7 +240,8 @@ object Chunking extends graft.QueryModule {
 
   /** GRADED: the stream-built chunk store — batch oracle VERBATIM. */
   def chunkStoreStreamed(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${streamedChunksDir(spark, dir)}/chunks/*")
+    spark.read.parquet(
+      Replay.batchDirs(s"${streamedChunksDir(spark, dir)}/chunks"): _*)
       .select(col("doc_id"), col("chunk_idx"), col("start_tok"),
         col("n_tokens"), col("chunk_md5"))
       .orderBy("doc_id", "chunk_idx")

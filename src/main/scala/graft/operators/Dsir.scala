@@ -183,7 +183,8 @@ object Dsir extends graft.QueryModule {
     * table per shipping cycle, exactly this shape. */
   def dsirSelectedStreamed(spark: SparkSession, dir: String): DataFrame = {
     val top = spark.read
-      .parquet(s"${streamedScoresDir(spark, dir)}/scores/*")
+      .parquet(
+        Replay.batchDirs(s"${streamedScoresDir(spark, dir)}/scores"): _*)
       .orderBy(col("score_ppm").desc, col("doc_id"))
       .limit(SelK)
     val w = org.apache.spark.sql.expressions.Window

@@ -392,7 +392,8 @@ object LangId extends graft.QueryModule {
     * is that the online-inference plumbing (feed, trigger, per-batch
     * sinks) preserves exactly the one-shot result. */
   def langidConfusionStreamed(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${streamedPredsDir(spark, dir)}/preds/*")
+    spark.read.parquet(
+      Replay.batchDirs(s"${streamedPredsDir(spark, dir)}/preds"): _*)
       .groupBy(col("lang_true"), col("lang_pred"))
       .agg(count(lit(1)).as("n"))
       .orderBy("lang_true", "lang_pred")

@@ -268,7 +268,8 @@ object SemDedupMaintained extends graft.QueryModule {
     * oracle verbatim. */
   def semanticDedupPairsStreamed(spark: SparkSession,
       dir: String): DataFrame =
-    spark.read.parquet(s"${streamedPairsDir(spark, dir)}/pairs/*")
+    spark.read.parquet(
+      Replay.batchDirs(s"${streamedPairsDir(spark, dir)}/pairs"): _*)
       .select(col("vec_a"), col("vec_b"), col("cosine_sim"))
       .orderBy("vec_a", "vec_b")
 

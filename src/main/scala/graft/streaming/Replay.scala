@@ -8,9 +8,10 @@ import graft.Tables
 
 /** The bounded-replay kit every AvailableNow stream goes through: build
   * a chopped feed ([[feed]]), stream it back ([[read]]), drive the query
-  * to the end of its input ([[run]]) and find its last versioned state
-  * ([[latest]]). A bounded replay must give the batch answer however its
-  * feed is chopped ("One SQL to Rule Them All", SIGMOD 2019); with one
+  * to the end of its input ([[run]]) and find what it wrote: its last
+  * versioned state ([[latest]]) or its per-batch dirs ([[batchDirs]]).
+  * A bounded replay must give the batch answer however its feed is
+  * chopped ("One SQL to Rule Them All", SIGMOD 2019); with one
   * feed builder and one drive loop, a harness that stops a replay after
   * micro-batch k and restarts it has one place to hook in. Every
   * directory is a [[graft.Tables.scratchDir]]: one scratch root, one
@@ -71,6 +72,15 @@ object Replay {
           e.getCause != null => origin(e.getCause)
     case other => other
   }
+
+  /** Every per-batch directory under `root` (a `foreachBatch` replay's
+    * `b<N>` overwrite dirs plus any base generation beside them), as
+    * explicit paths in name order. Read these rather than a glob over
+    * `root`: a glob path makes Spark's file-sink metadata probe log a
+    * WARN with a full stack trace on every read. */
+  def batchDirs(root: String): Seq[String] =
+    Option(new java.io.File(root).listFiles).getOrElse(Array.empty)
+      .filter(_.isDirectory).map(_.getAbsolutePath).sorted.toSeq
 
   /** The highest-numbered `v<N>` directory under `root`: the last state
     * version a versioned `foreachBatch` replay wrote. */

@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.{IncrementalDedup, Similarity, TextOps}
+import graft.plans.{DedupSignature, Extensions}
 import graft.Tables
 
 /** Invariants of the incremental (batch-vs-corpus) dedup classifier on
@@ -288,4 +294,92 @@ class IncrementalDedupSpec extends SparkSpec {
       .filter($"batch" === 2).collect().map(_.toSeq).toSet
     assert(viaCompacted == viaGrown)
   }
+
+  test("one inline classify build signs each base doc once and scans " +
+      "the base documents once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // the shared incoming index is signed by the real kernel, before
+    // the counting one is installed
+    val incPath = IncrementalDedup.incIndexPath(spark, sf0001)
+    val ss = Extensions.newSession(spark)
+    ss.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "dedup_signature", e => CountedSignature(e.head), "scala_udf")
+    CountedSignature.calls.set(0L)
+    val plan = IncrementalDedup.withPins { pin =>
+      val v = IncrementalDedup.classify(ss,
+        Tables(ss, sf0001, "documents")
+          .select($"doc_id", $"text", $"source"), pin,
+        Some(IncrementalDedup.readIndex(ss, incPath)))
+      v.collect()
+      v.queryExecution.executedPlan
+    }
+    val base = docs.filter(!IncrementalDedup.isIncoming)
+    val signed = CountedSignature.calls.get
+    assert(signed == base.filter($"text".isNotNull).count(),
+      s"$signed kernel calls for the base side")
+    // every scan that ran, the pinned base frame's own plan included
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val textScans = nodes(plan).collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "documents.parquet") &&
+            s.requiredSchema.fieldNames.contains("text") =>
+        s.metrics("numOutputRows")
+    }.distinctBy(_.id)
+    assert(textScans.map(_.value).sum == docs.count(),
+      s"documents text rows scanned: ${textScans.map(_.value)}")
+  }
+
+  test("job-count pin: a cold verdicts build at sf0.001 launches at " +
+      "most 15 jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // every JVM-wide memo (shared index, schemas) is warm; a new session
+    // has its own ResultCache key, so its verdicts build is cold
+    IncrementalDedup.verdicts(spark, sf0001)
+    val ss = Extensions.newSession(spark)
+    val sc = spark.sparkContext
+    val group = "incremental-dedup-job-pin"
+    val jobs = new AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    try {
+      sc.setJobGroup(group, "cold verdicts build")
+      try IncrementalDedup.verdicts(ss, sf0001)
+      finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(counter)
+    // 16 when the base side was three passes (exact-tier hash, bands,
+    // candidate gram sets); 15 with the one pinned index pass
+    assert(jobs.get > 0 && jobs.get <= 15, s"${jobs.get} jobs")
+  }
+}
+
+/** `dedup_signature` behind a call counter: the same kernel, evaluated
+  * through the interpreted path so every call passes the counter. */
+case class CountedSignature(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = DedupSignature.ResultType
+  override def nullable: Boolean = true
+  override def prettyName: String = "dedup_signature"
+  override protected def nullSafeEval(input: Any): Any = {
+    CountedSignature.calls.incrementAndGet()
+    DedupSignature.compute(input.asInstanceOf[UTF8String])
+  }
+  override protected def withNewChildInternal(c: Expression): CountedSignature =
+    copy(child = c)
+}
+
+object CountedSignature {
+  val calls = new AtomicLong()
 }

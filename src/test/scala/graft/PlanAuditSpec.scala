@@ -461,12 +461,10 @@ class PlanAuditSpec extends SparkSpec {
       case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
     }
     val docs = Tables(spark, sf0001, "documents").select($"doc_id", $"text")
-    val fanned = Tables.fanOut(spark, docs)
     val passes = Seq(
       "buildIndex" -> IncrementalDedup.buildIndex(spark, docs),
-      "classify base bands" -> IncrementalDedup.baseBandsOf(spark, fanned),
-      "classify base sets" -> IncrementalDedup.baseSetsOf(spark, fanned,
-        Seq(1L, 2L, 3L).toDF("doc_id")))
+      // the in-memory base index that classify pins
+      "classify base index" -> IncrementalDedup.baseIndexOf(spark, docs))
     for ((name, df) <- passes) {
       val plan = df.queryExecution.executedPlan
       val ns = nodes(plan)

@@ -121,6 +121,16 @@ class ReplaySpec extends SparkSpec {
     }
   }
 
+  test("a feed build leaves none of its per-slice write dirs behind") {
+    val root = Tables.scratchDir("graft_replayspec_root_").getParentFile
+    def writeDirs = root.listFiles.map(_.getName)
+      .filter(_.startsWith("graft_feed_tmp_")).toSet
+    val before = writeDirs
+    assert(sliceFiles(idFeed("graft_replayspec_tmp_in_")).length == 3)
+    val left = writeDirs -- before
+    assert(left.isEmpty, s"feed write dirs outlived the build: $left")
+  }
+
   test("the hash-chopped feeds hold, in file i, exactly partition i of " +
       "repartition(3, key)") {
     val docs = Tables(spark, sf0001, "documents")
