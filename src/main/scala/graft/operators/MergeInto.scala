@@ -32,7 +32,7 @@ import graft.streaming.Replay
   * Spark-first shape: Spark 4's `DataFrame.mergeInto` writer needs a
   * v2 table with row-level-operation support; over immutable parquet
   * the same contract is the three-way set algebra below — kept =
-  * target ∖ source-keys (broadcast anti join), matched arms = inner
+  * target ∖ U/D source keys (broadcast anti join), matched arms = inner
   * join + per-arm projection, inserts = source ∖ target-keys — all
   * O(|target| map work + |source| broadcast), no shuffle of the
   * target. The cardinality gate is one aggregate over the SOURCE
@@ -93,7 +93,9 @@ object MergeInto extends graft.QueryModule {
       throw new MergeCardinalityException(
         "MERGE: multiple source rows match the same target row — the " +
           "statement is ambiguous and must fail, not last-writer-win")
-    val srcKeys = source.select(col("k"))
+    // only the UPDATE and DELETE arms retire a matched target row: a
+    // matched row whose _op fires no arm (a matched 'I') is kept
+    val srcKeys = source.filter(col("_op").isin("U", "D")).select(col("k"))
     val kept = target.join(broadcast(srcKeys),
       target("o_orderkey") === srcKeys("k"), "left_anti")
     // matched arms: DELETE emits nothing; UPDATE projects the new row
@@ -259,7 +261,7 @@ object MergeInto extends graft.QueryModule {
       hexes.map(c => s"'$c'").mkString(", ") + ")"
 
   /** The post-state derived set-theoretically (no MERGE in DuckDB):
-    * kept = target whose key is in no source arm; updated = the 'U'
+    * kept = target whose key no 'U' or 'D' row names; updated = the 'U'
     * class with the arm's SET applied; deletes vanish; inserts = the
     * 'I' class under its negated key. The insert group's key sum is
     * NEGATIVE (all negated keys): Spark's pmod is always in [0, M)

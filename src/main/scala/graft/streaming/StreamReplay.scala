@@ -654,8 +654,8 @@ object StreamReplay extends graft.QueryModule {
     }
     val idxPath = graft.operators.IncrementalDedup.indexPath(ss, dir)
     // the batch's signature work is a semi-joined slice of the SHARED
-    // incoming index (r6 verdict #1) — each micro-batch is pure index
-    // algebra, no per-batch generator runs
+    // incoming index (r6 verdict #1) — each micro-batch is one index
+    // probe, no per-batch generator runs
     val incIdxPath = graft.operators.IncrementalDedup.incIndexPath(ss, dir)
     val out = graft.Tables.scratchDir("graft_incdedup_out_").getAbsolutePath
     val stream = Replay.read(ss, input, 1)

@@ -28,6 +28,20 @@ class MergeIntoSpec extends SparkSpec {
       (-9L, "MI", 900.0)))
   }
 
+  test("a matched insert-op row fires no arm: its target row is kept " +
+      "unchanged and nothing is inserted") {
+    // ANSI MERGE: WHEN NOT MATCHED AND _op = 'I' is the only insert
+    // arm, and no MATCHED arm names 'I' — the row is a no-op
+    val source = Seq(
+      ("I", 3L, Option("MI"), Option(999.0)), // matched, no arm fires
+      ("U", 1L, Option("MU"), Option(105.0)))
+      .toDF("_op", "k", "s", "v")
+    val out = MergeInto.merge(target, source)
+      .collect().map(r => (r.getLong(0), r.getString(2), r.getDouble(3)))
+      .toSet
+    assert(out == Set((1L, "MU", 105.0), (2L, "O", 200.0), (3L, "F", 300.0)))
+  }
+
   test("cardinality contract: two source rows matching one target row " +
       "throw; duplicates on UNMATCHED keys are not a violation") {
     val dup = Seq(("U", 1L, Option("MU"), Option(105.0)),

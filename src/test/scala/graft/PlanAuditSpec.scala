@@ -487,4 +487,52 @@ class PlanAuditSpec extends SparkSpec {
         s"$name evaluates the kernel more than once:\n$plan")
     }
   }
+
+  test("dedup classify is one probe pass: the base index is scanned " +
+      "once, probed in the scan's own stage, no array_intersect and no " +
+      "band explode") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.operators.IncrementalDedup
+    import spark.implicits._
+    val v = IncrementalDedup.classifyFromIndexes(spark,
+      Tables(spark, sf0001, "documents").filter(IncrementalDedup.isIncoming)
+        .select($"doc_id", $"source"),
+      IncrementalDedup.readIndex(spark,
+        IncrementalDedup.incIndexPath(spark, sf0001)),
+      IncrementalDedup.readIndex(spark,
+        IncrementalDedup.indexPath(spark, sf0001)))
+    val plan = v.queryExecution.executedPlan
+    // every node with its ancestors, nearest first
+    def paths(p: SparkPlan, up: List[SparkPlan]): Seq[List[SparkPlan]] = {
+      val here = p :: up
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case other => other.children ++ other.subqueries
+      }
+      here +: kids.flatMap(paths(_, here))
+    }
+    val all = paths(plan, Nil)
+    val baseScans = all.filter(_.head match {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.getName == "is_inc=false")
+      case _ => false
+    })
+    assert(baseScans.size == 1, s"base index scans: ${baseScans.size}\n$plan")
+    // the scan's stage: the scan and its ancestors up to the first
+    // exchange — the probe and the partial min(tier) run in it, so base
+    // rows never cross a shuffle
+    val stage = baseScans.head.takeWhile(!_.isInstanceOf[Exchange])
+    assert(stage.exists(_.isInstanceOf[GenerateExec]) &&
+      stage.exists(_.isInstanceOf[HashAggregateExec]),
+      s"the probe is not in the base scan's stage:\n$plan")
+    val gens = all.map(_.head).collect { case g: GenerateExec => g }
+    assert(gens.forall(_.generator.children.forall(_.isInstanceOf[ScalaUDF])),
+      s"a Generate other than the probe's hits:\n$plan")
+    assert(!plan.toString.contains("array_intersect"), plan.toString)
+  }
 }
