@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.plans.Extensions
+import graft.sources.Substrate
 
 /** Loaders for the driver's parquet tables (TESTDATA.md).
   *
@@ -31,7 +32,9 @@ object Tables extends QueryModule {
   // future writer that replaces files under a memoized path with a
   // DIFFERENT schema would silently read through the stale StructType
   // (missing columns as nulls) — key such a path by a file-listing
-  // fingerprint instead, or don't memoize it.
+  // fingerprint instead, or don't memoize it. Every scratch
+  // materialization is built through [[graft.sources.Substrate]], the
+  // one place such a corpus fingerprint would go.
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.apache.spark.sql.types.StructType]()
@@ -67,20 +70,15 @@ object Tables extends QueryModule {
   // row-level DataFilter (PlanAuditSpec asserts both properties plus
   // fewer files read than exist).
   // ---------------------------------------------------------------
-  private val partitionedOrders =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val tmpDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
   private val hookInstalled =
     new java.util.concurrent.atomic.AtomicBoolean()
-  private def rmTree(f: java.io.File): Unit = {
+  private[graft] def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles).getOrElse(Array.empty).foreach(rmTree)
     f.delete(); ()
   }
-
-  private val eventsMicrosDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The µs-converted `events` copy for `sfDir` (built on first use).
     *
@@ -93,10 +91,7 @@ object Tables extends QueryModule {
     * At warehouse scale this is exactly where such a shim belongs:
     * fix the table format once at ingest, not on every query. */
   private[graft] def eventsMicros(spark: SparkSession, sfDir: String): String =
-    eventsMicrosDirs.computeIfAbsent(sfDir, { _ =>
-      installCleanupHook()
-      val f = newTempDir("graft_events_us_")
-      tmpDirs.add(f)
+    Substrate.dir("graft_events_us_", sfDir) { out =>
       // The schema converter checks `!isAdjustedToUTC && inferTimestampNTZ
       // → TIMESTAMP_NTZ` BEFORE `unit == NANOS && nanosAsLong → LONG`
       // (ParquetToSparkSchemaConverter.convertTimestampType), so the
@@ -126,15 +121,14 @@ object Tables extends QueryModule {
               .expr("timestamp_micros(ts div 1000)"))
           case _ => raw
         }
-        norm.write.mode("overwrite").parquet(f.getAbsolutePath)
+        norm.write.mode("overwrite").parquet(out)
       } finally {
         prev match {
           case Some(p) => SparkSession.setActiveSession(p)
           case None    => SparkSession.clearActiveSession()
         }
       }
-      f.getAbsolutePath
-    })
+    }
 
   // Scratch root: RAM-backed when the host offers it (r12, guide §6).
   // Everything under scratchDir is bounded (MB-scale derived tables,
@@ -223,6 +217,11 @@ object Tables extends QueryModule {
     f
   }
 
+  /** Delete scratch dir `f` now rather than at JVM exit. */
+  private[graft] def dropScratch(f: java.io.File): Unit = {
+    rmTree(f); tmpDirs.remove(f); ()
+  }
+
   /** Write `df` as ONE parquet file `destDir/name` with an EXPLICIT
     * modification time (r10 review finding: streaming file sources
     * order by mtime, and Files.move keeps the write-time mtime — on a
@@ -245,7 +244,7 @@ object Tables extends QueryModule {
           s"empty feed slice for $name — a replay feed must never " +
             "produce a fileless generation"))
       java.nio.file.Files.move(part.toPath, dst)
-    } finally { rmTree(tmp); tmpDirs.remove(tmp) }
+    } finally dropScratch(tmp)
     java.nio.file.Files.setLastModifiedTime(dst,
       java.nio.file.attribute.FileTime.fromMillis(
         1700000000000L + seq.toLong * 60000L))
@@ -260,15 +259,11 @@ object Tables extends QueryModule {
 
   /** The partitioned `orders` copy for `sfDir` (built on first use). */
   def ordersPartitioned(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = partitionedOrders.computeIfAbsent(sfDir, { _ =>
-      installCleanupHook()
-      val f = newTempDir("graft_orders_part_")
-      tmpDirs.add(f)
+    val path = Substrate.dir("graft_orders_part_", sfDir) { out =>
       apply(spark, sfDir, "orders")
         .write.mode("overwrite").partitionBy("o_orderpriority")
-        .parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+        .parquet(out)
+    }
     spark.read.parquet(path)
   }
 
@@ -310,9 +305,6 @@ object Tables extends QueryModule {
   // `dynamicpruning` partition filter.
   // ---------------------------------------------------------------
 
-  private val priorityDims =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Tiny priority-dimension table (one row per priority, a `tier`
     * rollup attribute), persisted as parquet once per (JVM, corpus) —
     * a real dim-table SCAN, so the DPP planner sees a filterable
@@ -320,17 +312,15 @@ object Tables extends QueryModule {
     * production shape). */
   def priorityDim(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val path = priorityDims.computeIfAbsent(sfDir, { _ =>
-      val f = scratchDir("graft_priority_dim_")
+    val path = Substrate.dir("graft_priority_dim_", sfDir) { out =>
       apply(spark, sfDir, "orders")
         .select(col("o_orderpriority")).distinct()
         .withColumn("tier",
           when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "rush")
             .otherwise("standard"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+        .write.mode("overwrite").parquet(out)
+    }
     spark.read.parquet(path)
   }
 
@@ -374,15 +364,9 @@ object Tables extends QueryModule {
   // nothing (PlanAuditSpec asserts the plan; the oracle grades the
   // values against the plain join).
   // ---------------------------------------------------------------
-  private val bucketedPairs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private def bucketedPair(spark: SparkSession, sfDir: String): (String, String) =
-    bucketedPairs.computeIfAbsent(sfDir, { _ =>
+    Substrate.state("graft_bucketed_", sfDir) { root =>
       import org.apache.spark.sql.functions.col
-      installCleanupHook()
-      val f = newTempDir("graft_bucketed_")
-      tmpDirs.add(f)
       // table names carry a dir digest: one catalog serves many corpora
       val tag = graft.sources.ResultCache.key(sfDir).take(8)
       val oT = s"graft_b_orders_$tag"
@@ -390,13 +374,13 @@ object Tables extends QueryModule {
       apply(spark, sfDir, "orders")
         .repartition(8, col("o_custkey"))
         .write.bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", s"${f.getAbsolutePath}/orders").saveAsTable(oT)
+        .option("path", s"$root/orders").saveAsTable(oT)
       apply(spark, sfDir, "customer")
         .repartition(8, col("c_custkey"))
         .write.bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", s"${f.getAbsolutePath}/customer").saveAsTable(cT)
+        .option("path", s"$root/customer").saveAsTable(cT)
       (oT, cT)
-    })
+    }
 
   /** GRADED bucketed co-located join: revenue per market segment over
     * orders ⋈ customer where the join reads bucket layout instead of
@@ -470,7 +454,7 @@ object Tables extends QueryModule {
     * back-fills executors freed by the others instead of serializing
     * whole builds end to end. Spark's scheduler is explicitly designed
     * for concurrent jobs from one application (FIFO back-fill);
-    * ResultCache/GramStore builds are per-key-locked, so concurrent
+    * ResultCache/Substrate builds are per-key-locked, so concurrent
     * distinct-substrate builds are safe and a shared key builds once.
     * Results return in call order.
     *

@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Substrate
 
 /** Per-file BLOOM-FILTER index — file skipping where zone maps can't.
   * The layout rows so far each prune a CLUSTERED key: range sort →
@@ -45,18 +45,14 @@ object BloomIndex extends graft.QueryModule {
   private[graft] val ProbeKey = 1L
 
   // manifest dir, once per (JVM, corpus)
-  private val manifestDirs = new ConcurrentHashMap[String, String]()
-
   private[graft] def manifestDir(spark: SparkSession, sfDir: String): String =
-    manifestDirs.computeIfAbsent(sfDir, { _ =>
+    Substrate.dir("graft_bloom_manifest_", sfDir) { out =>
       val frag = Compaction.fragmentedOrdersDir(spark, sfDir)
-      val out = Tables.scratchDir("graft_bloom_manifest_").getAbsolutePath
       spark.read.parquet(frag)
         .groupBy(input_file_name().as("file"))
         .agg(expr("bloom_sketch(CAST(o_custkey AS STRING))").as("bits"))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** Bit positions for `key` — delegates to the sketch's OWN addressing
     * ([[graft.plans.BloomSketch.positions]]) so prober and builder can

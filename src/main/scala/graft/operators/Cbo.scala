@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 
 /** COST-BASED OPTIMIZATION made to DO something (r8 verdict #5):
   * `join_card_estimate` ([[Stats]]) sanity-checks the estimator;
@@ -39,12 +40,9 @@ object Cbo extends graft.QueryModule {
 
   /** Catalog tables (lineitem/orders/part) + stats, once per
     * (JVM, corpus); returns the table names. */
-  private val tablesMemo =
-    new ConcurrentHashMap[String, (String, String, String)]()
   private[graft] def analyzedTables(spark: SparkSession,
       dir: String): (String, String, String) =
-    tablesMemo.computeIfAbsent(dir, { _ =>
-      val root = Tables.scratchDir("graft_cbo_").getAbsolutePath
+    Substrate.state("graft_cbo_", dir) { root =>
       val tag = graft.sources.ResultCache.key(dir).take(8)
       val (lT, oT, pT) =
         (s"graft_cbo_lineitem_$tag", s"graft_cbo_orders_$tag",
@@ -65,7 +63,7 @@ object Cbo extends graft.QueryModule {
       spark.sql(s"ANALYZE TABLE $pT COMPUTE STATISTICS FOR COLUMNS " +
         "p_partkey, p_size")
       (lT, oT, pT)
-    })
+    }
 
   // one CBO clone and one stats-free clone per parent session (shared
   // catalog — stats visibility is gated by cbo.enabled, which is a

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Shingles
 import graft.plans.Extensions
+import graft.sources.Substrate
 import graft.streaming.Replay
 
 /** Document CHUNKING — the RAG / context-window preprocessing step
@@ -144,9 +145,6 @@ object Chunking extends graft.QueryModule {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => f.getName -> f.length).toMap
 
-  private val states =
-    new java.util.concurrent.ConcurrentHashMap[String, ChunkState]()
-
   /** Day-2 class: the [[IncrementalDedup.IncomingHexChars]] nibbles —
     * the corpus-wide ingest convention, disjoint from the erase class
     * ('a' ⊂ base), so the delete delta lands in day-1 files only. */
@@ -157,9 +155,7 @@ object Chunking extends graft.QueryModule {
   /** Build (once per JVM, corpus) the two-generation chunk store:
     * base docs' chunks overwrite, day-2 docs' chunks append. */
   private[graft] def state(spark: SparkSession, dir: String): ChunkState =
-    states.computeIfAbsent(dir, { _ =>
-      val root = graft.Tables.scratchDir("graft_chunk_store_")
-        .getAbsolutePath
+    Substrate.state("graft_chunk_store_", dir) { root =>
       val docs = Tables(spark, dir, "documents")
       chunkRowsOf(docs.filter(!isNewDoc))
         .write.mode("overwrite").parquet(root)
@@ -167,7 +163,7 @@ object Chunking extends graft.QueryModule {
       chunkRowsOf(docs.filter(isNewDoc))
         .write.mode("append").parquet(root)
       ChunkState(root, baseFiles, listPq(root) -- baseFiles.keys)
-    })
+    }
 
   /** GRADED: the maintained (base ∪ day-2) chunk store — the
     * from-scratch oracle over ALL docs proves the two-generation
@@ -202,9 +198,6 @@ object Chunking extends graft.QueryModule {
       .filter(col("n_docs") > 1)
       .orderBy("chunk_md5")
 
-  private val streamedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** STREAMED day-2 chunk ingest (AvailableNow + foreachBatch): the
     * base generation is written once, then the day-2 docs arrive in ≥2
     * real micro-batches (2-file feed, maxFilesPerTrigger=1) and each
@@ -217,9 +210,7 @@ object Chunking extends graft.QueryModule {
     * preserves exactly the one-shot result. */
   private[graft] def streamedChunksDir(spark: SparkSession,
       dir: String): String =
-    streamedDirs.computeIfAbsent(dir, { _ =>
-      val root = graft.Tables.scratchDir("graft_chunk_stream_")
-        .getAbsolutePath
+    Substrate.dir("graft_chunk_stream_", dir) { root =>
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
       val docs = Tables(ss, dir, "documents")
@@ -235,8 +226,7 @@ object Chunking extends graft.QueryModule {
           chunkRowsOf(batch.toDF())
             .write.mode("overwrite").parquet(s"$root/chunks/b$batchId")
       }, "graft_chunk_sckpt_")
-      root
-    })
+    }
 
   /** GRADED: the stream-built chunk store — batch oracle VERBATIM. */
   def chunkStoreStreamed(spark: SparkSession, dir: String): DataFrame =

@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Substrate
 
 /** Small-file compaction — the OPTIMIZE/bin-packing maintenance
   * operator every 100 TB table needs: streaming ingest and per-batch
@@ -64,30 +64,23 @@ object Compaction extends graft.QueryModule {
   }
 
   // fragmented + compacted `orders` copies, once per (JVM, corpus dir)
-  private val fragmentedDirs = new ConcurrentHashMap[String, String]()
-  private val compactedDirs = new ConcurrentHashMap[String, String]()
-
   /** An ingest-shattered `orders` copy: [[FragmentFiles]] round-robin
     * fragments, none key-clustered — the worst-case layout. */
   private[graft] def fragmentedOrdersDir(spark: SparkSession,
       sfDir: String): String =
-    fragmentedDirs.computeIfAbsent(sfDir, { _ =>
-      val f = Tables.scratchDir("graft_frag_orders_")
+    Substrate.dir("graft_frag_orders_", sfDir) { out =>
       Tables(spark, sfDir, "orders")
         .repartition(FragmentFiles)
-        .write.mode("overwrite").parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+        .write.mode("overwrite").parquet(out)
+    }
 
   /** The compacted copy (default production target). */
   private[graft] def compactedOrdersDir(spark: SparkSession,
       sfDir: String): String =
-    compactedDirs.computeIfAbsent(sfDir, { _ =>
-      val f = Tables.scratchDir("graft_compact_orders_")
+    Substrate.dir("graft_compact_orders_", sfDir) { out =>
       compact(spark, fragmentedOrdersDir(spark, sfDir),
-        f.getAbsolutePath, "o_orderkey", DefaultTargetBytes)
-      f.getAbsolutePath
-    })
+        out, "o_orderkey", DefaultTargetBytes)
+    }
 
   /** GRADED content-parity aggregate over the compacted copy, judged
     * against the original table: per-status counts, money sum, and the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.ScalarFns
+import graft.sources.Substrate
 
 /** REVENUE CONCENTRATION — Lorenz-curve deciles and the Gini
   * coefficient over per-customer spend: "what share of revenue do the
@@ -52,13 +53,9 @@ object Concentration extends graft.QueryModule {
   // frame, so its blocks are released right after — the GraphOps
   // serve-from-scratch discipline: rebuildable file-scan lineage,
   // zero pinned blocks.
-  private val rankedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Per-customer spend with exact global rank (two-phase). */
   private[graft] def rankedSpend(spark: SparkSession, dir: String): DataFrame = {
-    val path = rankedDirs.computeIfAbsent(dir, { _ =>
-      val out = graft.Tables.scratchDir("graft_ranked_spend_").getAbsolutePath
+    val path = Substrate.dir("graft_ranked_spend_", dir) { out =>
       val spend = Tables(spark, dir, "orders")
         .groupBy(col("o_custkey"))
         .agg(sum(dec(col("o_totalprice"))).as("spend"))
@@ -89,8 +86,7 @@ object Concentration extends graft.QueryModule {
             (col("offset") + col("lrank")).as("rnk"))
           .write.mode("overwrite").parquet(out)
       } finally { b.unpersist(blocking = false); () }
-      out
-    })
+    }
     spark.read.parquet(path)
   }
 

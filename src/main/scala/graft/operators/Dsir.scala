@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 import graft.streaming.Replay
 
 /** DSIR-style DATA SELECTION via hashed n-gram importance (Xie et al.,
@@ -135,9 +136,6 @@ object Dsir extends graft.QueryModule {
       .orderBy("rank")
   }
 
-  private val streamedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build (once per JVM, corpus) the STREAMED-SCORING artifact (r10
     * brief #6 / r11 verdict #2 — the selection tier's streamed twin):
     * the 64-row bucket model built ONCE and FROZEN to scratch parquet
@@ -151,9 +149,7 @@ object Dsir extends graft.QueryModule {
     * rewrites its own dir, never appends duplicates). */
   private[graft] def streamedScoresDir(spark: SparkSession,
       dir: String): String =
-    streamedDirs.computeIfAbsent(dir, { _ =>
-      val root = graft.Tables.scratchDir("graft_dsir_stream_")
-        .getAbsolutePath
+    Substrate.dir("graft_dsir_stream_", dir) { root =>
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
       dsirBucketModel(ss, dir).write.mode("overwrite")
@@ -168,8 +164,7 @@ object Dsir extends graft.QueryModule {
           scoredOf(batch.toDF(), ss.read.parquet(s"$root/model"))
             .write.mode("overwrite").parquet(s"$root/scores/b$batchId")
       }, "graft_dsir_sckpt_")
-      root
-    })
+    }
 
   /** GRADED: the STREAM-SCORED selection — batch oracle VERBATIM
     * (`dsir_selected_docs`): per-doc scoring against a frozen model is

@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.Substrate
 
 /** POSITION-DELETE erasure (deletion vectors) — the modern lakehouse
   * answer to right-to-erasure on an immutable table (Iceberg v2
@@ -56,10 +56,8 @@ object Erasure extends graft.QueryModule {
   // frozen multi-file events copy + its position-delete file, once per
   // (JVM, corpus); the DV build must address the COPY's files, so both
   // live together
-  private val states = new ConcurrentHashMap[String, (String, String)]()
   private[graft] def state(spark: SparkSession, dir: String): (String, String) =
-    states.computeIfAbsent(dir, { _ =>
-      val data = Tables.scratchDir("graft_dv_data_").getAbsolutePath
+    Substrate.state("graft_dv_data_", dir) { data =>
       Tables(spark, dir, "events")
         .repartition(4, col("event_id"))
         .write.mode("overwrite").parquet(data)
@@ -71,7 +69,7 @@ object Erasure extends graft.QueryModule {
         .select(col("file"), col("pos"))
         .write.mode("overwrite").parquet(dv)
       (data, dv)
-    })
+    }
 
   /** The erased VIEW: data files untouched, deletes applied at read
     * time by position. */
@@ -120,12 +118,9 @@ object Erasure extends graft.QueryModule {
   /** Folded snapshot per (JVM, corpus): (data dir, delete-file dirs —
     * ALWAYS empty after a fold; the pair shape mirrors [[state]] so
     * specs can assert the retirement). */
-  private val compactedStates =
-    new ConcurrentHashMap[String, (String, Seq[String])]()
   private[graft] def compactedState(spark: SparkSession,
       dir: String): (String, Seq[String]) =
-    compactedStates.computeIfAbsent(dir, { _ =>
-      val out = Tables.scratchDir("graft_dv_folded_").getAbsolutePath
+    Substrate.state("graft_dv_folded_", dir) { out =>
       // read THROUGH the deletion vectors, write a clean range-sorted
       // copy: erased rows' bytes never reach the new files
       erasedView(spark, dir)
@@ -133,7 +128,7 @@ object Erasure extends graft.QueryModule {
         .sortWithinPartitions("event_id")
         .write.mode("overwrite").parquet(out)
       (out, Seq.empty)
-    })
+    }
 
   /** GRADED: the same aggregate over the FOLDED copy — a plain scan,
     * no anti-join, no delete files — judged by the SAME NOT-predicate

@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.sources.Substrate
 
 /** Interchange-format sources on the GRADED path — the engine must
   * read more than its native parquet: ORC (the other columnar
@@ -25,10 +25,6 @@ import graft.Tables
   *    warehouse formats does not change the plan discipline.
   */
 object Formats extends graft.QueryModule {
-  private val csvDirs = new ConcurrentHashMap[String, String]()
-  private val orcDirs = new ConcurrentHashMap[String, String]()
-  private val jsonDirs = new ConcurrentHashMap[String, String]()
-
   private[graft] val TsFmt = "yyyy-MM-dd HH:mm:ss"
 
   private[graft] val OrdersCsvSchema = StructType(Seq(
@@ -54,22 +50,18 @@ object Formats extends graft.QueryModule {
       .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
 
   private[graft] def csvOrdersDir(spark: SparkSession, sfDir: String): String =
-    csvDirs.computeIfAbsent(sfDir, { _ =>
-      val f = Tables.scratchDir("graft_csv_orders_")
+    Substrate.dir("graft_csv_orders_", sfDir) { out =>
       ordersTextSource(spark, sfDir)
         .write.mode("overwrite")
         .option("header", "true").option("timestampFormat", TsFmt)
-        .csv(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+        .csv(out)
+    }
 
   private[graft] def orcOrdersDir(spark: SparkSession, sfDir: String): String =
-    orcDirs.computeIfAbsent(sfDir, { _ =>
-      val f = Tables.scratchDir("graft_orc_orders_")
+    Substrate.dir("graft_orc_orders_", sfDir) { out =>
       Tables(spark, sfDir, "orders")
-        .write.mode("overwrite").orc(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+        .write.mode("overwrite").orc(out)
+    }
 
   private[graft] def agg(df: DataFrame): DataFrame =
     df.groupBy(col("o_orderpriority"))
@@ -82,14 +74,12 @@ object Formats extends graft.QueryModule {
       .orderBy("o_orderpriority")
 
   private[graft] def jsonOrdersDir(spark: SparkSession, sfDir: String): String =
-    jsonDirs.computeIfAbsent(sfDir, { _ =>
-      val f = Tables.scratchDir("graft_json_orders_")
+    Substrate.dir("graft_json_orders_", sfDir) { out =>
       ordersTextSource(spark, sfDir)
         .write.mode("overwrite")
         .option("timestampFormat", TsFmt)
-        .json(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+        .json(out)
+    }
 
   /** GRADED: aggregate over the JSONL round-trip (explicit schema —
     * same no-infer discipline as CSV; JSONL is the de-facto LLM
@@ -120,26 +110,21 @@ object Formats extends graft.QueryModule {
 
   private[graft] final case class DlqState(goodDir: String,
       dlqDir: String)
-  private val dlqStates = new ConcurrentHashMap[String, DlqState]()
 
   // the poisoned feed (round-trip JSONL + a bad-lines file, as text),
   // shared by the batch split and the streamed replay twin
-  private val poisonFeeds = new ConcurrentHashMap[String, String]()
   private[graft] def poisonedFeedDir(spark: SparkSession,
       sfDir: String): String =
-    poisonFeeds.computeIfAbsent(sfDir, { _ =>
+    Substrate.dir("graft_dlq_feed_", sfDir) { feed =>
       import spark.implicits._
-      val feed = Tables.scratchDir("graft_dlq_feed_").getAbsolutePath
       spark.read.text(jsonOrdersDir(spark, sfDir))
         .write.mode("overwrite").text(feed)
       PoisonLines.toDF("value").coalesce(1)
         .write.mode("append").text(feed)
-      feed
-    })
+    }
 
   private[graft] def dlqState(spark: SparkSession, sfDir: String): DlqState =
-    dlqStates.computeIfAbsent(sfDir, { _ =>
-      val root = Tables.scratchDir("graft_dlq_").getAbsolutePath
+    Substrate.state("graft_dlq_", sfDir) { root =>
       val feedDir = poisonedFeedDir(spark, sfDir)
       // ONE permissive parse, split by the corrupt marker
       val schema = OrdersCsvSchema.add("_corrupt_record",
@@ -163,7 +148,7 @@ object Formats extends graft.QueryModule {
           .write.mode("overwrite").parquet(s"$root/dlq")
       } finally { parsed.unpersist(blocking = false); () }
       DlqState(s"$root/good", s"$root/dlq")
-    })
+    }
 
   /** GRADED: the landed table after dead-letter splitting — the same
     * aggregate and ORACLE as the clean round-trip: poisoned lines
@@ -190,8 +175,6 @@ object Formats extends graft.QueryModule {
   // schema, the read unions them, missing columns surface as NULL.
   // ----------------------------------------------------------------
 
-  private val evoDirs = new ConcurrentHashMap[String, String]()
-
   /** Two-generation orders copy: generation 1 (keys with md5 hex 0-7)
     * written with the original 6 columns; generation 2 (hex 8-f)
     * APPENDED with an added `o_channel` column (deterministic key % 3
@@ -199,20 +182,18 @@ object Formats extends graft.QueryModule {
     * generation 1. */
   private[graft] def evolvedOrdersDir(spark: SparkSession,
       sfDir: String): String =
-    evoDirs.computeIfAbsent(sfDir, { _ =>
-      val f = Tables.scratchDir("graft_evo_orders_")
+    Substrate.dir("graft_evo_orders_", sfDir) { out =>
       val o = Tables(spark, sfDir, "orders")
       val hx = substring(md5(col("o_orderkey").cast("string")), 1, 1)
       o.filter(hx < "8")
-        .write.mode("overwrite").parquet(f.getAbsolutePath)
+        .write.mode("overwrite").parquet(out)
       o.filter(hx >= "8")
         .withColumn("o_channel",
           when(col("o_orderkey") % 3 === 0, "web")
             .when(col("o_orderkey") % 3 === 1, "store")
             .otherwise("phone"))
-        .write.mode("append").parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+        .write.mode("append").parquet(out)
+    }
 
   /** GRADED: aggregate over the mergeSchema read — generation-1 rows
     * surface `o_channel` as NULL (reported as 'legacy'), generation-2
@@ -246,14 +227,11 @@ object Formats extends graft.QueryModule {
   // transform evaluation. The union is a plan-level concat.
   // ----------------------------------------------------------------
 
-  private val specEvoDirs = new ConcurrentHashMap[String, (String, String)]()
-
   /** The two generations (hex 0-7 → priority-partitioned, hex 8-f →
     * month-partitioned), built once per (JVM, corpus). */
   private[graft] def specEvolutionDirs(spark: SparkSession,
       sfDir: String): (String, String) =
-    specEvoDirs.computeIfAbsent(sfDir, { _ =>
-      val d1 = Tables.scratchDir("graft_psevo_g1_").getAbsolutePath
+    Substrate.state("graft_psevo_g1_", sfDir) { d1 =>
       val d2 = Tables.scratchDir("graft_psevo_g2_").getAbsolutePath
       val o = Tables(spark, sfDir, "orders")
       val hx = substring(md5(col("o_orderkey").cast("string")), 1, 1)
@@ -263,7 +241,7 @@ object Formats extends graft.QueryModule {
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
         .write.mode("overwrite").partitionBy("o_month").parquet(d2)
       (d1, d2)
-    })
+    }
 
   /** The spec-evolved read: each generation scanned under its own
     * layout, generation 1's month derived at read (it was never a

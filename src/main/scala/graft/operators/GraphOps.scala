@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.Substrate
 
 /** K-NN GRAPH + MULTI-SOURCE BFS — distributed graph traversal over a
   * similarity graph, the navigation primitive behind graph-ANN indexes
@@ -86,11 +87,8 @@ object GraphOps extends graft.QueryModule {
   // expensive part (IVF sweep + O(N·√N) candidate scoring) is
   // materialized ONCE per corpus and every degree variant derives
   // from it with one window.
-  private val scoredCandDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def scoredCandDir(spark: SparkSession, dir: String): String =
-    scoredCandDirs.computeIfAbsent(dir, { _ =>
-      val out = Tables.scratchDir("graft_knn_cand_").getAbsolutePath
+    Substrate.dir("graft_knn_cand_", dir) { out =>
       // top-2 coarse buckets per vector: the multi-probe assignment
       val wa = Window.partitionBy("vec_id")
         .orderBy(col("s").desc, col("cid"))
@@ -122,8 +120,7 @@ object GraphOps extends graft.QueryModule {
           "vb")
         .select(col("va"), col("vb"), expr("cosine_sim(ea, eb)").as("cs"))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** The scored candidate table as a frame (spec + margin mining). */
   private[graft] def scoredCand(spark: SparkSession, dir: String): DataFrame =
@@ -183,15 +180,11 @@ object GraphOps extends graft.QueryModule {
   // (JVM, corpus): the BFS, the beam search, and the recall row all
   // consume the same graph — three IVF sweeps for one substrate would
   // triple the dominant cost (r8: the graph gained its SEARCH path).
-  private val edgeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def knnEdgesDir(spark: SparkSession, dir: String,
       deg: Int = 2): String =
-    edgeDirs.computeIfAbsent(s"$dir#$deg", { _ =>
-      val out = Tables.scratchDir("graft_knn_edges_").getAbsolutePath
+    Substrate.dir("graft_knn_edges_", s"$dir#$deg") { out =>
       knnEdges(spark, dir, deg).write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   // ----------------------------------------------------------------
   // Graph INSERT maintenance (r8) — the lifecycle move the dedup
@@ -226,12 +219,9 @@ object GraphOps extends graft.QueryModule {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => f.getName -> f.length).toMap
 
-  private val maintainedStates =
-    new java.util.concurrent.ConcurrentHashMap[String, GraphState]()
   private[graft] def maintainedEdges(spark: SparkSession,
       dir: String): GraphState =
-    maintainedStates.computeIfAbsent(dir, { _ =>
-      val root = Tables.scratchDir("graft_knn_maint_").getAbsolutePath
+    Substrate.state("graft_knn_maint_", dir) { root =>
       val e = Tables(spark, dir, "embeddings")
       val base = e.filter(!isNewVec)
       val fresh = e.filter(isNewVec)
@@ -286,7 +276,7 @@ object GraphOps extends graft.QueryModule {
       topkSym(newCand).write.mode("append").parquet(root)
       val all = listParquet(root)
       GraphState(root, baseFiles, all -- baseFiles.keys, assignRoot)
-    })
+    }
 
   /** Exact-cosine top-2-per-`va` over a candidate pair set, then
     * symmetrized — the edge finisher shared by the maintained base
@@ -617,16 +607,13 @@ object GraphOps extends graft.QueryModule {
   // final beam per (JVM, corpus), served from scratch parquet: both
   // graded consumers (top-k + recall row) and bench repeats read one
   // walk; every loop checkpoint is released once the write lands
-  private val beamDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def beamDir(spark: SparkSession, dir: String,
       deg: Int = 2): String =
-    beamDirs.computeIfAbsent(s"$dir#$deg", { _ =>
+    Substrate.dir("graft_beam_", s"$dir#$deg") { out =>
       // walk loop plans non-adaptively (Similarity.loopSession, r12):
       // per-round frames are 16 rows; AQE only adds per-exchange jobs
       val edgesPath = knnEdgesDir(spark, dir, deg) // substrate: parent session
       val ls = Similarity.loopSession(spark)
-      val out = Tables.scratchDir("graft_beam_").getAbsolutePath
       val e = Tables(ls, dir, "embeddings")
       val edges = ls.read.parquet(edgesPath)
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -661,8 +648,7 @@ object GraphOps extends graft.QueryModule {
         }
         beam.write.mode("overwrite").parquet(out)
       } finally Similarity.releaseCheckpoint(beam)
-      out
-    })
+    }
 
   /** GRADED: top-10 retrieval off the final beam (query vector 0, the
     * board's standing query) — the graph-ANN answer, judged against
@@ -683,13 +669,10 @@ object GraphOps extends graft.QueryModule {
   // route through nor return an erased id. Post-deletion serving is
   // the half of index maintenance DELETE that actually matters: the
   // recall row below shows the walk still converges on the survivors.
-  private val beamErasedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def beamErasedDir(spark: SparkSession, dir: String): String =
-    beamErasedDirs.computeIfAbsent(dir, { _ =>
+    Substrate.dir("graft_beam_erased_", dir) { out =>
       val edgesPath = knnEdgesDir(spark, dir) // substrate: parent session
       val ls = Similarity.loopSession(spark)
-      val out = Tables.scratchDir("graft_beam_erased_").getAbsolutePath
       val e = Tables(ls, dir, "embeddings")
       val edges = IndexErasure.erasedView(ls, edgesPath,
         IndexErasure.erased(col("src")) || IndexErasure.erased(col("dst")))
@@ -724,8 +707,7 @@ object GraphOps extends graft.QueryModule {
         }
         beam.write.mode("overwrite").parquet(out)
       } finally Similarity.releaseCheckpoint(beam)
-      out
-    })
+    }
 
   /** GRADED: graph-ANN top-10 AFTER erasure — the beam walk over the
     * DV-filtered edge view; judged against the identical walk unrolled
@@ -827,13 +809,10 @@ object GraphOps extends graft.QueryModule {
 
   // the HNSW walk's final beam per (JVM, corpus) — descent + base walk
   // materialized once; both graded consumers read it
-  private val hnswDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def hnswBeamDir(spark: SparkSession, dir: String): String =
-    hnswDirs.computeIfAbsent(dir, { _ =>
+    Substrate.dir("graft_hnsw_", dir) { out =>
       val basePath = knnEdgesDir(spark, dir, 2) // substrate: parent session
       val ls = Similarity.loopSession(spark)
-      val out = Tables.scratchDir("graft_hnsw_").getAbsolutePath
       val e = Tables(ls, dir, "embeddings")
       val baseEdges = ls.read.parquet(basePath)
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -888,8 +867,7 @@ object GraphOps extends graft.QueryModule {
         }
         cur.write.mode("overwrite").parquet(out)
       } finally Similarity.releaseCheckpoint(cur)
-      out
-    })
+    }
 
   /** GRADED: top-10 off the HNSW walk's final beam — judged against
     * the per-layer unrolled walk in DuckDB. */
@@ -925,13 +903,10 @@ object GraphOps extends graft.QueryModule {
   // candidates only; base×base never re-forms). The walk then runs
   // over the union layer graphs and the union base graph — serving
   // composed with insert, the half of index maintenance that matters.
-  private val hnswMaintDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def hnswMaintainedDir(spark: SparkSession,
       dir: String): String =
-    hnswMaintDirs.computeIfAbsent(dir, { _ =>
+    Substrate.dir("graft_hnsw_maint_", dir) { out =>
       val st = maintainedEdges(spark, dir)
-      val out = Tables.scratchDir("graft_hnsw_maint_").getAbsolutePath
       val e = Tables(spark, dir, "embeddings")
       // the stored probe assignments — no coarse sweep re-runs here
       val baseAssign = spark.read.parquet(s"${st.assignRoot}/base")
@@ -1009,8 +984,7 @@ object GraphOps extends graft.QueryModule {
         }
         cur.write.mode("overwrite").parquet(s"$out/beam")
       } finally Similarity.releaseCheckpoint(cur)
-      out
-    })
+    }
 
   /** GRADED: HNSW serving composed with INSERT — top-10 off the
     * maintained-hierarchy walk (union layer graphs + union base
@@ -1051,13 +1025,10 @@ object GraphOps extends graft.QueryModule {
   // against the edge table and ONE window keyed (qid), so serving a
   // query batch costs the same number of Spark jobs as serving one
   // query — the ANN-serving amortization graph indexes exist for
-  private val beamBatchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def beamBatchDir(spark: SparkSession, dir: String): String =
-    beamBatchDirs.computeIfAbsent(dir, { _ =>
+    Substrate.dir("graft_beam_batch_", dir) { out =>
       val edgesPath = knnEdgesDir(spark, dir) // substrate: parent session
       val ls = Similarity.loopSession(spark)
-      val out = Tables.scratchDir("graft_beam_batch_").getAbsolutePath
       val e = Tables(ls, dir, "embeddings")
       val edges = ls.read.parquet(edgesPath)
       val qs = e.filter(col("vec_id") % BatchQueryMod === 0)
@@ -1095,8 +1066,7 @@ object GraphOps extends graft.QueryModule {
         }
         beam.write.mode("overwrite").parquet(out)
       } finally Similarity.releaseCheckpoint(beam)
-      out
-    })
+    }
 
   /** GRADED: BATCHED graph-ANN serving — top-10 per query for the
     * whole query set off ONE shared walk (every beam advances through

@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.Tables
+import graft.sources.Substrate
 
 /** INCREMENTAL deduplication — the ingest-time shape of the dedup
   * family (SURVEY.md §2.11 N1/N2): classify an INCOMING batch of
@@ -136,9 +136,6 @@ object IncrementalDedup extends graft.QueryModule {
   // `incremental_dedup_maintained` query ([[maintainedStats]]).
   // ----------------------------------------------------------------
 
-  private val fullIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The index row shape (doc_id, nh, m0..m3, hs) that [[buildIndex]]
     * writes, nullable as parquet reads it back. Every index read goes
     * through [[readIndex]] with it: a schema-less `read.parquet`
@@ -169,15 +166,13 @@ object IncrementalDedup extends graft.QueryModule {
     * scanned and signed exactly once per (JVM, dir) no matter how many
     * variants consume either half. */
   private[graft] def fullIndexPath(spark: SparkSession, dir: String): String =
-    fullIndexMemo.computeIfAbsent(dir, { _ =>
-      val f = Tables.scratchDir("graft_dedup_idx_")
+    Substrate.dir("graft_dedup_idx_", dir) { out =>
       buildIndex(spark,
         Tables(spark, dir, "documents").select(col("doc_id"), col("text")))
         .withColumn("is_inc", isIncoming)
         .write.mode("overwrite").partitionBy("is_inc")
-        .parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+        .parquet(out)
+    }
 
   /** The maintained BASE-corpus index: the `is_inc=false` partition of
     * the shared full-index build (reading the partition directory
@@ -384,14 +379,6 @@ object IncrementalDedup extends graft.QueryModule {
     (v1, v2)
   }
 
-  // day-1 admits' index rows (the grown index's DELTA file set),
-  // once per (JVM, dir)
-  private val grownDeltaMemo = new ConcurrentHashMap[String, String]()
-
-  /** Spec hook: the grown index's delta path, if built in this JVM. */
-  private[graft] def grownDeltaPathFor(dir: String): Option[String] =
-    Option(grownDeltaMemo.get(dir))
-
   private def perSourceStats(v: DataFrame, batch: Int): DataFrame =
     v.groupBy(col("source"))
       .agg(count(lit(1)).as("n_incoming"),
@@ -437,19 +424,14 @@ object IncrementalDedup extends graft.QueryModule {
     * built once per (JVM, dir) — shared by the maintained query and
     * the index-compaction variant. */
   private[graft] def grownDeltaPath(spark: SparkSession, dir: String): String =
-    grownDeltaMemo.computeIfAbsent(dir, { _ =>
-      val f = Tables.scratchDir("graft_dedup_idx_delta_")
+    Substrate.dir("graft_dedup_idx_delta_", dir) { out =>
       val incIdx = readIndex(spark, incIndexPath(spark, dir))
       val v1 = verdicts(spark, dir).filter(batchPred(Batch1Hex))
       incIdx.filter(batchPred(Batch1Hex))
         .join(v1.filter(col("verdict") === "new").select("doc_id"),
           Seq("doc_id"), "left_semi")
-        .write.mode("overwrite").parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
-
-  // compacted grown index, once per (JVM, dir)
-  private val compactedIdxMemo = new ConcurrentHashMap[String, String]()
+        .write.mode("overwrite").parquet(out)
+    }
 
   /** INDEX COMPACTION — the maintenance pass the delta-append strategy
     * eventually needs: every appended batch adds small delta files, and
@@ -458,17 +440,15 @@ object IncrementalDedup extends graft.QueryModule {
     * base ∪ delta and rewrites it as few doc_id-range-sorted files
     * (the [[Compaction]] zone-map layout applied to index rows) — after
     * which the deltas retire. O(index) rewrite, amortized across many
-    * appends; never touches document text. */
+    * appends; never touches document text. Built once per (JVM, dir). */
   private[graft] def compactedIndexPath(spark: SparkSession,
       dir: String): String =
-    compactedIdxMemo.computeIfAbsent(dir, { _ =>
-      val f = Tables.scratchDir("graft_dedup_idx_compacted_")
+    Substrate.dir("graft_dedup_idx_compacted_", dir) { out =>
       readIndex(spark, indexPath(spark, dir), grownDeltaPath(spark, dir))
         .repartitionByRange(2, col("doc_id"))
         .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+        .write.mode("overwrite").parquet(out)
+    }
 
   /** GRADED `incremental_dedup_compacted`: day-2 classification
     * against the COMPACTED grown index — same verdicts as against the

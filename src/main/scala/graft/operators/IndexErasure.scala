@@ -1,10 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.sources.Substrate
 
 /** ERASURE PROPAGATION through derived indexes (r8 verdict #1) — the
   * composition the maintenance matrix and the DV machinery exist for.
@@ -62,22 +61,18 @@ object IndexErasure {
   private[graft] def survivorSql(ref: String): String =
     s"substr(md5(CAST($ref AS VARCHAR)), 1, 1) <> '$EraseHex'"
 
-  /** One delete-delta build per (JVM, index path, retire predicate):
-    * the DV parquet's scratch dir, keyed on the index root (index
-    * roots are unique scratch dirs per (JVM, corpus), so the key
-    * carries the corpus) AND the predicate's canonical string — two
-    * consumers erasing the same root by different columns must never
-    * share a delta (r10 review finding: a root-only key would hand
-    * the second caller the first caller's rows with no error). */
-  private val dvDirs = new ConcurrentHashMap[String, String]()
-
   /** Build (once) and return the position-delete file set for the
     * index at `root`: all (file, pos) addresses of rows matching
-    * `retire`. The build never writes under `root`. */
+    * `retire`. The build never writes under `root`. One build per
+    * (JVM, index path, retire predicate): keyed on the index root
+    * (index roots are unique scratch dirs per (JVM, corpus), so the
+    * key carries the corpus) AND the predicate's canonical string —
+    * two consumers erasing the same root by different columns must
+    * never share a delta (r10 review finding: a root-only key would
+    * hand the second caller the first caller's rows with no error). */
   private[graft] def deleteDelta(spark: SparkSession, root: String,
       retire: Column): String =
-    dvDirs.computeIfAbsent(s"$root|${retire.toString}", { _ =>
-      val dv = Tables.scratchDir("graft_idx_dv_").getAbsolutePath
+    Substrate.dir("graft_idx_dv_", s"$root|${retire.toString}") { dv =>
       spark.read.parquet(root)
         .select(col("_metadata.file_path").as("file"),
           col("_metadata.row_index").as("pos"),
@@ -85,8 +80,7 @@ object IndexErasure {
         .filter(col("retire"))
         .select(col("file"), col("pos"))
         .write.mode("overwrite").parquet(dv)
-      dv
-    })
+    }
 
   /** The erased VIEW of an index: files untouched, retired rows
     * removed at read time by position (broadcast anti join — delete

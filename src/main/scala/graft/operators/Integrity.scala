@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 
 /** Cross-copy INTEGRITY diff — the reconciliation audit every layout
   * rewrite needs: after compaction / z-ordering / replication, prove
@@ -94,9 +95,6 @@ object Integrity extends graft.QueryModule {
   // restored the content.
   // ----------------------------------------------------------------
 
-  private val repairStates =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn("bucket", pmod(col("o_orderkey"), lit(Buckets.toLong)))
 
@@ -111,9 +109,7 @@ object Integrity extends graft.QueryModule {
     * overwrite repair. */
   private[graft] def repairState(spark: SparkSession,
       sfDir: String): (String, String) =
-    repairStates.computeIfAbsent(sfDir, { _ =>
-      val replica = graft.Tables.scratchDir("graft_repair_copy_")
-        .getAbsolutePath
+    Substrate.state("graft_repair_copy_", sfDir) { replica =>
       val preDiff = graft.Tables.scratchDir("graft_repair_prediff_")
         .getAbsolutePath
       val src = withBucket(Tables(spark, sfDir, "orders"))
@@ -149,7 +145,7 @@ object Integrity extends graft.QueryModule {
         .filter(col("bucket").isin(damagedBuckets.toIndexedSeq: _*))
         .write.mode("overwrite").partitionBy("bucket").parquet(replica)
       (replica, preDiff)
-    })
+    }
 
   /** GRADED: per-bucket repair audit — what was lost (real pre-repair
     * measurements), and a LIVE post-repair re-audit. The replica side

@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Substrate
 
 /** IVF inverted-list MAINTENANCE — the growable-index move for the
   * coarse-quantizer family (FAISS `IndexIVF.add()`): a corpus grows
@@ -40,8 +40,6 @@ object IvfMaintained extends graft.QueryModule {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => f.getName -> f.length).toMap
 
-  private val states = new ConcurrentHashMap[String, IvfState]()
-
   private def centsOf(spark: SparkSession, dir: String,
       nlist: Int): DataFrame =
     Tables(spark, dir, "embeddings")
@@ -50,8 +48,7 @@ object IvfMaintained extends graft.QueryModule {
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
 
   private[graft] def state(spark: SparkSession, dir: String): IvfState =
-    states.computeIfAbsent(dir, { _ =>
-      val root = Tables.scratchDir("graft_ivf_maint_").getAbsolutePath
+    Substrate.state("graft_ivf_maint_", dir) { root =>
       val e = Tables(spark, dir, "embeddings")
       val base = e.filter(!GraphOps.isNewVec)
       val fresh = e.filter(GraphOps.isNewVec)
@@ -75,7 +72,7 @@ object IvfMaintained extends graft.QueryModule {
       // list files untouched
       assignTop1(fresh).write.mode("append").parquet(root)
       IvfState(root, nlist, baseFiles, listPq(root) -- baseFiles.keys)
-    })
+    }
 
   /** GRADED: nprobe=2 top-10 for the standing query over the
     * MAINTAINED lists (base ∪ appended assignments). */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 import graft.streaming.Replay
 
 /** INCREMENTAL VIEW MAINTENANCE — keep a materialized aggregate in
@@ -136,9 +137,6 @@ object Ivm extends graft.QueryModule {
   // turns that scan into a point probe.
   // ----------------------------------------------------------------
 
-  private val streamedMvDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Files per micro-batch of the maintenance stream (r8 verdict #8):
     * 2 collapses the 3-file feed into 2 batches — one less round of
     * the ~1 s/batch streaming-machinery floor (trigger bookkeeping,
@@ -159,8 +157,7 @@ object Ivm extends graft.QueryModule {
     * 2 per trigger → v0..v1. Cross-batch seq order still relies on
     * the file source's mod-time ordering (see [[MergeOnRead.feedDir]]). */
   private[graft] def streamedMvRoot(spark: SparkSession, dir: String): String =
-    streamedMvDirs.computeIfAbsent(dir, { _ =>
-      val root = graft.Tables.scratchDir("graft_ivm_stream_").getAbsolutePath
+    Substrate.dir("graft_ivm_stream_", dir) { root =>
       val feed = MergeOnRead.feedDir(spark, dir)
       // 2, not the replay family's 8: every per-batch frame here is
       // group-/changes-granularity (≤ a few hundred rows), and each
@@ -261,8 +258,7 @@ object Ivm extends graft.QueryModule {
             ()
         }, "graft_ivm_ckpt_")
       } finally { base.unpersist(); () }
-      root
-    })
+    }
 
   /** GRADED: the streamed maintained view after the last batch — same
     * oracle as the batch [[ordersAggIvm]]: three rounds of per-batch

@@ -1,12 +1,12 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 import graft.streaming.Replay
 
 /** JOIN-VIEW incremental maintenance (r8 verdict #2) — the OTHER half
@@ -67,10 +67,8 @@ object JoinIvm extends graft.QueryModule {
   /** The stored serving view BEFORE any change: orders ⋈ customer,
     * materialized once per (JVM, corpus) — the only place the base
     * fact is ever scanned. */
-  private val viewDirs = new ConcurrentHashMap[String, String]()
   private[graft] def storedViewDir(spark: SparkSession, dir: String): String =
-    viewDirs.computeIfAbsent(dir, { _ =>
-      val out = Tables.scratchDir("graft_joinivm_v0_").getAbsolutePath
+    Substrate.dir("graft_joinivm_v0_", dir) { out =>
       Tables(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_orderstatus"), col("o_totalprice"))
@@ -78,8 +76,7 @@ object JoinIvm extends graft.QueryModule {
           col("o_custkey") === col("c_custkey"))
         .drop("c_custkey")
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** The MAINTENANCE plan: stored view + log window + broadcast dim —
     * no base-fact scan (spec-asserted on exactly this frame). */
@@ -114,14 +111,11 @@ object JoinIvm extends graft.QueryModule {
 
   /** The maintained STORE (the artifact a serving layer reads),
     * written once per (JVM, corpus). */
-  private val maintDirs = new ConcurrentHashMap[String, String]()
   private[graft] def maintainedDir(spark: SparkSession, dir: String): String =
-    maintDirs.computeIfAbsent(dir, { _ =>
-      val out = Tables.scratchDir("graft_joinivm_v1_").getAbsolutePath
+    Substrate.dir("graft_joinivm_v1_", dir) { out =>
       maintainedFrame(spark, dir)
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   private def censusOf(view: DataFrame): DataFrame =
     view
@@ -169,11 +163,9 @@ object JoinIvm extends graft.QueryModule {
 
   private[graft] val StreamFilesPerTrigger = 2
 
-  private val streamedDirs = new ConcurrentHashMap[String, String]()
   private[graft] def streamedViewDir(spark: SparkSession,
       dir: String): String =
-    streamedDirs.computeIfAbsent(dir, { _ =>
-      val root = Tables.scratchDir("graft_joinivm_stream_").getAbsolutePath
+    Substrate.dir("graft_joinivm_stream_", dir) { root =>
       val feed = MergeOnRead.feedDir(spark, dir)
       // view-granularity frames; 2 partitions like the MV stream
       val ss = Extensions.newSession(spark,
@@ -218,8 +210,7 @@ object JoinIvm extends graft.QueryModule {
           col("o_totalprice"),
           coalesce(col("new_seg"), col("c_mktsegment")).as("c_mktsegment"))
         .write.mode("overwrite").parquet(s"$root/final")
-      root
-    })
+    }
 
   /** GRADED: the same census over the STREAM-maintained store — the
     * batch oracle verbatim. */

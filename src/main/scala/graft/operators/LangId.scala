@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 import graft.streaming.Replay
 
 /** LANGUAGE IDENTIFICATION — the one standard LLM-corpus stage the
@@ -352,9 +353,6 @@ object LangId extends graft.QueryModule {
       .agg(count(lit(1)).as("n"))
       .orderBy("source", "lang_pred")
 
-  private val streamedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build (once per JVM, corpus) the streamed-inference artifact: the
     * model trained ONCE on the train split and FROZEN to scratch
     * parquet (the stored-model stand-in), then the eval docs replayed
@@ -366,9 +364,7 @@ object LangId extends graft.QueryModule {
     * own dir, never appends duplicates). */
   private[graft] def streamedPredsDir(spark: SparkSession,
       dir: String): String =
-    streamedDirs.computeIfAbsent(dir, { _ =>
-      val root = graft.Tables.scratchDir("graft_langid_stream_")
-        .getAbsolutePath
+    Substrate.dir("graft_langid_stream_", dir) { root =>
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
       model(ss, dir).write.mode("overwrite").parquet(s"$root/model")
@@ -383,8 +379,7 @@ object LangId extends graft.QueryModule {
           predictionsOf(ss, batch.toDF(), ss.read.parquet(s"$root/model"))
             .write.mode("overwrite").parquet(s"$root/preds/b$batchId")
       }, "graft_langid_sckpt_")
-      root
-    })
+    }
 
   /** GRADED: the STREAM-SCORED confusion matrix — batch oracle
     * VERBATIM: scoring with a frozen model is stateless per doc, so

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 import graft.streaming.Replay
 
 /** MERGE INTO semantics pinned as data (r8 verdict #3) — the
@@ -134,18 +135,14 @@ object MergeInto extends graft.QueryModule {
   /** The post-MERGE table MATERIALIZED (once per JVM, corpus) — the
     * stored artifact the statement writer actually produces, and the
     * thing a later GDPR sweep must reach. */
-  private val mergedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def mergedDir(spark: SparkSession, dir: String): String =
-    mergedDirs.computeIfAbsent(dir, { _ =>
-      val out = Tables.scratchDir("graft_merged_").getAbsolutePath
+    Substrate.dir("graft_merged_", dir) { out =>
       merge(
         Tables(spark, dir, "orders").select(col("o_orderkey"),
           col("o_custkey"), col("o_orderstatus"), col("o_totalprice")),
         sourceBatch(spark, dir))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** GRADED: the census AFTER ERASURE (r10) — the GDPR sweep reaching
     * the MERGE writer's OUTPUT: erased customers' rows retire from
@@ -205,12 +202,9 @@ object MergeInto extends graft.QueryModule {
     * only touched files of a clustered target (or logs deltas MOR-
     * style — [[MergeOnRead]] grades that mechanism); the full-table
     * version files here keep the bench artifact inspectable. */
-  private val streamedMergeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def streamedMergedDir(spark: SparkSession,
       dir: String): String =
-    streamedMergeDirs.computeIfAbsent(dir, { _ =>
-      val root = Tables.scratchDir("graft_merge_stream_").getAbsolutePath
+    Substrate.state("graft_merge_stream_", dir) { root =>
       val feed = mergeFeedDir(spark, dir)
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
@@ -244,7 +238,7 @@ object MergeInto extends graft.QueryModule {
           ()
       }, "graft_merge_sckpt_")
       Replay.latest(s"$root/t")
-    })
+    }
 
   /** GRADED: the same census over the STREAM-applied statement — the
     * batch oracle verbatim. */

@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 import graft.streaming.Replay
 
 /** MERGE-ON-READ — the lakehouse read path that resolves a base table
@@ -81,9 +81,6 @@ object MergeOnRead extends graft.QueryModule {
       .withColumn("_deleted", lit(true)))
   }
 
-  // the streamed delta log, once per (JVM, corpus)
-  private val logDirs = new ConcurrentHashMap[String, String]()
-
   /** The 3-file update feed: each batch written as ONE parquet file so
     * `maxFilesPerTrigger=1` replays it as one micro-batch. */
   private[graft] def feedDir(spark: SparkSession, dir: String): String =
@@ -95,15 +92,15 @@ object MergeOnRead extends graft.QueryModule {
     * execution, one atomic parquet append per micro-batch stamped with
     * the sink batch id ([[graft.streaming.StreamReplay]]'s
     * foreachBatch upsert-log shape). Resolution uses the in-data
-    * `_seq`; `_batch_id` records sink provenance. */
+    * `_seq`; `_batch_id` records sink provenance. Built once per (JVM,
+    * corpus). */
   private[graft] def deltaLogDir(spark: SparkSession, dir: String): String =
-    logDirs.computeIfAbsent(dir, { _ =>
+    Substrate.dir("graft_mor_log_", dir) { out =>
       val feed = feedDir(spark, dir)
       // cloned session: streaming conf hygiene (8 shuffle partitions
       // for the bounded replay), caller's session untouched
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "8")
-      val out = Tables.scratchDir("graft_mor_log_").getAbsolutePath
       Replay.run(Replay.read(ss, feed, 1)
         .writeStream.foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -112,8 +109,7 @@ object MergeOnRead extends graft.QueryModule {
               .write.mode("append").parquet(out)
             ()
         }, "graft_mor_ckpt_")
-      out
-    })
+    }
 
   /** The merge-on-read snapshot AS OF a log sequence: base resolved
     * against the log restricted to `_seq` ≤ `asOfSeq` — TIME TRAVEL is
@@ -176,11 +172,8 @@ object MergeOnRead extends graft.QueryModule {
     agg(snapshot(spark, dir))
 
   // compacted (log-folded) snapshot, once per (JVM, corpus)
-  private val compactedDirs = new ConcurrentHashMap[String, String]()
-
   private[graft] def compactedDir(spark: SparkSession, dir: String): String =
-    compactedDirs.computeIfAbsent(dir, { _ =>
-      val f = Tables.scratchDir("graft_mor_compacted_").getAbsolutePath
+    Substrate.dir("graft_mor_compacted_", dir) { f =>
       // fold the log in: rewrite the RESOLVED snapshot range-sorted on
       // the key ([[Compaction]]'s zone-map layout; fixed 4 files here —
       // the size-targeted count arithmetic lives in Compaction.compact)
@@ -188,8 +181,7 @@ object MergeOnRead extends graft.QueryModule {
         .repartitionByRange(4, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite").parquet(f)
-      f
-    })
+    }
 
   /** GRADED: the SAME aggregate over the compaction-folded copy, same
     * oracle — pre/post hash equality proves the fold is a pure layout
@@ -221,15 +213,12 @@ object MergeOnRead extends graft.QueryModule {
   /** The log prefix folded into the checkpoint ( _seq ≤ this). */
   private[graft] val CheckpointSeq = 1L
 
-  private val checkpointDirs = new ConcurrentHashMap[String, String]()
-
   /** Per-key latest-version state of the log prefix — one window over
     * O(changes-at-ckpt) rows, written once; base is NOT consulted (the
     * checkpoint is log state, not a table snapshot — the base stays
     * unrewritten, which is the merge-on-read contract). */
   private[graft] def checkpointDir(spark: SparkSession, dir: String): String =
-    checkpointDirs.computeIfAbsent(dir, { _ =>
-      val f = Tables.scratchDir("graft_mor_ckpt_state_").getAbsolutePath
+    Substrate.dir("graft_mor_ckpt_state_", dir) { f =>
       val log = spark.read.parquet(deltaLogDir(spark, dir))
         .filter(col("_seq") <= CheckpointSeq)
       val w = org.apache.spark.sql.expressions.Window
@@ -237,8 +226,7 @@ object MergeOnRead extends graft.QueryModule {
       log.withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1).drop("_rn", "_batch_id")
         .coalesce(1).write.mode("overwrite").parquet(f)
-      f
-    })
+    }
 
   /** Resolve base ⊎ checkpoint ⊎ tail: the window ranks only
     * checkpoint-state ∪ tail rows (O(changes)), base stays a map-only
@@ -301,21 +289,18 @@ object MergeOnRead extends graft.QueryModule {
   // position-delete discipline), never by parsing file names.
   // ----------------------------------------------------------------
 
-  private val vacuumedDirs = new ConcurrentHashMap[String, String]()
-
   /** Copy the log, then physically delete every file fully at/below
     * the checkpoint floor. Returns (vacuumedDir, nDeleted). */
   private[graft] def vacuumedLogDir(spark: SparkSession, dir: String): String =
-    vacuumedDirs.computeIfAbsent(dir, { _ =>
+    Substrate.dir("graft_mor_vacuum_", dir) { out =>
       val src = new java.io.File(deltaLogDir(spark, dir))
-      val dst = Tables.scratchDir("graft_mor_vacuum_")
       src.listFiles.filter(_.getName.endsWith(".parquet")).foreach { f =>
         java.nio.file.Files.copy(f.toPath,
-          new java.io.File(dst, f.getName).toPath)
+          new java.io.File(out, f.getName).toPath)
       }
       // catalog-scale collect: one row per log FILE (planner metadata,
       // the ManifestFileIndex discipline), never per log row
-      val dead = spark.read.parquet(dst.getAbsolutePath)
+      val dead = spark.read.parquet(out)
         .groupBy(col("_metadata.file_path").as("fp"))
         .agg(max(col("_seq")).as("mx"))
         .filter(col("mx") <= CheckpointSeq)
@@ -324,8 +309,7 @@ object MergeOnRead extends graft.QueryModule {
         val p = new java.io.File(new java.net.URI(uri).getPath)
         require(p.delete(), s"vacuum failed to delete $p")
       }
-      dst.getAbsolutePath
-    })
+    }
 
   /** GRADED: the post-vacuum read — base ⊎ checkpoint ⊎ the SURVIVING
     * log files (no `_seq` filter: after vacuum the directory IS the

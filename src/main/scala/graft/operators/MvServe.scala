@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.MvRewrite
+import graft.sources.Substrate
 
 /** MV SERVING — the query-side half of the materialized-aggregate
   * story. [[Ivm]] maintains the stored per-status aggregate with
@@ -31,19 +32,14 @@ object MvServe extends graft.QueryModule {
 
   /** Once-per-(JVM, corpus) stored MV:
     * status → (n = count(1), s = sum(cast(price as dec(18,2)))). */
-  private val mvDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def mvDir(spark: SparkSession, dir: String): String =
-    mvDirs.computeIfAbsent(dir, { _ =>
-      val d = Tables.scratchDir("graft_mv_serve_").getAbsolutePath
+    Substrate.dir("graft_mv_serve_", dir) { d =>
       Tables(spark, dir, "orders")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast("decimal(18,2)")).as("s"))
         .coalesce(1).write.mode("overwrite").parquet(d)
-      d
-    })
+    }
 
   /** Build + register the MV (idempotent). */
   private[graft] def ready(spark: SparkSession, dir: String): Unit = {

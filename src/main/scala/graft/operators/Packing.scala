@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Substrate
 
 /** SEQUENCE PACKING — the concat-and-chunk step an LLM pretraining
   * pipeline runs between curation and the trainer: documents are laid
@@ -177,15 +178,11 @@ object Packing extends graft.QueryModule {
     * corpus) — the physical artifact the shard writer emits, and the
     * layout erasure must operate on (a GDPR sweep cannot REPACK: that
     * rewrites and re-ships every shard). */
-  private val exportDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def segmentExportDir(spark: SparkSession,
       dir: String): String =
-    exportDirs.computeIfAbsent(dir, { _ =>
-      val out = Tables.scratchDir("graft_pack_export_").getAbsolutePath
+    Substrate.dir("graft_pack_export_", dir) { out =>
       segments(spark, dir).write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** GRADED: the manifest AFTER ERASURE — the sixth derived-index
     * family under [[IndexErasure]]'s position-delete mechanism (r8

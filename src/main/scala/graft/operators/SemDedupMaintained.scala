@@ -1,12 +1,12 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 import graft.streaming.Replay
 
 /** SemDeDup LIFECYCLE (r10) — the semantic tier joins the maintenance
@@ -73,15 +73,12 @@ object SemDedupMaintained extends graft.QueryModule {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => f.getName -> f.length).toMap
 
-  private val states = new ConcurrentHashMap[String, PairState]()
-
   /** The maintained pair store, built once per (JVM, corpus): base
     * pairs written, day-2 pairs appended, both under the SAME frozen
     * assignment — so the store's content equals the from-scratch
     * within-cell pair set by construction (spec-asserted). */
   private[graft] def pairState(spark: SparkSession, dir: String): PairState =
-    states.computeIfAbsent(dir, { _ =>
-      val root = Tables.scratchDir("graft_semdedup_maint_").getAbsolutePath
+    Substrate.state("graft_semdedup_maint_", dir) { root =>
       val st = IvfMaintained.state(spark, dir)
       val assign = spark.read.parquet(st.root)
       val baseA = assign.filter(!GraphOps.isNewVec)
@@ -105,7 +102,7 @@ object SemDedupMaintained extends graft.QueryModule {
       scoredPairs(spark, dir, deltaPairs)
         .write.mode("append").parquet(root)
       PairState(root, baseFiles, listPq(root) -- baseFiles.keys)
-    })
+    }
 
   /** GRADED: the maintained pair evidence — base ∪ appended, served
     * straight off the store's files. */
@@ -137,11 +134,9 @@ object SemDedupMaintained extends graft.QueryModule {
     * review: the components helper caches its labels frame under a
     * caller-releases contract; serving from scratch both honors it
     * and stops every serving call from re-collecting the edge set). */
-  private val survivorDirs = new ConcurrentHashMap[String, String]()
   private def survivorsOf(spark: SparkSession, dir: String,
       variant: String, pairs: => DataFrame): DataFrame = {
-    val path = survivorDirs.computeIfAbsent(s"$dir|$variant", { _ =>
-      val out = Tables.scratchDir("graft_semdedup_surv_").getAbsolutePath
+    val path = Substrate.dir("graft_semdedup_surv_", s"$dir|$variant") { out =>
       val p = pairs
       val edges = p.select(col("vec_a").as("src"), col("vec_b").as("dst"))
         .union(p.select(col("vec_b").as("src"), col("vec_a").as("dst")))
@@ -163,8 +158,7 @@ object SemDedupMaintained extends graft.QueryModule {
       } finally {
         try { labels.unpersist(); () } catch { case _: Throwable => () }
       }
-      out
-    })
+    }
     spark.read.parquet(path).orderBy("component")
   }
 
@@ -198,11 +192,9 @@ object SemDedupMaintained extends graft.QueryModule {
   // (chop-invariance spec) and the BATCH ORACLE grades it verbatim.
   // ------------------------------------------------------------------
 
-  private val streamedDirs = new ConcurrentHashMap[String, String]()
   private[graft] def streamedPairsDir(spark: SparkSession,
       dir: String): String =
-    streamedDirs.computeIfAbsent(dir, { _ =>
-      val root = Tables.scratchDir("graft_semdedup_stream_").getAbsolutePath
+    Substrate.dir("graft_semdedup_stream_", dir) { root =>
       val st = IvfMaintained.state(spark, dir)
       val ss = Extensions.newSession(spark,
         "spark.sql.shuffle.partitions" -> "2")
@@ -261,8 +253,7 @@ object SemDedupMaintained extends graft.QueryModule {
             .write.mode("overwrite").parquet(s"$root/assign/v$batchId")
           ()
       }, "graft_semdedup_sckpt_")
-      root
-    })
+    }
 
   /** GRADED: the stream-ingested pair store — the maintained (batch)
     * oracle verbatim. */

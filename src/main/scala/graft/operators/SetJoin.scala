@@ -201,10 +201,7 @@ object SetJoin extends graft.QueryModule {
     * this build only tokenizes the EXCERPT slice (~1/4 of docs at 40 %
     * length) instead of re-decoding + re-tokenizing the whole corpus a
     * second time. The union stays distinct by construction: each side
-    * is internally distinct and the +20M excerpt id space is disjoint.
-    * The base substrate is resolved BEFORE this serve's build runs —
-    * nesting two computeIfAbsent builds on the same store would be a
-    * recursive-update hazard. */
+    * is internally distinct and the +20M excerpt id space is disjoint. */
   private def containmentGrams(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.sources.GramStore.wordGrams3(spark, dir)
     graft.sources.GramStore.serve(spark, "wg3cont", dir) {

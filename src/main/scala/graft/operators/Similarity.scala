@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Extensions
+import graft.sources.Substrate
 
 /** Near-duplicate detection + similarity search (north-star [N] rows,
   * SURVEY.md §2.11 N2/N3/N5).
@@ -1034,12 +1035,9 @@ object Similarity extends graft.QueryModule {
     * the whole decomposition round-for-round as unrolled CTEs —
     * peeling is idempotent past its fixpoint, so the fixed oracle
     * depth grades the converged loop exactly. */
-  private val corenessDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def neardupCoreness(spark: SparkSession, dir: String,
       threshold: Double = 0.5): DataFrame = {
-    val out = corenessDirs.computeIfAbsent(dir, { _ =>
+    val path = Substrate.dir("graft_coreness_", dir) { out =>
       val pairs = neardupPairs(spark, dir)
         .filter(col("jaccard") >= threshold)
         .select(col("doc_a"), col("doc_b"))
@@ -1066,7 +1064,6 @@ object Similarity extends graft.QueryModule {
       }
       val c2 = peel(2)
       val c3 = peel(3)
-      val f = Tables.scratchDir("graft_coreness_")
       v0.join(c2.withColumn("in2", lit(1)), Seq("doc_id"), "left")
         .join(c3.withColumn("in3", lit(1)), Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1074,11 +1071,10 @@ object Similarity extends graft.QueryModule {
             .when(col("in2").isNotNull, 2L)
             .otherwise(1L).as("coreness"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(f.getAbsolutePath)
+        .write.mode("overwrite").parquet(out)
       Seq(edges, v0, c2, c3).foreach(releaseCheckpoint)
-      f.getAbsolutePath
-    })
-    spark.read.parquet(out).orderBy("doc_id")
+    }
+    spark.read.parquet(path).orderBy("doc_id")
   }
 
   /** Left-fold double dot product of two float arrays — order-pinned to

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.ScalarFns.{roundN, roundSql}
+import graft.sources.Substrate
 
 /** Text-analysis operators for a training-data pipeline (north-star [N]
   * rows, SURVEY.md §2.11 N1/N4): exact dedup, term stats, language
@@ -526,11 +527,8 @@ object TextOps extends graft.QueryModule {
   // term bucket — the layout that turns phrase search's "only the
   // queried terms' postings" from a runtime filter into PARTITION
   // PRUNING at the scan
-  private val postingsDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def postingsDir(spark: SparkSession, dir: String): String =
-    postingsDirs.computeIfAbsent(dir, { _ =>
-      val f = graft.Tables.scratchDir("graft_postings_").getAbsolutePath
+    Substrate.dir("graft_postings_", dir) { f =>
       Tables(spark, dir, "documents")
         .select(col("doc_id"), col("source"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -538,8 +536,7 @@ object TextOps extends graft.QueryModule {
           pmod(conv(substring(md5(col("term")), 1, 1), 16, 10).cast("int"),
             lit(TermBuckets)))
         .write.mode("overwrite").partitionBy("tb").parquet(f)
-      f
-    })
+    }
 
   /** Shared adjacency resolution over ANY stored postings path — the
     * query half of the indexed/maintained/compacted family, so the
@@ -637,12 +634,9 @@ object TextOps extends graft.QueryModule {
         pmod(conv(substring(md5(col("term")), 1, 1), 16, 10).cast("int"),
           lit(TermBuckets)))
 
-  private val maintainedStates =
-    new java.util.concurrent.ConcurrentHashMap[String, PostingsState]()
   private[graft] def maintainedPostings(spark: SparkSession,
       dir: String): PostingsState =
-    maintainedStates.computeIfAbsent(dir, { _ =>
-      val root = graft.Tables.scratchDir("graft_postings_m_").getAbsolutePath
+    Substrate.state("graft_postings_m_", dir) { root =>
       // day 1: the base corpus slice, one-shot build
       postingsOf(spark, dir, !isDay2)
         .write.mode("overwrite").partitionBy("tb").parquet(root)
@@ -654,21 +648,17 @@ object TextOps extends graft.QueryModule {
         .write.mode("append").partitionBy("tb").parquet(root)
       val all = listParquet(root)
       PostingsState(root, day1, all -- day1.keys)
-    })
+    }
 
   // compacted fold of the maintained index, once per (JVM, corpus)
-  private val compactedPostingsDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def compactedPostingsDir(spark: SparkSession,
       dir: String): String =
-    compactedPostingsDirs.computeIfAbsent(dir, { _ =>
-      val out = graft.Tables.scratchDir("graft_postings_c_").getAbsolutePath
+    Substrate.dir("graft_postings_c_", dir) { out =>
       spark.read.parquet(maintainedPostings(spark, dir).root)
         .repartition(TermBuckets, col("tb"))
         .sortWithinPartitions("tb", "term", "doc_id", "pos")
         .write.mode("overwrite").partitionBy("tb").parquet(out)
-      out
-    })
+    }
 
   /** GRADED: the phrase query over the GROWN index (base + delta) —
     * verbatim `phrase_search` oracle: the append must be exactly
@@ -708,18 +698,14 @@ object TextOps extends graft.QueryModule {
     phraseFromPostingsIdx(erasedPostingsView(spark, dir))
 
   // physical fold of the erased index, once per (JVM, corpus)
-  private val erasedFoldedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def erasedFoldedPostingsDir(spark: SparkSession,
       dir: String): String =
-    erasedFoldedDirs.computeIfAbsent(dir, { _ =>
-      val out = graft.Tables.scratchDir("graft_postings_e_").getAbsolutePath
+    Substrate.dir("graft_postings_e_", dir) { out =>
       erasedPostingsView(spark, dir)
         .repartition(TermBuckets, col("tb"))
         .sortWithinPartitions("tb", "term", "doc_id", "pos")
         .write.mode("overwrite").partitionBy("tb").parquet(out)
-      out
-    })
+    }
 
   /** GRADED: phrase search over the PHYSICAL erasure fold — plain
     * scan, no delete files; same surviving-corpus oracle, and

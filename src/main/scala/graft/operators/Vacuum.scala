@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Substrate
 
 /** VACUUM — the file-retirement pass that completes the storage
   * lifecycle this repo's maintenance operators open: [[Compaction]],
@@ -51,11 +51,8 @@ object Vacuum extends graft.QueryModule {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => f.getName -> f.length).toMap
 
-  private val states = new ConcurrentHashMap[String, VacState]()
-
   private[graft] def state(spark: SparkSession, sfDir: String): VacState =
-    states.computeIfAbsent(sfDir, { _ =>
-      val root = Tables.scratchDir("graft_vacuum_").getAbsolutePath
+    Substrate.state("graft_vacuum_", sfDir) { root =>
       val data = s"$root/data"
       // v1: the ingest-fragmented copy
       Tables(spark, sfDir, "orders")
@@ -73,7 +70,7 @@ object Vacuum extends graft.QueryModule {
       // v1 expires; vacuum: delete unreferenced files, keep-set driven
       val deleted = vacuum(data, live = v2.keySet)
       VacState(data, v2, deleted)
-    })
+    }
 
   /** Delete every parquet file under `dataDir` not in `live`; returns
     * the deleted names. The keep set comes from live snapshot

@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Substrate
 
 /** WRITE-AUDIT-PUBLISH — the lakehouse governance gate (Iceberg WAP /
   * Delta's staged-commit pattern; dbt's test-before-swap): a producer
@@ -88,11 +88,9 @@ object Wap extends graft.QueryModule {
   /** (published dir, audit-log dir) once per (JVM, corpus). */
   private[graft] final case class WapState(publishedDir: String,
       auditLogDir: String, stagingGone: Boolean)
-  private val states = new ConcurrentHashMap[String, WapState]()
 
   private[graft] def state(spark: SparkSession, dir: String): WapState =
-    states.computeIfAbsent(dir, { _ =>
-      val root = Tables.scratchDir("graft_wap_").getAbsolutePath
+    Substrate.state("graft_wap_", dir) { root =>
       val o = Tables(spark, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate", "o_orderpriority")
@@ -100,11 +98,6 @@ object Wap extends graft.QueryModule {
       o.write.mode("overwrite").parquet(s"$root/staging_clean")
       dirtyCandidate(spark, dir).write.mode("overwrite")
         .parquet(s"$root/staging_dirty")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
       // audit each STAGED COPY — the bytes that would go live, not
       // the producer's frame — and PERSIST the verdicts before any
       // publish/rollback: the audit log is itself a record (the
@@ -128,13 +121,16 @@ object Wap extends graft.QueryModule {
           require(staging.renameTo(new java.io.File(s"$root/published")),
             s"publish rename failed for $cand")
           published = Some(s"$root/published")
-        } else rm(staging) // rollback: the candidate never became visible
+        } else {
+          // rollback: the candidate never became visible
+          Tables.rmTree(staging)
+        }
       }
       WapState(published.getOrElse(
           sys.error("WAP: no candidate passed the audit")),
         s"$root/audit_log",
         stagingGone = !new java.io.File(s"$root/staging_dirty").exists)
-    })
+    }
 
   /** GRADED: the PERSISTED audit log — (candidate, constraint, count,
     * published) for both candidates, zeros included, read back from

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Substrate
 
 /** Z-ORDER (Morton-curve) multi-column layout + MANIFEST file skipping
   * — the multi-dimensional half of the layout story started by
@@ -90,13 +91,10 @@ object ZOrder extends graft.QueryModule {
     })
 
   /** (layout dir, manifest dir), built once per (JVM, corpus). */
-  private val zDirs = new ConcurrentHashMap[String, (String, String)]()
-
   private[graft] def zorderedOrders(spark: SparkSession,
       sfDir: String): (String, String) =
-    zDirs.computeIfAbsent(sfDir, { _ =>
+    Substrate.state("graft_zorder_orders_", sfDir) { data =>
       val b = bounds(spark, sfDir)
-      val data = Tables.scratchDir("graft_zorder_orders_").getAbsolutePath
       val z = interleaveBits(
         norm16(col("o_custkey"), b.ckLo, b.ckHi),
         norm16(unix_date(to_date(col("o_orderdate"))), b.dtLo, b.dtHi))
@@ -108,7 +106,7 @@ object ZOrder extends graft.QueryModule {
       val mf = Tables.scratchDir("graft_zorder_manifest_").getAbsolutePath
       buildManifest(spark, data).write.mode("overwrite").parquet(mf)
       (data, mf)
-    })
+    }
 
   /** Per-file zone maps of the pruning columns — the manifest rows. */
   private[graft] def buildManifest(spark: SparkSession,
@@ -267,13 +265,10 @@ object ZOrder extends graft.QueryModule {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => f.getName -> f.length).toMap
 
-  private val zMaintained = new ConcurrentHashMap[String, ZMaintState]()
-
   private[graft] def maintainedZorder(spark: SparkSession,
       sfDir: String): ZMaintState =
-    zMaintained.computeIfAbsent(sfDir, { _ =>
+    Substrate.state("graft_zorder_m_", sfDir) { data =>
       val b = bounds(spark, sfDir) // full-corpus bounds: stable norms
-      val data = Tables.scratchDir("graft_zorder_m_").getAbsolutePath
       val mf = Tables.scratchDir("graft_zorder_m_mf_").getAbsolutePath
       val z = interleaveBits(
         norm16(col("o_custkey"), b.ckLo, b.ckHi),
@@ -301,7 +296,7 @@ object ZOrder extends graft.QueryModule {
           max(to_date(col("o_orderdate"))).as("max_dt"))
         .write.mode("append").parquet(mf)
       ZMaintState(data, mf, baseData, baseMf, deltaData)
-    })
+    }
 
   /** GRADED: the box aggregate through the GROWN manifest — same box,
     * same oracle as `orders_zorder_box` (plain SQL over the original
@@ -352,18 +347,15 @@ object ZOrder extends graft.QueryModule {
 
   // Bloom manifest over the SAME z-ordered layout, once per (JVM,
   // corpus) — the second stat column of the multi-stat manifest
-  private val zBloomDirs = new ConcurrentHashMap[String, String]()
   private[graft] def zBloomManifestDir(spark: SparkSession,
       sfDir: String): String =
-    zBloomDirs.computeIfAbsent(sfDir, { _ =>
+    Substrate.dir("graft_zbloom_manifest_", sfDir) { out =>
       val (data, _) = zorderedOrders(spark, sfDir)
-      val out = Tables.scratchDir("graft_zbloom_manifest_").getAbsolutePath
       spark.read.parquet(data)
         .groupBy(input_file_name().as("file"))
         .agg(expr("bloom_sketch(CAST(o_custkey AS STRING))").as("bits"))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** Zone-map keep set for the combo's date range. */
   private[graft] def comboZoneKeep(spark: SparkSession,

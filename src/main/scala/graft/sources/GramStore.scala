@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,26 +34,19 @@ import org.apache.spark.sql.functions._
   */
 object GramStore {
 
-  /** (substrate name, corpus dir) → scratch parquet path. Keyed by
-    * corpus only — the substrates are pure functions of the corpus
-    * files, so cross-session serving is safe by construction. */
-  private val served = new ConcurrentHashMap[String, String]()
-
-  /** Serve `build`'s result from scratch parquet, building it at most
-    * once per (JVM, `name`, `dir`). The build runs under whichever
-    * session first asks; later consumers just scan the files. Open to
-    * operator-owned substrates (e.g. [[graft.operators.EditJoin]]'s
-    * entity table) — the build must be a pure function of the corpus
-    * under `dir`. */
+  /** Serve `build`'s result from scratch parquet, built at most once
+    * per (JVM, `name`, `dir`) through [[Substrate]]. Keyed by corpus
+    * only — the substrates are pure functions of the corpus files, so
+    * cross-session serving is safe by construction. The build runs
+    * under whichever session first asks; later consumers just scan the
+    * files. Open to operator-owned substrates (e.g.
+    * [[graft.operators.EditJoin]]'s entity table) — the build must be a
+    * pure function of the corpus under `dir`. */
   private[graft] def serve(spark: SparkSession, name: String, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val path = served.computeIfAbsent(s"$name|$dir", { _ =>
-      val out = graft.Tables.scratchDir(s"graft_${name}_").getAbsolutePath
+      build: => DataFrame): DataFrame =
+    spark.read.parquet(Substrate.dir(s"graft_${name}_", dir) { out =>
       build.write.mode("overwrite").parquet(out)
-      out
     })
-    spark.read.parquet(path)
-  }
 
   /** DISTINCT (doc_id, tok) word-3-gram shingles of `documents.text`,
     * via the streaming [[graft.plans.WordGrams]] generator (no per-row

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
   StreamingQueryException, Trigger}
@@ -17,22 +16,19 @@ import graft.Tables
   * directory is a [[graft.Tables.scratchDir]]: one scratch root, one
   * free-space guard, one shutdown hook. */
 object Replay {
-  /** Built feeds per (dir prefix, corpus dir). A build that throws
-    * records nothing, so the next call rebuilds from scratch. */
-  private[graft] val feeds = new ConcurrentHashMap[(String, String), String]()
-
-  /** The feed `prefix` over corpus `dir`, built once per JVM: slice i
+  /** The feed `prefix` over corpus `dir`, built once per JVM through
+    * [[graft.sources.Substrate]] (a build that throws records nothing
+    * and leaves no dir, so the next call rebuilds from scratch): slice i
     * becomes ONE parquet file stamped i minutes past a fixed epoch
     * ([[graft.Tables.writeFeedFile]]), so the file source replays the
     * slices in slice order whatever the filesystem's clock did. */
   def feed(prefix: String, dir: String)(slices: => Seq[DataFrame]): String =
-    feeds.computeIfAbsent((prefix, dir), { _ =>
-      val out = Tables.scratchDir(prefix)
+    graft.sources.Substrate.dir(prefix, dir) { out =>
       slices.zipWithIndex.foreach { case (df, i) =>
-        Tables.writeFeedFile(df, out, f"slice$i%03d.parquet", i)
+        Tables.writeFeedFile(df, new java.io.File(out),
+          f"slice$i%03d.parquet", i)
       }
-      out.getAbsolutePath
-    })
+    }
 
   /** The parquet files under `path` as a file stream, `filesPerTrigger`
     * files per micro-batch (by default all of them in one). File

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.plans.Extensions
+import graft.sources.Substrate
 
 /** ST7 as a DRIVER-VISIBLE graded query: the events table replayed
   * through a REAL Structured Streaming execution (file streaming source
@@ -830,12 +831,9 @@ object StreamReplay extends graft.QueryModule {
   // discipline); `StreamingSpec`'s chop-invariance arm compares the
   // landed multisets against the batch split's.
   // ----------------------------------------------------------------
-  private val dlqRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def dlqStreamRoot(outer: SparkSession, dir: String): String =
-    dlqRoots.computeIfAbsent(dir, { _ =>
+    Substrate.dir("graft_dlqstream_", dir) { root =>
       val ss = replaySession(outer)
-      val root = graft.Tables.scratchDir("graft_dlqstream_").getAbsolutePath
       val feed = graft.operators.Formats.poisonedFeedDir(ss, dir)
       val schema = graft.operators.Formats.OrdersCsvSchema
         .add("_corrupt_record", org.apache.spark.sql.types.StringType)
@@ -864,8 +862,7 @@ object StreamReplay extends graft.QueryModule {
           } finally { parsed.unpersist(blocking = false); () }
           ()
       }, "graft_dlqstream_ckpt_")
-      root
-    })
+    }
 
   /** GRADED: the streamed-ingest landed table's aggregate — batch
     * `orders_json_dlq_agg` oracle verbatim. */

@@ -102,6 +102,69 @@ class GraphOpsSpec extends SparkSpec {
         s"-${(dist.toSet -- got.toSet).take(3)}")
   }
 
+  test("maintained graph build sweeps once: the embeddings × centroids " +
+      "crossJoin runs only in the two assignment writes, and every " +
+      "candidate-set write reads the stored assignments") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.datasources
+      .InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes) ++
+        other.subqueries.flatMap(nodes)
+    })
+    // a fresh path over the same corpus misses the per-path memo, so
+    // this JVM builds the maintained graph once more, under the listener
+    val tmp = java.nio.file.Files.createTempDirectory("graft_spec_graph_")
+    val link = java.nio.file.Files.createSymbolicLink(tmp.resolve("sf"),
+      java.nio.file.Paths.get(sf0001)).toString
+    // (write output path or "", executed plan) per action, in order
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String,
+      SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.analyzed.collectFirst {
+          case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString
+        }.getOrElse("") -> qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val st =
+      try {
+        val st = GraphOps.maintainedEdges(spark, link)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        st
+      } finally {
+        spark.listenerManager.unregister(listener)
+        java.nio.file.Files.delete(java.nio.file.Paths.get(link))
+        java.nio.file.Files.delete(tmp)
+      }
+    import scala.jdk.CollectionConverters._
+    val plans = seen.asScala.toSeq
+    def sweeps(p: SparkPlan): Boolean = nodes(p).exists(n =>
+      n.nodeName.startsWith("BroadcastNestedLoopJoin") ||
+        n.nodeName.startsWith("CartesianProduct"))
+    def readsAssign(p: SparkPlan): Boolean = nodes(p).exists(n =>
+      fileScans(n).exists(_.relation.location.rootPaths
+        .exists(_.toString.contains("graft_knn_assign_"))))
+    val sweepOuts = plans.filter(x => sweeps(x._2)).map(_._1)
+    assert(sweepOuts.map(_.split('/').last).sorted == Seq("base", "new"),
+      s"crossJoin plans write to: $sweepOuts")
+    assert(sweepOuts.forall(_.contains("graft_knn_assign_")), sweepOuts)
+    val candWrites = plans.filter(_._1.stripPrefix("file:") == st.root)
+    assert(candWrites.size == 2,
+      s"${candWrites.size} writes to the edge root ${st.root}")
+    candWrites.foreach { case (out, p) =>
+      assert(readsAssign(p) && !sweeps(p),
+        s"candidate write to $out recomputes the assignment sweep")
+    }
+  }
+
   test("batched walk ≡ the single-query walk for the shared query: " +
       "qid 0's final beam matches beamDir exactly") {
     val batch = spark.read.parquet(GraphOps.beamBatchDir(spark, sf0001))

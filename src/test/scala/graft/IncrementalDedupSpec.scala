@@ -187,8 +187,8 @@ class IncrementalDedupSpec extends SparkSpec {
     val streamed = graft.streaming.StreamReplay
       .incrementalDedupStreamed(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(2))).toSet
-    val input = graft.streaming.Replay.feeds
-      .get(("graft_incdedup_in_", sf0001))
+    val input = graft.sources.Substrate
+      .built[String]("graft_incdedup_in_", sf0001).get
     val nFiles = new java.io.File(input).listFiles
       .count(_.getName.endsWith(".parquet"))
     assert(nFiles >= 2, s"replay input has $nFiles files — single-batch")
@@ -264,8 +264,8 @@ class IncrementalDedupSpec extends SparkSpec {
     val day1New = IncrementalDedup.verdicts(spark, sf0001)
       .filter(IncrementalDedup.batchPred(IncrementalDedup.Batch1Hex) &&
         $"verdict" === "new").count()
-    val deltaN = spark.read.parquet(
-      IncrementalDedup.grownDeltaPathFor(sf0001).get).count()
+    val deltaN = spark.read.parquet(graft.sources.Substrate
+      .built[String]("graft_dedup_idx_delta_", sf0001).get).count()
     assert(deltaN == day1New, s"delta $deltaN != day-1 admits $day1New")
   }
 

@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import graft.sources.Substrate
 import graft.streaming.{Replay, StreamReplay}
 
 /** The bounded-replay kit: how a replay fails, and what its feeds hold. */
@@ -51,9 +52,13 @@ class ReplaySpec extends SparkSpec {
       Replay.feed("graft_replayspec_half_in_", "replay-spec") {
         spark.range(3).toDF("id") #:: second #:: LazyList.empty
       }
+    def halfDirs = new java.io.File(root).getParentFile.listFiles
+      .filter(_.getName.startsWith("graft_replayspec_half_in_")).toSeq
     val half = intercept[IllegalStateException](halfFeed(throw boom))
     assert(half eq boom)
-    assert(!Replay.feeds.containsKey(("graft_replayspec_half_in_", "replay-spec")))
+    assert(Substrate.built[String]("graft_replayspec_half_in_", "replay-spec")
+      .isEmpty)
+    assert(halfDirs.isEmpty, s"the failed feed left its dir behind: $halfDirs")
     val whole = halfFeed(spark.range(3, 5).toDF("id"))
     assert(sliceFiles(whole).length == 2)
     assert(spark.read.parquet(whole).count() == 5)
@@ -110,9 +115,9 @@ class ReplaySpec extends SparkSpec {
     operators.SemDedupMaintained.streamedPairsDir(spark, sf0001)
     operators.MergeInto.streamedMergedDir(spark, sf0001)
     feedSlices.foreach { case (prefix, n) =>
-      val feed = Replay.feeds.get((prefix, sf0001))
-      assert(feed != null, s"$prefix was not built through Replay.feed")
-      val files = sliceFiles(feed)
+      val feed = Substrate.built[String](prefix, sf0001)
+      assert(feed.isDefined, s"$prefix was not built through Replay.feed")
+      val files = sliceFiles(feed.get)
       assert(files.map(_.getName) ==
         (0 until n).map(i => f"slice$i%03d.parquet"), s"$prefix: $files")
       val mtimes = files.map(_.lastModified)
@@ -156,7 +161,7 @@ class ReplaySpec extends SparkSpec {
         .groupBy(_.getInt(df.columns.length))
         .map { case (p, rs) => p -> bag(rs.map(r =>
           Row.fromSeq(r.toSeq.dropRight(1)))) }
-      val files = sliceFiles(Replay.feeds.get((prefix, sf0001)))
+      val files = sliceFiles(Substrate.built[String](prefix, sf0001).get)
       assert(files.length == 3, s"$prefix: $files")
       files.zipWithIndex.foreach { case (f, i) =>
         val got = bag(spark.read.parquet(f.getAbsolutePath)

@@ -494,8 +494,8 @@ class StreamingSpec extends SparkSpec {
     // the sentinel-appended input is materialized ONCE per corpus dir
     // and reused — a second replay must do no corpus rewrite (r3
     // advice item 4: the coalesce(1) write is off the per-call path)
-    val inputPath = graft.streaming.Replay.feeds
-      .get(("graft_session_replay_", sf0001))
+    val inputPath = graft.sources.Substrate
+      .built[String]("graft_session_replay_", sf0001).orNull
     assert(inputPath != null, "session replay input not cached")
     val mtimes = Option(new java.io.File(inputPath).listFiles)
       .getOrElse(Array.empty).map(f => f.getName -> f.lastModified).toMap
@@ -540,7 +540,7 @@ class StreamingSpec extends SparkSpec {
     // the state versions: totals strictly increase, the last equals
     // the batch cell frame exactly (three real maintenance rounds)
     val stateRoot = new java.io.File(
-      graft.streaming.Replay.feeds.get(("graft_anom_in_", sf0001)))
+      graft.sources.Substrate.built[String]("graft_anom_in_", sf0001).get)
       .getParentFile
     val vDirs = stateRoot.listFiles
       .filter(_.getName.startsWith("graft_anom_state_"))
@@ -576,7 +576,7 @@ class StreamingSpec extends SparkSpec {
     // counter strictly grows to the exact corpus term count; every
     // version's candidate set unions monotonically
     val tmp = new java.io.File(
-      graft.streaming.Replay.feeds.get(("graft_hh_in_", sf0001)))
+      graft.sources.Substrate.built[String]("graft_hh_in_", sf0001).get)
       .getParentFile
     val stateBase = tmp.listFiles
       .filter(_.getName.startsWith("graft_hh_state_"))
